@@ -6,8 +6,7 @@ petabytes, the day's delta is gigabytes; COUNT/SUM/MIN/MAX are
 mergeable, so the maintained table IS the partial state and each
 refresh costs one delta scan + one key-cardinality merge. (Non-
 mergeable aggregates — COUNT(DISTINCT), medians — need a keyed
-subtotal layer or a mergeable sketch; see corpus_countmin_sketch for
-the sketch route.)
+subtotal layer or a mergeable sketch.)
 
 Reference counterpart: the reference recomputes summary tables from
 scratch each run (TRUNCATE + INSERT...SELECT); this operator is the

@@ -212,9 +212,9 @@ _CLUSTER_LABELS_CACHE: dict[tuple[str, str], DataFrame] = SessionCache()
 #: session-scoped fused per-document signal frame: repetition metrics,
 #: detected language, and heuristic quality — ALL per-row projections
 #: over ONE scan of documents (repetition_metrics' keep-columns fuse
-#: them; no explode, no shuffle). pipeline_pretrain_corpus and
-#: pipeline_quality_gate both gate on these signals; before this frame
-#: each recomputed the projections per run (the r4 verdict's last
+#: them; no explode, no shuffle). pipeline_pretrain_corpus gates on
+#: these signals; before this frame it recomputed the projections per
+#: run (the r4 verdict's last
 #: composite-steady hotspot). At 100 TB this is the signals table a
 #: curation service materializes once per corpus snapshot.
 _DOC_SIGNALS_CACHE: dict[tuple[str, str], DataFrame] = SessionCache()
@@ -1407,8 +1407,8 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What a user of the engine actually runs end-to-end: dedup ->
     lang filter -> quality gate -> chunk, as one composed dataflow.
     The language/quality gates read the session's fused signal frame
-    (``_doc_signals`` — one scan shared with pipeline_quality_gate)
-    instead of recomputing the projections per run; the signal filters
+    (``_doc_signals``, warmed once per session) instead of
+    recomputing the projections per run; the signal filters
     apply BEFORE the cluster-label join, so only gate-surviving rows
     shuffle."""
     sig = _doc_signals(spark, sf_dir)
@@ -2076,7 +2076,7 @@ def pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # BPE merge training: the tokenizer-build step (iterative-algorithm
-# family next to kmeans_refine and graph_pagerank)
+# family next to kmeans_refine)
 # ---------------------------------------------------------------------------
 
 _BPE_ROUNDS = 2

@@ -225,8 +225,8 @@ def stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the first N batches — the replayable-log contract the CDC query "
     "asserts on the read side, now proven against the sink's own "
     "version history. Retention (vacuum_versions: keep-last-K + "
-    "manifest-protected) is exercised in tests/test_timetravel.py; "
-    "the planner twin is layout_vacuum_plan. At 100 TB this is VERSION "
+    "manifest-protected) is exercised in tests/test_timetravel.py. "
+    "At 100 TB this is VERSION "
     "AS OF on a table format: history is metadata, each read scans one "
     "snapshot's files",
 )

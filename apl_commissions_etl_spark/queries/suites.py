@@ -230,35 +230,6 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
             "dedup_cluster_labels_star",
         ),
     ),
-    "corpus_patterns_suite": (
-        "north-star corpus-prep family: sequence packing, int8 "
-        "quantization, n-gram heavy hitters / novelty, KMV + Bloom + "
-        "count-min sketches, perplexity filter, length buckets, "
-        "per-source dup rates, temperature mixing (rates + applied), "
-        "stratified sampling, URL/domain filter, TF-IDF keywords, "
-        "HyperLogLog distinct",
-        (
-            "corpus_pack_sequences",
-            "corpus_quantize_int8",
-            "corpus_ngram_topk",
-            "corpus_kmv_distinct",
-            "corpus_hll_distinct",
-            "corpus_hll_merge",
-            "corpus_bloom_filter",
-            "corpus_countmin_sketch",
-            "corpus_countmin_estimate",
-            "corpus_perplexity_filter",
-            "corpus_ngram_novelty",
-            "corpus_length_buckets",
-            "corpus_dup_rate_by_source",
-            "corpus_mix_rates",
-            "corpus_mix_weighted",
-            "corpus_mix_temperature",
-            "corpus_sample_stratified",
-            "corpus_url_filter",
-            "text_tfidf_topk",
-        ),
-    ),
     "fix_patterns_suite": (
         "§2 post-transform repair family (sql/fix*, scripts/fix-*): "
         "far-future expiration repair, heaped schedule-rate fix, "
@@ -319,14 +290,13 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
         ),
     ),
     "llmdata_extras_suite": (
-        "north-star operators beyond the seven dedicated LLM-data "
-        "slots: sign-LSH ANN, embedding-cosine near-dup, near-dup "
-        "clusters, chunk overlap, PII scrub, multimodal PNG decode / "
-        "roundtrip / frame sampling, repetition filter, contamination "
-        "check, train/val/test split, PageRank, fused ML inference, "
-        "product quantization, Z-order layout planning, RAG retrieval, "
-        "BPE merge training, batch/partitioned IVF serving and the "
-        "four-method recall@10 report",
+        "north-star operators beyond the dedicated LLM-data slots: "
+        "sign-LSH ANN, embedding-cosine near-dup, near-dup clusters, "
+        "chunk overlap, PII scrub, multimodal PNG decode / roundtrip / "
+        "frame sampling, fused ML inference, product quantization, RAG "
+        "retrieval, BPE merge training, TF-IDF keywords, "
+        "batch/partitioned IVF serving and the four-method recall@10 "
+        "report",
         (
             "text_bpe_train",
             "text_bpe_apply",
@@ -339,7 +309,6 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
             "ann_topk_ivf_partitioned",
             "ann_topk_ivfpq_partitioned",
             "ann_recall_report",
-            "layout_zorder_plan",
             "pipeline_rag_retrieval",
             "ann_topk_lsh",
             "dedup_embedding_cosine",
@@ -351,10 +320,7 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
             "multimodal_frame_sample",
             "multimodal_image_dedup_dhash",
             "multimodal_image_dedup_hamming",
-            "corpus_repetition_filter",
-            "corpus_contamination_ngram",
-            "corpus_split_train_val_test",
-            "graph_pagerank",
+            "text_tfidf_topk",
             "ml_inference_logistic",
             "multimodal_resize_plan",
             "ann_range_search",

@@ -180,11 +180,16 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # driver-covered by ann_topk_ivf + llmdata_extras_suite)
     "text_profile_suite",
     "dedup_patterns_suite",
-    "corpus_patterns_suite",
+    # (the corpus-prep family's two slots are re-pinned with
+    # commissions queries in place, so every slot around them sees
+    # the same session state: the table-maintenance time-travel read
+    # and the A3 conditional aggregation, also an agg_patterns_suite
+    # sub)
+    "sink_time_travel_parity",
     "ann_topk_ivf",
     "llmdata_extras_suite",
     "pipeline_pretrain_corpus",
-    "pipeline_quality_gate",
+    "agg_conditional",
     # §2.12 reporting layer + §2.13 sequence analytics
     "report_views_suite",
     "seq_patterns_suite",
@@ -204,18 +209,14 @@ DRIVER_PRIORITY: tuple[str, ...] = (
 #: Rotation plan if driver slots free up (or the prefix grows): the
 #: next queries to pin are currently driver-"local" only — each
 #: already passes the full local sweep + vanilla rehearsal.
-#:   0. sink_time_travel_parity / layout_vacuum_plan /
-#:      layout_compaction_exec_parity (r11-r12 table-maintenance
-#:                                 surface; swept + scale-smoked;
-#:                                 pipeline_txn_commit_parity and the
-#:                                 r12 CDC emission parities are
-#:                                 already driver-gated as
-#:                                 incremental_stream_parity_suite subs)
-#:   1. graph_pagerank / multimodal_png_roundtrip (beyond-§2 extras,
-#:                                 also fingerprinted in llmdata_extras)
-#:   2. agg_conditional (evicted r5, fingerprinted in
-#:                                 agg_patterns_suite since r6; re-pin
-#:                                 only if a dedicated row is wanted)
+#:   0. export_merge_upsert (S10 keyed MERGE sync; fingerprinted in
+#:                                 export_entities_suite; re-pin only
+#:                                 if a dedicated row is wanted)
+#:   1. multimodal_png_roundtrip (beyond-§2 extra, also fingerprinted
+#:                                 in llmdata_extras)
+#:   2. builder_selection_criteria / builder_mode_key_mappings
+#:                                 (builder outputs beyond the pinned
+#:                                 mode slots; share their caches)
 #:   3. ingest_zip_prefix_summary (evicted r9 — its slot funds
 #:                                 incremental_parity_suite — and
 #:                                 fingerprinted in prep_patterns_suite;
@@ -249,14 +250,11 @@ def all_queries() -> dict[str, Query]:
         builder_modes,
         calcdomain,
         cdcfeed,
-        corpusprep,
         dims,
         events,
         exports,
-        graph,
         ingest,
         joins,
-        layout,
         llmdata,
         policies,
         reporting,

@@ -35,7 +35,7 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back
-    to ``local[*]``) so tests, bench.py and the driver harness share
+    to ``local[*]``) so tests, perfbench and the driver harness share
     one code path.
     """
     if master is None:
@@ -156,8 +156,8 @@ def warm_shared_caches(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         # arithmetic (similarity.select_probe_cells_local); the r12
         # ann_probe warm step memoised it outside the timed region and
         # was removed per the r12 verdict.
-        # fused per-doc signal frame shared by the two corpus pipelines
-        # (this chain is the shortest; the doc scan is cheap)
+        # fused per-doc signal frame of the pretraining pipeline's
+        # gates (this chain is the shortest; the doc scan is cheap)
         step("doc_signals", lambda: llmdata._doc_signals(spark, sf_dir))
         # per-split checkpoint warms on THIS chain's slack: the builder
         # chain's criteria build is fused (no per-split dependency), so

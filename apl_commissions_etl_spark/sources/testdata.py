@@ -53,15 +53,18 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
     try:
-        n = _SPLIT_COUNTS.get(id(df))
+        with _TABLE_FRAMES_LOCK:
+            key = next(
+                (k for k, f in _TABLE_FRAMES.items() if f is df), None
+            )
+            n = _SPLIT_COUNTS.get(key) if key is not None else None
         if n is None:
             # one full physical-planning pass (~0.06 s of driver work);
-            # memoised for the session-cached table handles, whose ids
-            # stay live for the cache's lifetime
+            # memoised only for the session-cached table handles
             n = df.rdd.getNumPartitions()
-            with _TABLE_FRAMES_LOCK:
-                if any(f is df for f in _TABLE_FRAMES.values()):
-                    _SPLIT_COUNTS[id(df)] = n
+            if key is not None:
+                with _TABLE_FRAMES_LOCK:
+                    _SPLIT_COUNTS[key] = n
         if n * 2 >= par:
             return df
     except Exception:
@@ -79,11 +82,12 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
 _TABLE_FRAMES: dict = {}
 _TABLE_FRAMES_LOCK = threading.Lock()
 
-#: id(frame) -> scan split count, for frames held in _TABLE_FRAMES
-#: (their lifetime matches the cache, so ids stay valid).  spread()'s
+#: _TABLE_FRAMES key -> scan split count of that handle.  spread()'s
 #: split probe (df.rdd.getNumPartitions()) costs a full physical
-#: planning pass (~0.06 s) per call otherwise.
-_SPLIT_COUNTS: dict[int, int] = {}
+#: planning pass (~0.06 s) per call otherwise.  Keyed like
+#: _TABLE_FRAMES, not by id(frame): a freed frame's id can be reused
+#: by an unrelated frame, which would then be served a stale count.
+_SPLIT_COUNTS: dict[tuple[str, str, str], int] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

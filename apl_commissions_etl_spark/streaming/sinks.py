@@ -502,13 +502,10 @@ def compact_current_version(
     target_bytes: int,
     before_flip=None,
 ) -> dict:
-    """EXECUTE the small-file compaction plan against a versioned
-    sink's current table (the execution half of
-    ``layout_compaction_plan``, which plans the same policy over a
-    manifest): bin-pack the current version's parquet files into
+    """Compact a versioned sink's current table into fewer files:
+    bin-pack the current version's parquet files into
     next-fit-decreasing groups of ``target_bytes`` (files sorted by
-    size descending, exactly the window-cumsum policy the plan query
-    computes), rewrite each group as ONE file into a fresh version
+    size descending), rewrite each group as ONE file into a fresh version
     directory, and atomically re-publish through the sink state — the
     same flip every sink commit uses, so readers see the old file set
     or the new one, never a mix. The replaced version STAYS in the
@@ -519,7 +516,7 @@ def compact_current_version(
 
     Content is IDENTICAL by construction (every input file is read
     into exactly one group and rewritten); callers assert it anyway
-    via ``cdc.table_fingerprint`` (layout_compaction_exec_parity).
+    via ``cdc.table_fingerprint`` (tests/test_compaction_exec.py).
 
     Returns {"files_before", "files_after", "groups", "version"}.
     ``files_after == groups`` always — one output file per plan group.
@@ -547,8 +544,7 @@ def compact_current_version(
         ),
         key=lambda t: (-t[0], t[1]),
     )
-    # next-fit-decreasing: same grouping layout_compaction_plan's
-    # window cumsum computes (group = floor((cumsum - size)/target))
+    # next-fit-decreasing: group = floor((cumsum - size)/target)
     groups: list[list[str]] = []
     cumsum = 0
     for size, path in files:

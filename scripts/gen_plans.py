@@ -87,16 +87,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "shuffle, Arrow-batched.",
     ),
     (
-        "pipeline_quality_gate",
-        [],
-        ["CartesianProduct", "BatchEvalPython"],
-        "Four quality signals fused: repetition/quality/lang are "
-        "codegen folds over the same scan; perplexity adds one token "
-        "equi-join; the gates join co-partitioned on doc_id. (The "
-        "1-row corpus total rides a BroadcastNestedLoopJoin — "
-        "broadcast-small by construction.)",
-    ),
-    (
         "calc_traceability",
         ["HashAggregate"],
         ["SortAggregate", "SortMergeJoin", "CartesianProduct"],
@@ -309,16 +299,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "100 TB VERSION AS OF costs one snapshot scan, no recompute.",
     ),
     (
-        "layout_vacuum_plan",
-        [],
-        ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
-        "Vacuum planning (r11): one hash aggregation builds the "
-        "version-log manifest, one window rank per table_id orders "
-        "versions by recency, and the keep-last-K + pinned policy is "
-        "a CASE projection — metadata-scale input, a single exchange "
-        "on table_id, no joins at all.",
-    ),
-    (
         "cdc_emit_roundtrip_parity",
         [],
         ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
@@ -331,19 +311,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "keyed window over the log, and fold(log<=N)==table_as_of(N) "
         "is asserted per commit with distributed aggregate "
         "fingerprints — no data-row collect on either side.",
-    ),
-    (
-        "layout_compaction_exec_parity",
-        [],
-        ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
-        "Compaction execution (r12): the returned frame is the "
-        "compacted table read through the flipped pointer (snapshot "
-        "scan by design). The rewrite itself is per-plan-group "
-        "coalesce(1) reads of exactly that group's files — no "
-        "shuffle, no join; the bin-packing runs on the file manifest "
-        "(metadata scale) and the publish is the sink state's O(1) "
-        "flip, with the optimistic-conflict abandon proven in "
-        "tests/test_compaction_exec.py.",
     ),
 ]
 

@@ -58,13 +58,57 @@ cold plan shapes for exactly those flagships.
 """
 
 
-#: scale-tracked here but not in the steady bench HEADLINE: the
-#: incremental-maintenance family recomputes its delta per run by
-#: design (there is no steady-state to measure — each run IS the
-#: maintenance job), and the streamed parity forms run real
-#: checkpointed streams with restarts. Their scale-up rows belong in
-#: this table; their wall time does not belong in a best-of-3 latency
-#: total.
+#: headline set: the heavy operator classes (scan-agg, shuffle join,
+#: window, domain calc, builder, consolidation, export, dedup, ANN,
+#: multimodal, audit) without running every registry entry
+HEADLINE = [
+    "agg_pricing_summary",
+    "agg_group_stats",
+    "agg_entropy_routing",
+    "agg_conditional",
+    "calc_gl_entries",
+    "calc_traceability",
+    "builder_proposals",
+    "builder_overlap_fix",
+    "builder_mode_split_configs",
+    "consolidate_proposals",
+    "export_merge_upsert",
+    "join_date_band",
+    "join_rate_fallback",
+    "win_dedup_keep_latest",
+    "dedup_minhash_lsh",
+    "dedup_cluster_labels",
+    "dedup_incremental_batch",
+    "dedup_simhash_hamming",
+    "text_bpe_train",
+    "pipeline_rag_retrieval",
+    "cdc_apply_changelog",
+    "text_chunk_overlap",
+    "multimodal_codec_roundtrip",
+    "multimodal_image_dedup_dhash",
+    "multimodal_image_dedup_hamming",
+    "pipeline_pretrain_corpus",
+    "ann_topk_bruteforce",
+    "ann_topk_ivf",
+    "ann_topk_ivfpq",
+    "ann_topk_ivfpq_residual",
+    "ann_topk_ivf_batch",
+    "ann_topk_ivf_partitioned",
+    "ann_topk_ivfpq_partitioned",
+    "ann_recall_report",
+    "stream_session_window",
+    "seq_asof_attribution",
+    "win_sessionize",
+    "dim_policies",
+    "audit_referential_integrity",
+    "audit_observed_gl",
+    "audit_join_preflight",
+]
+
+#: scale-tracked beside HEADLINE: the incremental-maintenance family
+#: recomputes its delta per run by design (there is no steady state to
+#: measure — each run IS the maintenance job), and the streamed parity
+#: forms run real checkpointed streams with restarts.
 EXTRA = [
     "builder_incremental_criteria",
     "builder_incremental_proposals",
@@ -86,24 +130,19 @@ EXTRA = [
     "calc_skewed_group_parity",
     "builder_skewed_group_parity",
     # r11: multi-table atomic publish (batch + streamed) + time travel
-    # + vacuum planning
     "pipeline_txn_commit_parity",
     "stream_txn_commit_parity",
     "sink_time_travel_parity",
-    "layout_vacuum_plan",
-    # r12: CDC change-feed emission round trips (batch + streamed) and
-    # compaction execution (all one-shot lifecycle proofs by design)
+    # r12: CDC change-feed emission round trips (batch + streamed; both
+    # one-shot lifecycle proofs by design)
     "cdc_emit_roundtrip_parity",
     "stream_cdc_emit_parity",
-    "layout_compaction_exec_parity",
 ]
 
 
 def main() -> None:
-    from bench import HEADLINE  # the per-round driver bench set
-
     qs = all_queries()
-    names = [n for n in list(HEADLINE) + EXTRA if n in qs]
+    names = [n for n in HEADLINE + EXTRA if n in qs]
 
     times: dict[str, dict[str, float]] = {n: {} for n in names}
     rows: dict[str, dict[str, int]] = {n: {} for n in names}

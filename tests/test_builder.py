@@ -220,3 +220,26 @@ def test_run_builder_entry_point_modes(spark, sf_dir):
     # proposals
     h = out["hierarchies"]
     assert h.groupBy("HierarchyEntityId").count().filter("count > 1").count() == 0
+
+
+def test_mode_split_configs_one_group_per_proposal(spark, sf_dir):
+    """mode_prestage_split_configs groups by (GroupId, ProposalId) where
+    the reference groups by ProposalId alone. The two agree only while
+    each ProposalId belongs to exactly one GroupId (ProposalId embeds
+    GroupId, which must stay dash-free to keep the id unambiguous)."""
+    from apl_commissions_etl_spark.plans import builder_modes as modes
+    from apl_commissions_etl_spark.queries.builder_modes import _cascade
+    from apl_commissions_etl_spark.registry import all_queries
+
+    out = all_queries()["builder_mode_split_configs"].spark_fn(spark, sf_dir)
+    n = out.count()
+    assert n > 0
+    assert out.select("ProposalId").distinct().count() == n
+
+    pairs = (
+        modes.tagged_keys(_cascade(spark, sf_dir))
+        .select("GroupId", modes._pid_col().alias("ProposalId"))
+        .distinct()
+    )
+    assert pairs.groupBy("ProposalId").count().filter("count > 1").count() == 0
+    assert pairs.filter(F.col("GroupId").contains("-")).count() == 0

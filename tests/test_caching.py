@@ -1,6 +1,7 @@
 """caching.locked_get: the per-key locked memoization every session
 cache accessor routes through (warm-up chains run concurrently, so
-double-build races must be structurally impossible)."""
+double-build races must be structurally impossible), plus the table-
+handle split-count memo."""
 
 from __future__ import annotations
 
@@ -8,9 +9,11 @@ import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
 from pyspark.sql import functions as F
 
 from apl_commissions_etl_spark.caching import locked_get
+from apl_commissions_etl_spark.sources import testdata
 
 
 def test_single_build_under_contention():
@@ -238,3 +241,35 @@ def test_reattach_restores_evicted_cache_entries(spark):
         "apl_commissions_etl_spark.caching", fromlist=["_TRACKED"]
     )
     caching_mod._TRACKED.remove(df)  # keep the scratch frame out of later reattaches
+
+
+def test_split_count_served_only_for_the_frame_it_was_measured_on(
+    spark, sf_dir
+):
+    """sources.testdata memoises spread()'s split probe per cached table
+    handle. The memo is keyed like the handle cache, so a count can never
+    be served to a different frame, e.g. one that reuses a freed frame's
+    id()."""
+    par = spark.sparkContext.defaultParallelism
+    t = testdata.load_table(spark, sf_dir, "nation")
+    if t.rdd.getNumPartitions() * 2 >= par:
+        pytest.skip("needs a scan narrower than half the parallelism")
+    key = (spark.sparkContext.applicationId, sf_dir, "nation")
+    assert testdata._TABLE_FRAMES[key] is t
+
+    testdata.spread(t)
+    assert testdata._SPLIT_COUNTS[key] == t.rdd.getNumPartitions()
+
+    other = t.select("*")
+    try:
+        # a planted "already parallel" count is served to its own handle
+        testdata._SPLIT_COUNTS[key] = par
+        assert testdata.spread(t) is t
+        # an entry under another frame's id() (what a reused id left
+        # behind in an id-keyed memo) is never served: the uncached
+        # frame is probed and spread
+        testdata._SPLIT_COUNTS[id(other)] = par
+        assert testdata.spread(other) is not other
+    finally:
+        testdata._SPLIT_COUNTS.pop(id(other), None)
+        testdata._SPLIT_COUNTS.pop(key, None)

@@ -1,9 +1,8 @@
 """Compaction EXECUTION against a versioned sink
-(sinks.compact_current_version — the execution half of
-layout_compaction_plan): one file per plan group, content parity,
-snapshot semantics (replaced version stays time-travelable until
-vacuumed), and the optimistic-rewrite conflict. The registry-level
-proof is layout_compaction_exec_parity."""
+(sinks.compact_current_version): one file per bin-packed group,
+content parity, snapshot semantics (replaced version stays
+time-travelable until vacuumed), and the optimistic-rewrite
+conflict."""
 
 from __future__ import annotations
 

@@ -168,27 +168,3 @@ def test_repetition_metrics_match_python_reference(spark):
     check()
 
 
-def test_finetune_pack_writes_partitioned_shards(spark, tmp_path):
-    """The shard-writer end of pipeline_finetune_pack: write the packed
-    assignment partitioned by source (the layout a training loader
-    consumes, one directory per stream), read back, verify the
-    round-trip is lossless and the partition pruning works."""
-    from apl_commissions_etl_spark.registry import all_queries
-
-    qs = all_queries()
-    packed = qs["pipeline_finetune_pack"].spark_fn(
-        spark, "/root/testdata/sf0.001"
-    )
-    out = str(tmp_path / "shards")
-    packed.write.partitionBy("source").mode("overwrite").parquet(out)
-
-    back = spark.read.parquet(out)
-    want = {(r.doc_id, r.source, r.n_tokens, r.bin_id) for r in packed.collect()}
-    got = {(r.doc_id, r.source, r.n_tokens, r.bin_id) for r in back.collect()}
-    assert got == want
-
-    # partition pruning: a single-source read touches one directory
-    one = back.filter(F.col("source") == "src0")
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(source" in plan or "src0" in plan
-    assert {r.source for r in one.select("source").distinct().collect()} <= {"src0"}

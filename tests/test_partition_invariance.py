@@ -13,22 +13,21 @@ from apl_commissions_etl_spark.registry import all_queries
 
 #: numerically / orderingly sensitive representatives: float aggs,
 #: money rounding, percent banding, windows over ties, hash ids, a
-#: sketch, a self-trained model, and the fused text metrics
+#: self-trained model, the fused text metrics, and the split-config
+#: builder mode, whose (GroupId, ProposalId) grouping must not depend
+#: on how the shuffle splits a group
 SENSITIVE = [
     "agg_pricing_summary",
     "agg_conformance_banding",
     "calc_stage7_commissions",
     "builder_split_hierarchies",
-    "corpus_perplexity_filter",
-    "corpus_countmin_sketch",
     "text_profile_suite",
     "seq_anomaly_zscore",
-    # round-3 additions: register-max sketch, scaled-int PQ distances,
-    # global-ntile layout assignment, windowed RAG context assembly
-    "corpus_hll_distinct",
+    # round-3 additions: scaled-int PQ distances, windowed RAG context
+    # assembly
     "ann_pq_codes",
-    "layout_zorder_plan",
     "pipeline_rag_retrieval",
+    "builder_mode_split_configs",
 ]
 
 
