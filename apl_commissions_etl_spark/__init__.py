@@ -7,7 +7,7 @@ Layout:
     functions/  -- scalar/cleaning/hashing/text expression helpers
     sources/    -- readers (csv header-sniff, testdata parquet) and sinks
     operators/  -- reusable relational operators (band joins, argmax,
-                   dedup families, similarity search, window patterns)
+                   dedup families, vector math, window patterns)
     plans/      -- the domain pipeline: prep -> dims -> calc -> outputs
     streaming/  -- Structured Streaming surface over the events table
 """

@@ -1,18 +1,17 @@
 """Session-scoped memoization with per-key locking.
 
 The query modules keep module-level caches of expensive shared frames
-(calc staging cascade, builder criteria, LSH pair index, ANN
-constants...). ``session.warm_shared_caches`` populates them from
-CONCURRENT chains, and user code may race a warm-up thread into the
-same accessor. A bare ``if key not in cache: cache[key] = build()``
-is check-then-act: two threads can both miss and double-build — at
+(calc staging cascade, builder criteria, LSH pair index...), and
+any two threads of one session may reach the same accessor at once.
+A bare ``if key not in cache: cache[key] = build()`` is
+check-then-act: two threads can both miss and double-build — at
 best wasted cluster work, at worst a leaked eager localCheckpoint
 that nothing ever references.
 
 ``locked_get`` makes the invariant structural instead of
 conventional: per-(cache, key) locks serialize builders for the SAME
 entry while leaving distinct entries (and distinct caches) fully
-concurrent, so the warm-up chains keep their parallelism.
+concurrent, so unrelated builds keep their parallelism.
 """
 
 from __future__ import annotations
@@ -160,7 +159,7 @@ def session_ckpt(df):
 #: session_cache builds still overlap. NOTE: the flip is session-wide
 #: for its duration — unrelated queries PLANNED inside the window lose
 #: AQE's runtime re-optimization; the window is kept to the checkpoint
-#: construction only, and warm-up chains that plan concurrently accept
+#: construction only, and callers that plan concurrently accept
 #: it (their frames are checkpoint leaves whose consumers re-plan with
 #: AQE on).
 _AQE_FLIP: dict[int, list] = {}
@@ -169,8 +168,8 @@ _AQE_KEY = "spark.sql.adaptive.enabled"
 
 class _aqe_off:
     """Scoped, reentrant 'AQE off' for checkpoint builds.  A plain
-    save/set/restore races when two warm-up chains overlap (the second
-    chain would save the first's 'false' and restore it, leaving AQE
+    save/set/restore races when two checkpoint builds overlap (the
+    second would save the first's 'false' and restore it, leaving AQE
     off session-wide); depth-counting restores the ORIGINAL value only
     when the last overlapping build finishes.  Degrades to a no-op when
     the session conf is unavailable (connect mode): the checkpoint then

@@ -22,10 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: Field separator for composite natural keys. Chosen to never appear
-#: in the reference's id domains (numeric ids, P-prefixed broker ids).
-SEP = "\x1f"
-
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -64,9 +60,3 @@ def deterministic_id(prefix: str, *key_cols: Column | str) -> Column:
     shuffle."""
     cols = [F.lit(prefix)] + [_c(c).cast("string") for c in key_cols]
     return F.concat_ws("-", *cols)
-
-
-def hash_id(*key_cols: Column | str) -> Column:
-    """64-hex sha2 id of the SEP-joined natural key. Use when the
-    composite would be long or contains user data."""
-    return F.sha2(F.concat_ws(SEP, *[_c(c).cast("string") for c in key_cols]), 256)

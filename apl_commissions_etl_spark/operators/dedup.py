@@ -711,7 +711,7 @@ def embedding_cosine_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine >= threshold.
     Brute-force all-pairs -- correctness baseline; the LSH-bucketed
-    variant in similarity.py is the scale path."""
+    variant ``embedding_lsh_pairs`` above is the scale path."""
     from .similarity import cosine
 
     a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))

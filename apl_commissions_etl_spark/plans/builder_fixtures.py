@@ -54,11 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..caching import SessionCache, locked_get, session_cache
-from ..sources.testdata import (
-    load_table,
-    register_base_tables,
-    registered_once,
-)
+from ..sources.testdata import register_base_tables, registered_once
 
 BUILDER_VIEWS: list[tuple[str, str]] = [
     (

@@ -81,17 +81,6 @@ def finest_configs(criteria: DataFrame) -> DataFrame:
     return _with_year(per_key.join(F.broadcast(multi), "GroupId"))
 
 
-def nonconformant_keys(finest: DataFrame) -> DataFrame:
-    """Keys with 2+ distinct configs even at full granularity — no
-    single proposal can represent them (ref 06b:23-33)."""
-    return (
-        finest.groupBy(*_NC_KEY)
-        .agg(F.countDistinct("ConfigHash").alias("DistinctConfigs"))
-        .filter(F.col("DistinctConfigs") > 1)
-        .drop("DistinctConfigs")
-    )
-
-
 def _key_stats(finest: DataFrame) -> DataFrame:
     """Per (Group, Year, Product, Plan): config count + representative
     config (MAX, ref 06c:42 MAX(ConfigJson)) + cert count + date span.

@@ -245,16 +245,12 @@ def stage8_assignments_applied(
     )
 
 
-def gl_entries(s8: DataFrame) -> DataFrame:
-    """Original (retained, original broker) ∪ Assigned (assigned
-    amount, recipient broker) with deterministic GL ids
-    (ref run-calculation.sql:391-456; NEWID() replaced by composite
-    natural key -- SURVEY §7.1).
-
-    Single-pass: a UNION of two selects over s8 would execute the
-    whole 10-join cascade twice (the branches differ, so no exchange
-    reuse); instead each s8 row emits a 1-2 element entry array that
-    explodes in the same stage."""
+def _gl_entry_array() -> F.Column:
+    """The 1-2 GL entries of one s8 row, as an array to explode: the
+    Original entry (retained amount, original broker) and, when an
+    assignment routes a nonzero amount to a recipient, the Assigned
+    entry. GL ids are the composite natural key
+    'GL-{premium}-{participant}-{O|A}'."""
     gl_id = lambda tag: F.concat_ws(  # noqa: E731
         "-", F.lit("GL"), "PremiumTransactionId", "HierarchyParticipantId",
         F.lit(tag),
@@ -273,10 +269,23 @@ def gl_entries(s8: DataFrame) -> DataFrame:
             entry("A", F.col("RecipientBrokerId"), F.col("AssignedCommission")),
         ),
     )
+    return F.filter(entries, lambda e: e.isNotNull())
+
+
+def gl_entries(s8: DataFrame) -> DataFrame:
+    """Original (retained, original broker) ∪ Assigned (assigned
+    amount, recipient broker) with deterministic GL ids
+    (ref run-calculation.sql:391-456; NEWID() replaced by composite
+    natural key -- SURVEY §7.1).
+
+    Single-pass: a UNION of two selects over s8 would execute the
+    whole 10-join cascade twice (the branches differ, so no exchange
+    reuse); instead each s8 row emits a 1-2 element entry array that
+    explodes in the same stage."""
     return (
         s8.select(
             "PremiumTransactionId",
-            F.explode(F.filter(entries, lambda e: e.isNotNull())).alias("e"),
+            F.explode(_gl_entry_array()).alias("e"),
         )
         .select(
             F.col("e.GlEntryId").alias("GlEntryId"),
@@ -301,29 +310,11 @@ def broker_trace(s8: DataFrame) -> DataFrame:
     GL table; here both GL and this trace derive from one s8 pass.
     BrokerName is synthesized ('Broker-{id}') because the relational
     fixtures carry broker ids only — documented deviation."""
-    gl_id = lambda tag: F.concat_ws(  # noqa: E731
-        "-", F.lit("GL"), "PremiumTransactionId", "HierarchyParticipantId",
-        F.lit(tag),
-    )
-    entry = lambda tag, broker, amount: F.struct(  # noqa: E731
-        gl_id(tag).alias("GlEntryId"),
-        F.lit("Original" if tag == "O" else "Assigned").alias("EntryType"),
-        broker.alias("BrokerId"),
-        amount.cast("double").alias("Amount"),
-    )
-    entries = F.array(
-        entry("O", F.col("EntityId"), F.col("RetainedCommission")),
-        F.when(
-            F.col("RecipientBrokerId").isNotNull()
-            & (F.col("AssignedCommission") != 0),
-            entry("A", F.col("RecipientBrokerId"), F.col("AssignedCommission")),
-        ),
-    )
     e = s8.select(
         "PremiumTransactionId", "Sequence", "SplitPercent", "TierLevel",
         "AppliedRate", "RateSource", "HierarchyId", "HierarchyVersionId",
         "EntityId",
-        F.explode(F.filter(entries, lambda x: x.isNotNull())).alias("e"),
+        F.explode(_gl_entry_array()).alias("e"),
     )
     assigned = F.col("e.EntryType") == "Assigned"
     return e.select(

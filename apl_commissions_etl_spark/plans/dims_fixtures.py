@@ -25,11 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..sources.testdata import (
-    load_table,
-    register_base_tables,
-    registered_once,
-)
+from ..sources.testdata import register_base_tables, registered_once
 
 DIM_VIEWS: list[tuple[str, str]] = [
     (

@@ -31,11 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..sources.testdata import (
-    load_table,
-    register_base_tables,
-    registered_once,
-)
+from ..sources.testdata import register_base_tables, registered_once
 
 #: (view_name, ANSI SQL) in dependency order. Runs unchanged on Spark
 #: and DuckDB (oracle side wraps them as CTEs).
@@ -214,7 +210,7 @@ def fixtures_cte_sql() -> str:
 
 def register_fixture_views(spark: SparkSession, sf_dir: str) -> None:
     """Materialize the same fixtures as Spark temp views (base tables
-    registered first). Safe to call from concurrent warm-up chains:
+    registered first). Safe to call from concurrent threads:
     ``registered_once`` blocks racers until the views exist."""
     register_base_tables(spark, sf_dir, ("lineitem", "orders", "customer"))
 

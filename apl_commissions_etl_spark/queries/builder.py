@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caching import SessionCache, locked_get, session_cache, session_ckpt
+from ..caching import SessionCache, locked_get, session_cache
 from ..operators.consolidate import consolidate_proposals
 from ..plans import builder
 from ..plans.builder_fixtures import (
@@ -126,8 +126,8 @@ def _certs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The expansion VIEW itself, for one-shot warm-path builds that
     fuse the expansion into their own aggregation job.  ``_per_split``
     deliberately reads this instead of the ``cert_info`` checkpoint:
-    the checkpoint sits on the warm-up's critical path (views → cert →
-    per-split → criteria → mode cascade), and fusing the expansion
+    the checkpoint would sit on the builder's critical path (views →
+    cert → per-split → criteria → mode cascade), and fusing the expansion
     into the per-split aggregation is faster end-to-end than
     materializing it first and aggregating the materialized rows.
     Steady-path queries keep reading the checkpoint via ``_certs``."""
@@ -164,9 +164,8 @@ def _criteria(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reuse the per-split checkpoint when some earlier query
         # already built it; otherwise FUSE expansion + both
         # aggregations into one job rather than forcing the per-split
-        # materialization first — the fused build is what the warm-up's
-        # critical path runs (per-split warms concurrently on the
-        # slack chain), and both forms produce identical values
+        # materialization first — the fused build is what a cold
+        # builder run takes, and both forms produce identical values
         ps = _PER_SPLIT_CACHE.get(key)
         # session_cache keyed on GroupId (r12): build_proposals groups
         # by (GroupId, ConfigHash[, CertificateId]) and the overlap /

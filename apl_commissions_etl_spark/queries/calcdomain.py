@@ -15,7 +15,6 @@ from ..caching import (
     SessionCache,
     locked_get,
     session_cache,
-    session_ckpt,
     track_persisted,
 )
 from ..plans import calc

@@ -1,5 +1,5 @@
 """LLM-training-data pipeline operators over documents/embeddings:
-dedup families, similarity search, text analysis, multimodal plumbing.
+dedup families, text analysis, multimodal plumbing.
 
 Every hash is md5/sha256 of deterministic strings, so even MinHash
 and SimHash are reproduced exactly by the DuckDB oracles.
@@ -746,165 +746,6 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped ANN constants: the query vector and the seeded /
-#: k-means-trained centroid lists are deterministic per (session, sf),
-#: but re-collecting them costs 2-3 tiny driver jobs PER RUN — pure
-#: fixed overhead in a serving loop (the r01 verdict's "driver-side
-#: serial work" smell). Collected once, reused by all four ann_*
-#: queries.
-_ANN_CONST_CACHE: dict[tuple[str, str], tuple] = SessionCache()
-_KMEANS_CENT_CACHE: dict[tuple[str, str], list] = SessionCache()
-
-
-
-#: session-scoped seed-centroid RELATION (16 rows): createDataFrame
-#: costs ~0.3-0.5s of driver time per call (r12 profile), and the
-#: relation is constant per (session, sf)
-_CENT_DF_CACHE: dict[tuple[str, str], DataFrame] = SessionCache()
-
-
-def _cent_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> DataFrame:
-        _, cents = _ann_constants(spark, sf_dir)
-        return spark.createDataFrame(
-            [(cid, cv) for cid, cv in cents], "cid long, cvec array<double>"
-        )
-
-    return locked_get(_CENT_DF_CACHE, key, build)
-
-
-def _qcol(qvec) -> "F.Column":
-    """The query vector as ONE parsed SQL array literal.  ``F.lit`` on
-    a 64-element Python list issues one py4j call per element (~0.13s
-    per use, profiled r12 — the bulk of each ann_* query's DataFrame
-    build); a single ``F.expr`` over ``similarity._vec_sql`` parses
-    the same exact-repr double literals in one round trip."""
-    return F.expr(similarity._vec_sql([float(x) for x in qvec]))
-
-def _ann_constants(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build():
-        emb = load_table(spark, sf_dir, "embeddings")
-        qvec = (
-            emb.filter(F.col("vec_id") == 0)
-            .select("embedding")
-            .limit(1)
-            .collect()[0][0]
-        )
-        seeds = similarity.ivf_centroids(emb, n_centroids=16)
-        return (list(qvec), seeds)
-
-    return locked_get(_ANN_CONST_CACHE, key, build)
-
-
-def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build():
-        emb = load_table(spark, sf_dir, "embeddings")
-        _, seeds = _ann_constants(spark, sf_dir)
-        return similarity.kmeans_refine(emb, seeds, iters=2)
-
-    return locked_get(_KMEANS_CENT_CACHE, key, build)
-
-
-#: session-scoped IVF inverted index: the cell assignment is built
-#: ONCE at index time (like every real IVF implementation) and every
-#: query pays only probe selection + the pruned scan. At 100 TB this
-#: is a table partitioned by cell, written by an indexing job.
-_IVF_INDEX_CACHE: dict[tuple[str, str], DataFrame] = SessionCache()
-
-
-def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _, seeds = _ann_constants(spark, sf_dir)
-        return session_ckpt(similarity.ivf_assign(emb, seeds))
-
-    return locked_get(_IVF_INDEX_CACHE, key, build)
-
-
-def _probe_cells(
-    spark: SparkSession, sf_dir: str, family: str = "seed", nprobe: int = 4
-) -> tuple[list[int], float]:
-    """Per-serving-call probe selection, computed INSIDE every call
-    (r13): ranking nprobe of 16 driver-held centroids against the query
-    vector is ~1K flops of pure driver arithmetic
-    (``similarity.select_probe_cells_local``), bit-identical to the
-    engine-job form — so the r12 session cache (which memoised this
-    per-query work outside the timed region, flagged by the r12
-    verdict) is simply deleted rather than keyed differently. Only the
-    index-time constants (_ann_constants / _kmeans_centroids) stay
-    session-scoped."""
-    qvec, seeds = _ann_constants(spark, sf_dir)
-    cents = (
-        seeds if family == "seed" else _kmeans_centroids(spark, sf_dir)
-    )
-    return similarity.select_probe_cells_local(qvec, cents, nprobe)
-
-
-@query(
-    "ann_topk_bruteforce",
-    oracle="""
-    WITH q AS (SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id,
-           CAST(list_dot_product(embedding::DOUBLE[], (SELECT qe FROM q))
-                / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                   * sqrt(list_dot_product((SELECT qe FROM q), (SELECT qe FROM q))))
-             AS DOUBLE) AS cosine
-    FROM embeddings
-    ORDER BY cosine DESC, vec_id
-    LIMIT 10
-    """,
-    survey_ref="north-star: ANN brute-force cosine top-k baseline",
-)
-def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec, _ = _ann_constants(spark, sf_dir)
-    qcol = _qcol(qvec)
-    return similarity.cosine_topk_bruteforce(emb, qcol, k=10)
-
-
-_SIGN_BUCKET_SQL = "concat(" + ", ".join(
-    f"CASE WHEN {{v}}[{i + 1}] >= 0 THEN '1' ELSE '0' END" for i in range(8)
-) + ")"
-
-
-@query(
-    "ann_topk_lsh",
-    # the approximation is DETERMINISTIC (axis-aligned sign planes), so
-    # the bucketed result is fully hash-checkable — recall vs brute
-    # force is additionally tested in tests/test_llmdata.py
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT v AS qe, {_SIGN_BUCKET_SQL.format(v='v')} AS qb
-          FROM e WHERE vec_id = 0)
-    SELECT e.vec_id,
-           CAST(list_dot_product(e.v, q.qe)
-                / (sqrt(list_dot_product(e.v, e.v))
-                   * sqrt(list_dot_product(q.qe, q.qe)))
-             AS DOUBLE) AS cosine
-    FROM e, q
-    WHERE {_SIGN_BUCKET_SQL.format(v='e.v')} = q.qb
-    ORDER BY cosine DESC, e.vec_id
-    LIMIT 10
-    """,
-    survey_ref="north-star: ANN sign-LSH bucketed scale path — the "
-    "bucket key is a partition-prunable column; deterministic planes "
-    "make even the approximate result value-hash-checkable",
-)
-def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec, _ = _ann_constants(spark, sf_dir)
-    qcol = _qcol(qvec)
-    return similarity.cosine_topk_lsh(emb, qcol, k=10, planes=8)
-
-
 #: DuckDB rendering of multimodal._png_geometry (width 16..63 from the
 #: STORED byte length = payload + 4-byte length prefix, height =
 #: whatever fits at 3 bytes/px) — the oracle recomputes the container
@@ -1221,132 +1062,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "ann_topk_ivf",
-    oracle="""
-    WITH cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-                  FROM embeddings ORDER BY vec_id LIMIT 16),
-    qn AS (SELECT embedding::DOUBLE[] AS qe,
-                  sqrt(list_dot_product(embedding::DOUBLE[],
-                                        embedding::DOUBLE[])) AS qnorm
-           FROM embeddings WHERE vec_id = 0),
-    scored AS (
-      SELECT e.vec_id, e.embedding::DOUBLE[] AS ev, c.cid,
-             list_dot_product(e.embedding::DOUBLE[], c.cvec)
-               / (sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                        e.embedding::DOUBLE[]))
-                  * sqrt(list_dot_product(c.cvec, c.cvec))) AS sim
-      FROM embeddings e CROSS JOIN cent c
-    ),
-    assigned AS (
-      SELECT vec_id, ev, cid FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY sim DESC, cid) AS rn
-        FROM scored) WHERE rn = 1
-    ),
-    probe AS (
-      SELECT c.cid FROM cent c, qn
-      ORDER BY list_dot_product(c.cvec, qn.qe)
-                 / (sqrt(list_dot_product(c.cvec, c.cvec)) * qn.qnorm) DESC,
-               c.cid
-      LIMIT 4
-    )
-    SELECT a.vec_id,
-           CAST(list_dot_product(a.ev, qn.qe)
-                / (sqrt(list_dot_product(a.ev, a.ev)) * qn.qnorm)
-             AS DOUBLE) AS cosine
-    FROM assigned a, qn
-    WHERE a.cid IN (SELECT cid FROM probe)
-    ORDER BY cosine DESC, a.vec_id
-    LIMIT 10
-    """,
-    survey_ref="north-star: IVF-flat ANN scale path — seeded centroids, "
-    "map-side array_max cell assignment (no shuffle/window), "
-    "nprobe-cell pruning before vector math",
-)
-def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec, cents = _ann_constants(spark, sf_dir)
-    qcol = _qcol(qvec)
-    return similarity.cosine_topk_ivf(
-        emb, qcol, cents, k=10, nprobe=4,
-        index=_ivf_index(spark, sf_dir),
-        probe=_probe_cells(spark, sf_dir),
-    )
-
-
-def _km_iter_sql(prev_cent: str, a: str, m: str, c: str) -> str:
-    """One Lloyd iteration as DuckDB CTEs: argmax-cosine assignment
-    (ROW_NUMBER tie-broken by cid, matching the engine's array_max over
-    (sim, -cid)) then 1e-9-quantized integer means per (cell, dim)."""
-    return f"""
-    {a} AS (
-      SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                 list_dot_product(e.v, c.c)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(c.c, c.c))) DESC, c.cid) AS rn
-        FROM e CROSS JOIN {prev_cent} c) WHERE rn = 1),
-    {m} AS (
-      SELECT cid, pos,
-             CAST(SUM(CAST(round(val * 1000000000.0) AS BIGINT)) AS DOUBLE)
-               / 1000000000.0 / CAST(COUNT(*) AS DOUBLE) AS mval
-      FROM (SELECT cid, unnest(v) AS val, generate_subscripts(v, 1) AS pos
-            FROM {a})
-      GROUP BY cid, pos),
-    {c} AS (SELECT cid, list(mval ORDER BY pos) AS c FROM {m} GROUP BY cid)"""
-
-
-@query(
-    "ann_topk_ivf_kmeans",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    cent0 AS (SELECT vec_id AS cid, v AS c FROM e ORDER BY vec_id LIMIT 16),
-    {_km_iter_sql('cent0', 'a1', 'm1', 'cent1')},
-    {_km_iter_sql('cent1', 'a2', 'm2', 'cent2')},
-    af AS (
-      SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                 list_dot_product(e.v, c.c)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(c.c, c.c))) DESC, c.cid) AS rn
-        FROM e CROSS JOIN cent2 c) WHERE rn = 1),
-    qn AS (SELECT v AS qe, sqrt(list_dot_product(v, v)) AS qnorm
-           FROM e WHERE vec_id = 0),
-    probe AS (
-      SELECT c.cid FROM cent2 c, qn
-      ORDER BY list_dot_product(c.c, qn.qe)
-                 / (sqrt(list_dot_product(c.c, c.c)) * qn.qnorm) DESC, c.cid
-      LIMIT 4)
-    SELECT af.vec_id,
-           CAST(list_dot_product(af.v, qn.qe)
-                / (sqrt(list_dot_product(af.v, af.v)) * qn.qnorm)
-             AS DOUBLE) AS cosine
-    FROM af, qn
-    WHERE af.cid IN (SELECT cid FROM probe)
-    ORDER BY cosine DESC, af.vec_id
-    LIMIT 10
-    """,
-    survey_ref="north-star: IVF with k-means-TRAINED centroids — two "
-    "deterministic Lloyd iterations (map-side argmax assignment, "
-    "1e-9-quantized integer means so the update is partition-order- "
-    "and engine-independent), then nprobe cell-pruned top-k; the "
-    "training loop is the iterative-algorithm pattern the reference "
-    "lacks entirely",
-)
-def ann_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec, _ = _ann_constants(spark, sf_dir)
-    qcol = _qcol(qvec)
-    trained = _kmeans_centroids(spark, sf_dir)
-    return similarity.cosine_topk_ivf(
-        emb, qcol, trained, k=10, nprobe=4,
-        probe=_probe_cells(spark, sf_dir, family="kmeans"),
-    )
-
-
-@query(
     "pipeline_pretrain_corpus",
     oracle=f"""
     WITH RECURSIVE {_LSH_PAIRS_SQL},
@@ -1421,49 +1136,6 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     return ta.chunk_tokens(kept, "doc_id", "text", size=64, stride=48)
-
-
-_SIGN4_SQL = "concat(" + ", ".join(
-    f"CASE WHEN {{v}}[{i + 1}] >= 0 THEN '1' ELSE '0' END" for i in range(4)
-) + ")"
-
-#: range-search hot-bucket cap (same guard class as MAX_BAND_BUCKET)
-MAX_RANGE_BUCKET = 10_000
-
-
-@query(
-    "ann_range_search",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    b AS (SELECT vec_id, v, {_SIGN4_SQL.format(v='v')} AS bucket FROM e),
-    hot AS (SELECT bucket FROM b GROUP BY bucket
-            HAVING COUNT(*) > {MAX_RANGE_BUCKET}),
-    capped AS (SELECT * FROM b
-               WHERE bucket NOT IN (SELECT bucket FROM hot))
-    SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-           CAST(list_dot_product(a.v, c.v)
-                / (sqrt(list_dot_product(a.v, a.v))
-                   * sqrt(list_dot_product(c.v, c.v)))
-             AS DOUBLE) AS cosine
-    FROM capped a JOIN capped c
-      ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-    WHERE CAST(list_dot_product(a.v, c.v)
-                / (sqrt(list_dot_product(a.v, a.v))
-                   * sqrt(list_dot_product(c.v, c.v)))
-             AS DOUBLE) >= 0.3
-    """,
-    survey_ref="north-star: similarity RANGE search (all pairs with "
-    "cosine >= t) — the top-k path's sign-LSH bucket reused as an "
-    "equi-join key, so the candidate space is sum over buckets of "
-    "b^2, never n^2; hot-bucket cap bounds the worst task",
-)
-def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed cosine range search: deterministic sign-LSH planes
-    make the approximate pair set itself value-hash-checkable."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_range_pairs(
-        emb, threshold=0.3, planes=4, max_bucket=MAX_RANGE_BUCKET
-    )
 
 
 @query(
@@ -1670,65 +1342,6 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "ann_topk_batch",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv, {_SIGN4_SQL.format(v='v')} AS qb
-          FROM e WHERE vec_id < 5),
-    b AS (SELECT vec_id, v, {_SIGN4_SQL.format(v='v')} AS bk FROM e),
-    cand AS (
-      SELECT q.qid, b.vec_id,
-             list_dot_product(b.v, q.qv)
-               / (sqrt(list_dot_product(b.v, b.v))
-                  * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-      FROM q JOIN b ON b.bk = q.qb AND b.vec_id <> q.qid),
-    r AS (
-      SELECT qid, vec_id, cos,
-             ROW_NUMBER() OVER (PARTITION BY qid
-               ORDER BY cos DESC, vec_id) AS rn
-      FROM cand)
-    SELECT qid, CAST(rn AS INT) AS rank_n, vec_id,
-           CAST(cos AS DOUBLE) AS cosine
-    FROM r WHERE rn <= 5
-    """,
-    survey_ref="north-star: BATCH ANN serving — top-5 neighbors for a "
-    "whole batch of query vectors in ONE bucket equi-join + one "
-    "per-query window (no per-query driver loop: the single-query "
-    "ann_topk_* paths issue one job per query, this is the shape a "
-    "retrieval service actually runs). Candidates restricted to the "
-    "query's sign-LSH bucket, self-matches excluded",
-)
-def ann_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    bucket = similarity.sign_lsh_bucket(F.col("embedding"), planes=4)
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qv"),
-        bucket.alias("qb"),
-    )
-    b = emb.select("vec_id", "embedding", bucket.alias("qb"))
-    cand = (
-        b.join(F.broadcast(q), "qb")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            similarity.cosine(F.col("embedding"), F.col("qv")).alias("cos"),
-        )
-    )
-    rn = F.row_number().over(
-        W.partitionBy("qid").orderBy(F.desc("cos"), "vec_id")
-    )
-    return (
-        cand.withColumn("rank_n", rn.cast("int"))
-        .filter(F.col("rank_n") <= 5)
-        .select("qid", "rank_n", "vec_id", F.col("cos").alias("cosine"))
-    )
-
-
-@query(
     "multimodal_codec_roundtrip",
     oracle="""
     WITH b AS (
@@ -1870,216 +1483,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Product quantization: the compression step between raw embeddings and
-# a serving ANN index (IVF-PQ) — 64 dims -> 8 sub-codes of 2 bits here
+# BPE merge training: the tokenizer-build step
 # ---------------------------------------------------------------------------
-
-_PQ_SUBS = 8  # subspaces (8 dims each over the 64-dim fixture vectors)
-_PQ_K = 4  # centroids per subspace codebook
-
-
-def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
-    """codebooks[s][k] = 8-dim centroid: subvector s of seed vector k
-    (the _ann_constants seeds — deterministic, collected once per
-    session). Production PQ k-means-trains each codebook on subvector
-    samples; seeding keeps it reproducible, the assignment plumbing is
-    identical."""
-    _, seeds = _ann_constants(spark, sf_dir)
-    return [
-        [
-            [float(x) for x in seeds[k][1][s * 8 : s * 8 + 8]]
-            for k in range(_PQ_K)
-        ]
-        for s in range(_PQ_SUBS)
-    ]
-
-
-def _pq_spark_dist(sub: int, cent: list[float]) -> str:
-    """Scaled-integer squared L2 distance of subvector ``sub`` to a
-    centroid literal: each term rounds to the 1e-9 grid before an
-    integer fold, so the distance is exact and accumulation-order- and
-    engine-independent (doubles only inside one term, where both
-    engines evaluate the identical expression)."""
-    sv = f"slice(transform(embedding, x -> CAST(x AS DOUBLE)), {sub * 8 + 1}, 8)"
-    cv = similarity._vec_sql(cent)
-    return (
-        f"aggregate(zip_with({sv}, {cv},"
-        " (x, y) -> CAST(round((x - y) * (x - y) * 1e9) AS BIGINT)),"
-        " 0L, (acc, t) -> acc + t)"
-    )
-
-
-_PQ_DUCK_SEED_DIST = """
-      SELECT e.vec_id, s.sub, c.k,
-             CAST(SUM(CAST(round(
-               (CAST(e.embedding[s.sub * 8 + i.i] AS DOUBLE)
-                - CAST(c.embedding[s.sub * 8 + i.i] AS DOUBLE))
-               * (CAST(e.embedding[s.sub * 8 + i.i] AS DOUBLE)
-                  - CAST(c.embedding[s.sub * 8 + i.i] AS DOUBLE))
-               * 1e9) AS BIGINT)) AS BIGINT) AS dist
-      FROM embeddings e
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s
-      CROSS JOIN (SELECT vec_id AS k, embedding FROM embeddings
-                  WHERE vec_id < 4) c
-      CROSS JOIN (SELECT unnest(generate_series(1, 8)) AS i) i
-      GROUP BY e.vec_id, s.sub, c.k
-"""
-
-
-@query(
-    "ann_pq_codes",
-    oracle=f"""
-    WITH d AS ({_PQ_DUCK_SEED_DIST}),
-    best AS (
-      SELECT vec_id, sub,
-             MIN(struct_pack(d := dist, k := k)).k AS code,
-             MIN(struct_pack(d := dist, k := k)).d AS dist
-      FROM d GROUP BY vec_id, sub),
-    rows_out AS (
-      SELECT vec_id,
-             string_agg(CAST(code AS VARCHAR), '' ORDER BY sub) AS pq_code,
-             CAST(SUM(dist) AS BIGINT) AS err_scaled
-      FROM best GROUP BY vec_id)
-    SELECT vec_id, pq_code,
-           CAST(err_scaled AS DOUBLE) / 1e9 AS recon_err
-    FROM rows_out
-    """,
-    survey_ref="north-star: product quantization — 64-dim embeddings "
-    "compressed to 8 sub-codes (2 bits each) against seeded per-"
-    "subspace codebooks, the IVF-PQ index-build step (16x smaller "
-    "vectors for the ANN serving tier). Assignment is entirely "
-    "map-side (codebooks ride the plan as one literal array; at 64K "
-    "codebook scale they'd broadcast as a relation like "
-    "ivf_assign_via_join); squared-L2 terms quantize to the 1e-9 grid "
-    "before an exact integer fold so code AND reconstruction error "
-    "are engine- and partition-order-independent",
-)
-def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = _pq_codebooks(spark, sf_dir)
-    code_exprs = []
-    err_exprs = []
-    for s in range(_PQ_SUBS):
-        entries = ",".join(
-            f"named_struct('d', {_pq_spark_dist(s, books[s][k])}, 'c', {k})"
-            for k in range(_PQ_K)
-        )
-        best = f"array_min(array({entries}))"
-        code_exprs.append(f"CAST({best}.c AS STRING)")
-        err_exprs.append(f"{best}.d")
-    code = F.expr("concat(" + ",".join(code_exprs) + ")")
-    err = F.expr("(" + " + ".join(err_exprs) + ")")
-    return emb.select(
-        "vec_id",
-        code.alias("pq_code"),
-        (err.cast("double") / F.lit(1e9)).alias("recon_err"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# RAG retrieval: the serving-side composition (flagship #4)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "pipeline_rag_retrieval",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv, {_SIGN4_SQL.format(v='v')} AS qb
-          FROM e WHERE vec_id < 3),
-    b AS (SELECT vec_id, v, {_SIGN4_SQL.format(v='v')} AS bk FROM e),
-    cand AS (
-      SELECT q.qid, b.vec_id,
-             list_dot_product(b.v, q.qv)
-               / (sqrt(list_dot_product(b.v, b.v))
-                  * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-      FROM q JOIN b ON b.bk = q.qb AND b.vec_id <> q.qid),
-    r AS (
-      SELECT qid, vec_id, cos,
-             ROW_NUMBER() OVER (PARTITION BY qid
-               ORDER BY cos DESC, vec_id) AS rn
-      FROM cand),
-    hits AS (
-      SELECT r.qid, r.rn, r.vec_id, r.cos, d.text
-      FROM r JOIN documents d ON d.doc_id = r.vec_id
-      WHERE r.rn <= 3)
-    SELECT qid,
-           CAST(COUNT(*) AS INT) AS n_retrieved,
-           CAST(MAX(cos) AS DOUBLE) AS top_cosine,
-           string_agg(
-             '[doc ' || CAST(vec_id AS VARCHAR) || '] '
-               || substr(text, 1, 60),
-             ' | ' ORDER BY rn) AS context
-    FROM hits GROUP BY qid
-    """,
-    survey_ref="north-star FLAGSHIP composition #4: RAG retrieval — "
-    "a query batch answered end-to-end in ONE plan: sign-LSH bucket "
-    "candidate join (no per-query driver loop), per-query top-3 "
-    "window, hit hydration against the documents table (vec_id is "
-    "doc-aligned in the fixture), and ordered context assembly for "
-    "the generator prompt. Every stage is an already-verified "
-    "operator (ann_topk_batch's join + window, the doc equi-join, "
-    "A5's ordered string_agg) composed; at corpus scale the bucket "
-    "key partitions the index side and the doc join is a co-bucketed "
-    "equi-join on doc_id",
-)
-def pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    docs = _docs(spark, sf_dir)
-    bucket = similarity.sign_lsh_bucket(F.col("embedding"), planes=4)
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qv"),
-        bucket.alias("qb"),
-    )
-    b = emb.select("vec_id", "embedding", bucket.alias("qb"))
-    cand = (
-        b.join(F.broadcast(q), "qb")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            similarity.cosine(F.col("embedding"), F.col("qv")).alias("cos"),
-        )
-    )
-    rn = F.row_number().over(W.partitionBy("qid").orderBy(F.desc("cos"), "vec_id"))
-    hits = (
-        cand.withColumn("rn", rn)
-        .filter(F.col("rn") <= 3)
-        .join(docs, F.col("doc_id") == F.col("vec_id"))
-        .select(
-            "qid", "rn", "vec_id", "cos",
-            F.concat(
-                F.lit("[doc "),
-                F.col("vec_id").cast("string"),
-                F.lit("] "),
-                F.substring("text", 1, 60),
-            ).alias("snippet"),
-        )
-    )
-    return hits.groupBy("qid").agg(
-        F.count(F.lit(1)).cast("int").alias("n_retrieved"),
-        F.max("cos").cast("double").alias("top_cosine"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("rn", "snippet"))
-                ),
-                lambda s: s["snippet"],
-            ),
-            " | ",
-        ).alias("context"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# BPE merge training: the tokenizer-build step (iterative-algorithm
-# family next to kmeans_refine)
-# ---------------------------------------------------------------------------
-
-_BPE_ROUNDS = 2
 
 
 def _bpe_syms(col: str):
@@ -2332,1657 +1737,4 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("word")).cast("long").alias("n_tokens_char"),
             F.sum("bt").cast("long").alias("n_tokens_bpe"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# PQ-ADC serving: asymmetric-distance top-k over the compressed codes
-# ---------------------------------------------------------------------------
-
-
-def _pq_lit_dist_sql(q_sub: list[float], cent: list[float]) -> str:
-    """Scaled-int squared L2 between two LITERAL subvectors, folded to
-    ONE bigint literal on the driver (r13).  The r12 form emitted the
-    per-dim CAST/round/multiply tree and let Catalyst constant-fold it
-    — same final literal, but every serving call paid parse+analysis
-    of ~50 nodes per table entry (the ivfpq_residual ADC tables alone
-    were ~200 KB of SQL text, ~0.3 s of per-call analysis, guide §1.2).
-    Folding here is bit-exact: the IEEE double ops are identical in
-    CPython, and Spark's ``round`` on a double is
-    BigDecimal.valueOf(d).setScale(0, HALF_UP) — BigDecimal.valueOf
-    parses Double.toString's shortest repr, which is the same decimal
-    ``repr(float)`` produces, so Decimal(repr(v)).quantize(1, HALF_UP)
-    yields the identical integer (verified engine-vs-Python over all
-    160 table entries at sf0.1; pinned in tests/test_llmdata.py)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    tot = 0
-    for qx, cx in zip(q_sub, cent):
-        d = float(qx) - float(cx)
-        v = d * d * 1e9
-        tot += int(
-            Decimal(repr(v)).quantize(Decimal(1), rounding=ROUND_HALF_UP)
-        )
-    return f"{tot}L"
-
-
-_PQ_ADC_DUCK_TABLE = """
-      SELECT s.sub, c.k,
-             CAST(SUM(CAST(round(
-               (CAST(q.embedding[s.sub * 8 + i.i] AS DOUBLE)
-                - CAST(c.embedding[s.sub * 8 + i.i] AS DOUBLE))
-               * (CAST(q.embedding[s.sub * 8 + i.i] AS DOUBLE)
-                  - CAST(c.embedding[s.sub * 8 + i.i] AS DOUBLE))
-               * 1e9) AS BIGINT)) AS BIGINT) AS entry
-      FROM (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s
-      CROSS JOIN (SELECT vec_id AS k, embedding FROM embeddings
-                  WHERE vec_id < 4) c
-      CROSS JOIN (SELECT unnest(generate_series(1, 8)) AS i) i
-      GROUP BY s.sub, c.k
-"""
-
-_PQ_EXACT_DUCK = """
-      SELECT e.vec_id,
-             CAST(SUM(CAST(round(
-               (CAST(e.embedding[i.i] AS DOUBLE)
-                - CAST(q.embedding[i.i] AS DOUBLE))
-               * (CAST(e.embedding[i.i] AS DOUBLE)
-                  - CAST(q.embedding[i.i] AS DOUBLE))
-               * 1e9) AS BIGINT)) AS BIGINT) AS exact_scaled
-      FROM embeddings e
-      CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-      CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) i
-      GROUP BY e.vec_id
-"""
-
-
-@query(
-    "ann_pq_adc_topk",
-    oracle=f"""
-    WITH d AS ({_PQ_DUCK_SEED_DIST}),
-    best AS (
-      SELECT vec_id, sub,
-             MIN(struct_pack(d := dist, k := k)).k AS code
-      FROM d GROUP BY vec_id, sub),
-    adc_table AS ({_PQ_ADC_DUCK_TABLE}),
-    adc AS (
-      SELECT b.vec_id, CAST(SUM(t.entry) AS BIGINT) AS adc_scaled
-      FROM best b JOIN adc_table t ON t.sub = b.sub AND t.k = b.code
-      GROUP BY b.vec_id),
-    cand AS (
-      SELECT vec_id, adc_scaled FROM adc
-      WHERE vec_id <> 0
-      ORDER BY adc_scaled, vec_id LIMIT 20),
-    exact AS ({_PQ_EXACT_DUCK})
-    SELECT c.vec_id,
-           CAST(c.adc_scaled AS DOUBLE) / 1e9 AS adc_dist,
-           CAST(e.exact_scaled AS DOUBLE) / 1e9 AS exact_dist
-    FROM cand c JOIN exact e USING (vec_id)
-    ORDER BY e.exact_scaled, c.vec_id LIMIT 10
-    """,
-    survey_ref="north-star: PQ asymmetric-distance serving — the "
-    "query's per-subspace distance table to every codebook centroid "
-    "is a CONSTANT-FOLDED literal expression (32 entries, zero "
-    "per-row cost), each stored 8-digit code scores by 8 table "
-    "lookups instead of 64 multiplies (the IVF-PQ read path: compose "
-    "with ann_topk_ivf's cell pruning for the full index), ADC "
-    "top-20 candidates re-ranked by exact distance to the final "
-    "top-10 — all distances on the 1e-9 integer grid so both stages "
-    "are engine- and partition-order-exact",
-)
-def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = _pq_codebooks(spark, sf_dir)
-    qvec, _ = _ann_constants(spark, sf_dir)
-
-    # stored codes (same expressions as ann_pq_codes)
-    code_digits = []
-    for s in range(_PQ_SUBS):
-        entries = ",".join(
-            f"named_struct('d', {_pq_spark_dist(s, books[s][k])}, 'c', {k})"
-            for k in range(_PQ_K)
-        )
-        code_digits.append(f"array_min(array({entries})).c")
-
-    # ADC: per-subspace lookup of the constant distance table by code
-    adc_terms = []
-    for s in range(_PQ_SUBS):
-        q_sub = [float(x) for x in qvec[s * 8 : s * 8 + 8]]
-        table = ",".join(
-            _pq_lit_dist_sql(q_sub, books[s][k]) for k in range(_PQ_K)
-        )
-        adc_terms.append(f"element_at(array({table}), {code_digits[s]} + 1)")
-    adc = F.expr("(" + " + ".join(adc_terms) + ")")
-
-    cand = (
-        emb.filter(F.col("vec_id") != 0)
-        .select("vec_id", "embedding", adc.alias("adc_scaled"))
-        .orderBy("adc_scaled", "vec_id")
-        .limit(20)
-    )
-    exact = F.expr(
-        "aggregate(zip_with(transform(embedding, x -> CAST(x AS DOUBLE)), "
-        + similarity._vec_sql([float(x) for x in qvec])
-        + ", (x, y) -> CAST(round((x - y) * (x - y) * 1e9) AS BIGINT)),"
-        " 0L, (acc, t) -> acc + t)"
-    )
-    return (
-        cand.withColumn("exact_scaled", exact)
-        .orderBy("exact_scaled", "vec_id")
-        .limit(10)
-        .select(
-            "vec_id",
-            (F.col("adc_scaled").cast("double") / 1e9).alias("adc_dist"),
-            (F.col("exact_scaled").cast("double") / 1e9).alias("exact_dist"),
-        )
-    )
-
-
-_IVF_ASSIGN_DUCK = """
-      SELECT vec_id, cid FROM (
-        SELECT e.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                 list_dot_product(e.embedding::DOUBLE[], c.cvec)
-                   / (sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                            e.embedding::DOUBLE[]))
-                      * sqrt(list_dot_product(c.cvec, c.cvec))) DESC,
-                 c.cid) AS rn
-        FROM embeddings e CROSS JOIN cent c) WHERE rn = 1
-"""
-
-
-@query(
-    "ann_topk_ivfpq",
-    oracle=f"""
-    WITH cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-                  FROM embeddings ORDER BY vec_id LIMIT 16),
-    qn AS (SELECT embedding::DOUBLE[] AS qe,
-                  sqrt(list_dot_product(embedding::DOUBLE[],
-                                        embedding::DOUBLE[])) AS qnorm
-           FROM embeddings WHERE vec_id = 0),
-    assigned AS ({_IVF_ASSIGN_DUCK}),
-    probe AS (
-      SELECT c.cid FROM cent c, qn
-      ORDER BY list_dot_product(c.cvec, qn.qe)
-                 / (sqrt(list_dot_product(c.cvec, c.cvec)) * qn.qnorm) DESC,
-               c.cid
-      LIMIT 4),
-    d AS ({_PQ_DUCK_SEED_DIST}),
-    best AS (
-      SELECT vec_id, sub,
-             MIN(struct_pack(d := dist, k := k)).k AS code
-      FROM d GROUP BY vec_id, sub),
-    adc_table AS ({_PQ_ADC_DUCK_TABLE}),
-    adc AS (
-      SELECT b.vec_id, CAST(SUM(t.entry) AS BIGINT) AS adc_scaled
-      FROM best b JOIN adc_table t ON t.sub = b.sub AND t.k = b.code
-      GROUP BY b.vec_id),
-    cand AS (
-      SELECT a.vec_id, CAST(a.cid AS BIGINT) AS cell, adc.adc_scaled
-      FROM assigned a JOIN adc ON adc.vec_id = a.vec_id
-      WHERE a.cid IN (SELECT cid FROM probe) AND a.vec_id <> 0
-      ORDER BY adc.adc_scaled, a.vec_id LIMIT 20),
-    exact AS ({_PQ_EXACT_DUCK})
-    SELECT c.vec_id, c.cell,
-           CAST(c.adc_scaled AS DOUBLE) / 1e9 AS adc_dist,
-           CAST(e.exact_scaled AS DOUBLE) / 1e9 AS exact_dist
-    FROM cand c JOIN exact e USING (vec_id)
-    ORDER BY e.exact_scaled, c.vec_id LIMIT 10
-    """,
-    survey_ref="north-star: the FULL IVF-PQ read path (the r4/r5 "
-    "verdicts' outstanding item) — one plan composes the session "
-    "inverted index (_ivf_index: cells assigned ONCE, reused by every "
-    "query), constant-folded nprobe cell selection (one driver job "
-    "over the 16-row centroid relation), PQ asymmetric-distance "
-    "scoring inside the probed cells only (8 table lookups per "
-    "survivor instead of 64 multiplies; the ADC table is a literal "
-    "folded at codegen), ADC top-20 shortlist, then exact re-rank to "
-    "the final top-10. The cell filter prunes ~3/4 of the scan before "
-    "ANY distance math and the PQ stage never touches the raw vector; "
-    "at 100 TB the index is a cell-partitioned table so a probe reads "
-    "nprobe/n_centroids of the files and ships 8-byte codes, not "
-    "256-byte vectors. All distances quantize to the 1e-9 integer "
-    "grid, so shortlist membership and both orderings are engine- "
-    "and partition-order-exact",
-)
-def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    books = _pq_codebooks(spark, sf_dir)
-    qvec, cents = _ann_constants(spark, sf_dir)
-    qcol = _qcol(qvec)
-
-    # probe selection: session-cached constant (see _probe_cells)
-    probe, _ = _probe_cells(spark, sf_dir)
-
-    # pruned scan: the pre-built inverted index, nprobe cells only
-    cand0 = _ivf_index(spark, sf_dir).filter(
-        F.col("cell").isin(probe) & (F.col("vec_id") != 0)
-    )
-
-    # stored codes + ADC lookup (identical expressions to ann_pq_codes
-    # / ann_pq_adc_topk: codes from the seeded codebooks, the query's
-    # per-subspace distance table constant-folded to 32 literals)
-    code_digits = []
-    for s in range(_PQ_SUBS):
-        entries = ",".join(
-            f"named_struct('d', {_pq_spark_dist(s, books[s][k])}, 'c', {k})"
-            for k in range(_PQ_K)
-        )
-        code_digits.append(f"array_min(array({entries})).c")
-    adc_terms = []
-    for s in range(_PQ_SUBS):
-        q_sub = [float(x) for x in qvec[s * 8 : s * 8 + 8]]
-        table = ",".join(
-            _pq_lit_dist_sql(q_sub, books[s][k]) for k in range(_PQ_K)
-        )
-        adc_terms.append(f"element_at(array({table}), {code_digits[s]} + 1)")
-    adc = F.expr("(" + " + ".join(adc_terms) + ")")
-
-    cand = (
-        cand0.select(
-            "vec_id", F.col("cell"), "embedding", adc.alias("adc_scaled")
-        )
-        .orderBy("adc_scaled", "vec_id")
-        .limit(20)
-    )
-    exact = F.expr(
-        "aggregate(zip_with(transform(embedding, x -> CAST(x AS DOUBLE)), "
-        + similarity._vec_sql([float(x) for x in qvec])
-        + ", (x, y) -> CAST(round((x - y) * (x - y) * 1e9) AS BIGINT)),"
-        " 0L, (acc, t) -> acc + t)"
-    )
-    return (
-        cand.withColumn("exact_scaled", exact)
-        .orderBy("exact_scaled", "vec_id")
-        .limit(10)
-        .select(
-            "vec_id",
-            "cell",
-            (F.col("adc_scaled").cast("double") / 1e9).alias("adc_dist"),
-            (F.col("exact_scaled").cast("double") / 1e9).alias("exact_dist"),
-        )
-    )
-
-
-_PQ_RESID_BOOK_CACHE: dict[tuple[str, str], tuple] = SessionCache()
-
-
-def _pq_residual_books(spark: SparkSession, sf_dir: str):
-    """Residual-space PQ codebooks: ``books[s][k]`` is subvector ``s``
-    of the residual of seed vector ``16+k`` w.r.t. its ASSIGNED coarse
-    cell (seeds 0-15 are the coarse centroids themselves — their
-    residuals are zero, so the residual codebook seeds from the first
-    four non-centroid vectors). The seed assignments run through the
-    engine's own ``ivf_assign`` (a 4-row job) so cell choice matches
-    the index bit-for-bit; the residual subtraction is plain IEEE
-    double math, identical in Python, Spark, and DuckDB. Returns
-    (books, cell_vecs) where cell_vecs maps cid -> centroid list.
-    Session-cached: codebooks are index-time artifacts, a serving call
-    must not re-collect them (same contract as _ann_constants)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> tuple:
-        _, cents = _ann_constants(spark, sf_dir)
-        cell_vecs = {cid: [float(x) for x in cv] for cid, cv in cents}
-        emb = load_table(spark, sf_dir, "embeddings")
-        rows = (
-            similarity.ivf_assign(
-                emb.filter(F.col("vec_id").between(16, 19)), cents
-            )
-            .select("vec_id", "embedding", "cell")
-            .orderBy("vec_id")
-            .collect()
-        )
-        books = []
-        for s in range(_PQ_SUBS):
-            row_books = []
-            for r in rows:  # k = vec_id - 16, in order
-                cv = cell_vecs[r.cell]
-                row_books.append(
-                    [
-                        float(r.embedding[s * 8 + i]) - cv[s * 8 + i]
-                        for i in range(8)
-                    ]
-                )
-            books.append(row_books)
-        return (books, cell_vecs)
-
-    return locked_get(_PQ_RESID_BOOK_CACHE, key, build)
-
-
-_IVFPQ_RESID_BOOK_DUCK = """
-      SELECT e.vec_id - 16 AS k, a.cid AS bcid, c.cvec AS bcvec,
-             e.embedding::DOUBLE[] AS bv
-      FROM embeddings e
-      JOIN assigned a ON a.vec_id = e.vec_id
-      JOIN cent c ON c.cid = a.cid
-      WHERE e.vec_id BETWEEN 16 AND 19
-"""
-
-
-@query(
-    "ann_topk_ivfpq_residual",
-    oracle=f"""
-    WITH cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-                  FROM embeddings ORDER BY vec_id LIMIT 16),
-    qn AS (SELECT embedding::DOUBLE[] AS qe,
-                  sqrt(list_dot_product(embedding::DOUBLE[],
-                                        embedding::DOUBLE[])) AS qnorm
-           FROM embeddings WHERE vec_id = 0),
-    assigned AS ({_IVF_ASSIGN_DUCK}),
-    probe AS (
-      SELECT c.cid FROM cent c, qn
-      ORDER BY list_dot_product(c.cvec, qn.qe)
-                 / (sqrt(list_dot_product(c.cvec, c.cvec)) * qn.qnorm) DESC,
-               c.cid
-      LIMIT 4),
-    book AS ({_IVFPQ_RESID_BOOK_DUCK}),
-    cand0 AS (
-      SELECT e.vec_id, a.cid, c.cvec, e.embedding::DOUBLE[] AS v
-      FROM embeddings e
-      JOIN assigned a ON a.vec_id = e.vec_id
-      JOIN cent c ON c.cid = a.cid
-      WHERE a.cid IN (SELECT cid FROM probe) AND e.vec_id <> 0),
-    d AS (
-      SELECT x.vec_id, s.sub, b.k,
-             CAST(SUM(CAST(round(
-               ((x.v[s.sub * 8 + i.i] - x.cvec[s.sub * 8 + i.i])
-                - (b.bv[s.sub * 8 + i.i] - b.bcvec[s.sub * 8 + i.i]))
-               * ((x.v[s.sub * 8 + i.i] - x.cvec[s.sub * 8 + i.i])
-                  - (b.bv[s.sub * 8 + i.i] - b.bcvec[s.sub * 8 + i.i]))
-               * 1e9) AS BIGINT)) AS BIGINT) AS dist
-      FROM cand0 x
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s
-      CROSS JOIN book b
-      CROSS JOIN (SELECT unnest(generate_series(1, 8)) AS i) i
-      GROUP BY x.vec_id, s.sub, b.k),
-    best AS (
-      SELECT vec_id, sub,
-             MIN(struct_pack(d := dist, k := k)).k AS code
-      FROM d GROUP BY vec_id, sub),
-    adc_table AS (
-      SELECT c.cid, s.sub, b.k,
-             CAST(SUM(CAST(round(
-               ((qn.qe[s.sub * 8 + i.i] - c.cvec[s.sub * 8 + i.i])
-                - (b.bv[s.sub * 8 + i.i] - b.bcvec[s.sub * 8 + i.i]))
-               * ((qn.qe[s.sub * 8 + i.i] - c.cvec[s.sub * 8 + i.i])
-                  - (b.bv[s.sub * 8 + i.i] - b.bcvec[s.sub * 8 + i.i]))
-               * 1e9) AS BIGINT)) AS BIGINT) AS entry
-      FROM cent c, qn
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s
-      CROSS JOIN book b
-      CROSS JOIN (SELECT unnest(generate_series(1, 8)) AS i) i
-      WHERE c.cid IN (SELECT cid FROM probe)
-      GROUP BY c.cid, s.sub, b.k),
-    adc AS (
-      SELECT x.vec_id, x.cid, CAST(SUM(t.entry) AS BIGINT) AS adc_scaled
-      FROM (SELECT vec_id, cid FROM cand0) x
-      JOIN best bst ON bst.vec_id = x.vec_id
-      JOIN adc_table t
-        ON t.cid = x.cid AND t.sub = bst.sub AND t.k = bst.code
-      GROUP BY x.vec_id, x.cid),
-    shortlist AS (
-      SELECT vec_id, CAST(cid AS BIGINT) AS cell, adc_scaled FROM adc
-      ORDER BY adc_scaled, vec_id LIMIT 20),
-    exact AS ({_PQ_EXACT_DUCK})
-    SELECT s.vec_id, s.cell,
-           CAST(s.adc_scaled AS DOUBLE) / 1e9 AS adc_dist,
-           CAST(e.exact_scaled AS DOUBLE) / 1e9 AS exact_dist
-    FROM shortlist s JOIN exact e USING (vec_id)
-    ORDER BY e.exact_scaled, s.vec_id LIMIT 10
-    """,
-    survey_ref="north-star: RESIDUAL IVF-PQ — the production form of "
-    "the IVF-PQ read path: codes quantize each vector's residual to "
-    "its coarse centroid (residual energy is a fraction of the raw "
-    "vector's, so the same 8x4 codebook budget spends its resolution "
-    "where the vectors actually differ), and the query's ADC tables "
-    "are built per PROBED CELL from the cell-relative query residual. "
-    "Everything stays one plan: cell filter on the prebuilt inverted "
-    "index -> per-cell residual (a CASE over the 4 probed centroids, "
-    "constant-folded) -> code argmin against residual-codebook "
-    "literals -> per-cell ADC lookup -> top-20 shortlist -> exact "
-    "re-rank. Codebooks seed from the first four non-centroid "
-    "vectors' residuals, assigned through the engine's own ivf_assign "
-    "so the oracle's SQL derivation matches bit-for-bit; all "
-    "distances quantize to the 1e-9 integer grid",
-)
-def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qvec, cents = _ann_constants(spark, sf_dir)
-    qvec = [float(x) for x in qvec]
-    books, cell_vecs = _pq_residual_books(spark, sf_dir)
-    qcol = _qcol(qvec)
-
-    probe, _ = _probe_cells(spark, sf_dir)
-
-    # per-row residual computed ONCE as a projection column: one CASE
-    # over the 4 probed centroids (full 64-dim literals) instead of
-    # 8 subspaces x 4 codebook entries each inlining their own CASE —
-    # a 4x smaller expression tree, same arithmetic (zip_with subtracts
-    # elementwise either way), measured ~3x faster Catalyst analysis
-    cent_case = " ".join(
-        f"WHEN {c}L THEN {similarity._vec_sql(cell_vecs[c])}"
-        for c in probe
-    )
-    resid = (
-        "zip_with(transform(embedding, x -> CAST(x AS DOUBLE)), "
-        f"(CASE cell {cent_case} END), (x, y) -> x - y)"
-    )
-    cand0 = (
-        _ivf_index(spark, sf_dir)
-        .filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
-        .withColumn("_resid", F.expr(resid))
-    )
-
-    def dist_to_book(s: int, k: int) -> str:
-        b = similarity._vec_sql(books[s][k])
-        return (
-            f"aggregate(zip_with(slice(_resid, {s*8+1}, 8), {b},"
-            " (x, y) -> CAST(round((x - y) * (x - y) * 1e9) AS BIGINT)),"
-            " 0L, (acc, t) -> acc + t)"
-        )
-
-    code_digits = []
-    for s in range(_PQ_SUBS):
-        entries = ",".join(
-            f"named_struct('d', {dist_to_book(s, k)}, 'c', {k})"
-            for k in range(_PQ_K)
-        )
-        code_digits.append(f"array_min(array({entries})).c")
-
-    # per-cell ADC tables: fully constant-folded literals — the query
-    # residual (q - centroid(cell)) against each residual-book entry
-    adc_terms = []
-    for s in range(_PQ_SUBS):
-        whens = []
-        for c in probe:
-            q_res = [
-                qvec[s * 8 + i] - cell_vecs[c][s * 8 + i] for i in range(8)
-            ]
-            table = ",".join(
-                _pq_lit_dist_sql(q_res, books[s][k]) for k in range(_PQ_K)
-            )
-            whens.append(f"WHEN {c}L THEN array({table})")
-        adc_terms.append(
-            f"element_at((CASE cell {' '.join(whens)} END), "
-            f"{code_digits[s]} + 1)"
-        )
-    adc = F.expr("(" + " + ".join(adc_terms) + ")")
-
-    cand = (
-        cand0.select(
-            "vec_id", F.col("cell"), "embedding", adc.alias("adc_scaled")
-        )
-        .orderBy("adc_scaled", "vec_id")
-        .limit(20)
-    )
-    exact = F.expr(
-        "aggregate(zip_with(transform(embedding, x -> CAST(x AS DOUBLE)), "
-        + similarity._vec_sql(qvec)
-        + ", (x, y) -> CAST(round((x - y) * (x - y) * 1e9) AS BIGINT)),"
-        " 0L, (acc, t) -> acc + t)"
-    )
-    return (
-        cand.withColumn("exact_scaled", exact)
-        .orderBy("exact_scaled", "vec_id")
-        .limit(10)
-        .select(
-            "vec_id",
-            "cell",
-            (F.col("adc_scaled").cast("double") / 1e9).alias("adc_dist"),
-            (F.col("exact_scaled").cast("double") / 1e9).alias("exact_dist"),
-        )
-    )
-
-
-#: session-scoped ANN method outputs (10-row id sets per method) — a
-#: production recall harness evaluates the STORED output of each index
-#: build, it does not re-run every serving path per report refresh.
-#: Steady-state, each method's execution cost is billed to its own
-#: registered query and the report's marginal cost is the unions + one
-#: aggregation; if the report runs FIRST in a session it pays to fill
-#: the cache for all five serving paths (cold ~3.8s, steady ~0.13s).
-_ANN_RESULTS_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = SessionCache()
-
-
-def _ann_method_results(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> dict[str, DataFrame]:
-        return {
-            name: session_ckpt(fn(spark, sf_dir).select("vec_id"))
-            for name, fn in (
-                ("exact", ann_topk_bruteforce),
-                ("ivf", ann_topk_ivf),
-                ("ivfpq", ann_topk_ivfpq),
-                ("ivfpq_residual", ann_topk_ivfpq_residual),
-                ("lsh", ann_topk_lsh),
-            )
-        }
-
-    return locked_get(_ANN_RESULTS_CACHE, key, build)
-
-
-def _ann_recall_oracle() -> str:
-    """Composes the recall report's oracle from the ALREADY-REGISTERED
-    method oracles verbatim (each is itself hash-verified against the
-    engine), so the evaluation can never drift from the queries it
-    evaluates. DuckDB supports WITH inside derived tables, so each
-    method's full oracle nests as a subquery."""
-    from ..registry import REGISTRY
-
-    def sub(name: str) -> str:
-        return REGISTRY[name].oracle
-
-    return f"""
-    WITH exact AS (SELECT vec_id FROM ({sub('ann_topk_bruteforce')}) _bf),
-    m AS (
-      SELECT 'ivf' AS method, vec_id FROM ({sub('ann_topk_ivf')}) _1
-      UNION ALL
-      SELECT 'ivfpq', vec_id FROM ({sub('ann_topk_ivfpq')}) _2
-      UNION ALL
-      SELECT 'ivfpq_residual', vec_id
-      FROM ({sub('ann_topk_ivfpq_residual')}) _3
-      UNION ALL
-      SELECT 'lsh', vec_id FROM ({sub('ann_topk_lsh')}) _4)
-    SELECT m.method,
-           CAST(COUNT(*) AS INT) AS n_returned,
-           CAST(SUM(CASE WHEN e.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS INT) AS n_matched,
-           CAST(SUM(CASE WHEN e.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS DOUBLE) / 10 AS recall_at_10
-    FROM m LEFT JOIN exact e ON e.vec_id = m.vec_id
-    GROUP BY m.method
-    """
-
-
-@query(
-    "ann_recall_report",
-    oracle=_ann_recall_oracle(),
-    survey_ref="north-star: ANN serving-quality evaluation — recall@10 "
-    "of every registered ANN method (sign-LSH, IVF-flat, IVF-PQ, "
-    "residual IVF-PQ) against the exact brute-force top-10, in ONE "
-    "plan: the four method results union with a method tag, left-join "
-    "the exact id set, and one hash aggregation emits "
-    "(n_returned, n_matched, recall@10) per method. This is the "
-    "harness a production retrieval deployment runs after every index "
-    "rebuild / nprobe change; at 100 TB the exact arm runs over a "
-    "sampled query set and the same plan shape holds. The oracle "
-    "composes the methods' own hash-verified oracle SQL verbatim, so "
-    "the evaluation cannot drift from what it evaluates",
-)
-def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import functools
-
-    results = _ann_method_results(spark, sf_dir)
-    exact = results["exact"]
-    frames = [
-        results[name].select(F.lit(name).alias("method"), "vec_id")
-        for name in ("ivf", "ivfpq", "ivfpq_residual", "lsh")
-    ]
-    m = functools.reduce(DataFrame.unionByName, frames)
-    e = exact.withColumn("_hit", F.lit(1))
-    return (
-        m.join(e, "vec_id", "left")
-        .groupBy("method")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_returned"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-            .cast("int")
-            .alias("n_matched"),
-        )
-        .withColumn(
-            "recall_at_10",
-            F.col("n_matched").cast("double") / F.lit(10.0),
-        )
-    )
-
-
-@query(
-    "ann_topk_ivf_batch",
-    oracle=f"""
-    WITH cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-                  FROM embeddings ORDER BY vec_id LIMIT 16),
-    assigned AS ({_IVF_ASSIGN_DUCK}),
-    q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv,
-                 sqrt(list_dot_product(embedding::DOUBLE[],
-                                       embedding::DOUBLE[])) AS qnorm
-          FROM embeddings WHERE vec_id < 3),
-    probe AS (
-      SELECT qid, cid, qv, qnorm FROM (
-        SELECT q.qid, c.cid, q.qv, q.qnorm,
-               ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                 list_dot_product(c.cvec, q.qv)
-                   / (sqrt(list_dot_product(c.cvec, c.cvec)) * q.qnorm)
-                 DESC, c.cid) AS rn
-        FROM q CROSS JOIN cent c) WHERE rn <= 4),
-    cand AS (
-      SELECT p.qid, e.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], p.qv)
-               / (sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                        e.embedding::DOUBLE[]))
-                  * p.qnorm) AS cos
-      FROM probe p
-      JOIN assigned a ON a.cid = p.cid
-      JOIN embeddings e ON e.vec_id = a.vec_id
-      WHERE e.vec_id <> p.qid),
-    r AS (
-      SELECT qid, vec_id, cos,
-             ROW_NUMBER() OVER (PARTITION BY qid
-               ORDER BY cos DESC, vec_id) AS rn
-      FROM cand)
-    SELECT qid, CAST(rn AS INT) AS rank_n, vec_id,
-           CAST(cos AS DOUBLE) AS cosine
-    FROM r WHERE rn <= 10
-    """,
-    survey_ref="north-star: BATCH IVF serving — the whole query batch "
-    "flows through the inverted index in ONE plan with ZERO per-query "
-    "driver work (the single-query ann_topk_ivf* paths collect a probe "
-    "list per query; a retrieval service amortizes that across the "
-    "batch): the (query x centroid) probe ranking is a key-scale "
-    "cross of batch x 16 rows resolved by one window, probe cells "
-    "broadcast-join into the cell-partitioned index so each query "
-    "scans only its nprobe cells, and one per-qid window emits the "
-    "ranked top-10. At 100 TB the index is partitioned by cell, the "
-    "probe relation prunes partitions for the whole batch at once, "
-    "and batch size scales the broadcast side only",
-)
-def ann_topk_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, cents = _ann_constants(spark, sf_dir)
-    cent_df = _cent_rel(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-        similarity.norm(F.col("embedding")).alias("qnorm"),
-    )
-    probe_rn = F.row_number().over(
-        W.partitionBy("qid").orderBy(
-            F.desc(
-                similarity.dot(F.col("cvec"), F.col("qv"))
-                / (similarity.norm(F.col("cvec")) * F.col("qnorm"))
-            ),
-            "cid",
-        )
-    )
-    probe = (
-        q.crossJoin(F.broadcast(cent_df))
-        .withColumn("rn", probe_rn)
-        .filter(F.col("rn") <= 4)
-        .select("qid", F.col("cid").alias("cell"), "qv", "qnorm")
-    )
-    index = _ivf_index(spark, sf_dir)
-    cand = (
-        index.join(F.broadcast(probe), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (
-                similarity.dot(
-                    F.col("embedding").cast("array<double>"), F.col("qv")
-                )
-                / (similarity.norm(F.col("embedding")) * F.col("qnorm"))
-            ).alias("cos"),
-        )
-    )
-    rn = F.row_number().over(
-        W.partitionBy("qid").orderBy(F.desc("cos"), "vec_id")
-    )
-    return (
-        cand.withColumn("rn", rn)
-        .filter(F.col("rn") <= 10)
-        .select(
-            "qid",
-            F.col("rn").cast("int").alias("rank_n"),
-            "vec_id",
-            F.col("cos").cast("double").alias("cosine"),
-        )
-    )
-
-
-#: session-scoped path of the IVF index WRITTEN as a parquet table
-#: partitioned by cell — the on-disk form every docstring in the ANN
-#: family promises ("at 100 TB the index is a table partitioned by
-#: cell"). Written once per (session, sf); the directory lives for the
-#: session (the probe DataFrames read it lazily).
-_IVF_TABLE_CACHE: dict[tuple[str, str], str] = SessionCache()
-
-
-def _ivf_table_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="ivf_table_")
-        # The directory must outlive the call (probe DataFrames read
-        # it lazily for the rest of the session) but not the process:
-        # without this, every (session, sf) pair leaks a parquet dir
-        # for the machine's tmp lifetime across repeated sweeps.
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = root + "/index"
-        _ivf_index(spark, sf_dir).write.partitionBy("cell").parquet(path)
-        return path
-
-    return locked_get(_IVF_TABLE_CACHE, key, build)
-
-
-def _registered_oracle(name: str) -> str:
-    """The already-registered oracle SQL of ``name`` (the query must be
-    defined earlier in this module): layout-variant queries reuse their
-    logical twin's hash-verified oracle verbatim, proving the physical
-    layout change is result-invisible."""
-    from ..registry import REGISTRY
-
-    return REGISTRY[name].oracle
-
-
-@query(
-    "ann_topk_ivf_partitioned",
-    oracle=_registered_oracle("ann_topk_ivf"),
-    survey_ref="north-star: the IVF index AS A CELL-PARTITIONED TABLE "
-    "— materializes what the rest of the ANN family claims about "
-    "100 TB: the inverted index written with partitionBy(cell), and "
-    "the probe reading it back with the nprobe cell filter resolved "
-    "as PARTITION PRUNING (PushedFilters never even run: the scan "
-    "lists only nprobe/n_centroids of the directories — asserted on "
-    "the executed plan in tests/test_plans.py). Result is bit-equal "
-    "to ann_topk_ivf (same oracle), only the physical layout differs: "
-    "this is the operational form an indexing job publishes and a "
-    "serving tier reads",
-)
-def ann_topk_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qvec, cents = _ann_constants(spark, sf_dir)
-    qcol = _qcol(qvec)
-    probe, qnorm = _probe_cells(spark, sf_dir)
-    idx = spark.read.parquet(_ivf_table_path(spark, sf_dir))
-    # same semantics as ann_topk_ivf (query vector included if probed):
-    # the ONLY difference is the physical layout
-    pruned = idx.filter(F.col("cell").isin(probe))
-    return similarity.cosine_topk_bruteforce(
-        pruned, qcol, k=10, query_norm=qnorm
-    )
-
-
-#: session-scoped path of the IVF-PQ CODES table: partitionBy(cell),
-#: rows = (vec_id, code0..code7) — the 8-byte-per-vector serving form
-#: every IVF-PQ docstring promises. No raw vectors in the index.
-_IVFPQ_TABLE_CACHE: dict[tuple[str, str], str] = SessionCache()
-
-
-def _ivfpq_table_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> str:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="ivfpq_table_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = root + "/index"
-        books = _pq_codebooks(spark, sf_dir)
-        code_cols = []
-        for s in range(_PQ_SUBS):
-            entries = ",".join(
-                f"named_struct('d', {_pq_spark_dist(s, books[s][k])},"
-                f" 'c', {k})"
-                for k in range(_PQ_K)
-            )
-            code_cols.append(
-                F.expr(f"array_min(array({entries})).c").alias(f"code{s}")
-            )
-        _ivf_index(spark, sf_dir).select(
-            "vec_id", "cell", *code_cols
-        ).write.partitionBy("cell").parquet(path)
-        return path
-
-    return locked_get(_IVFPQ_TABLE_CACHE, key, build)
-
-
-@query(
-    "ann_topk_ivfpq_partitioned",
-    oracle=_registered_oracle("ann_topk_ivfpq"),
-    survey_ref="north-star: the COMPLETE at-scale ANN serving layout — "
-    "IVF-PQ codes written as a cell-partitioned table (vec_id + eight "
-    "2-bit codes per row, NO raw vectors in the index), probed with "
-    "the nprobe cell filter resolved as pure PARTITION PRUNING, ADC "
-    "scored from the STORED codes (constant-folded query table, 8 "
-    "lookups per survivor), top-20 shortlist, then a keyed fetch of "
-    "only the 20 survivors' raw vectors for the exact re-rank — the "
-    "exact read a vector-serving tier does at 100 TB: list "
-    "nprobe/n_centroids of the directories, ship 8-byte codes, touch "
-    "raw vectors only for the shortlist. Result is bit-equal to "
-    "ann_topk_ivfpq (same oracle): only the physical layout differs",
-)
-def ann_topk_ivfpq_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    books = _pq_codebooks(spark, sf_dir)
-    qvec, cents = _ann_constants(spark, sf_dir)
-    qcol = _qcol(qvec)
-    probe, _ = _probe_cells(spark, sf_dir)
-    codes = spark.read.parquet(_ivfpq_table_path(spark, sf_dir)).filter(
-        F.col("cell").isin(probe) & (F.col("vec_id") != 0)
-    )
-    adc_terms = []
-    for s in range(_PQ_SUBS):
-        q_sub = [float(x) for x in qvec[s * 8 : s * 8 + 8]]
-        table = ",".join(
-            _pq_lit_dist_sql(q_sub, books[s][k]) for k in range(_PQ_K)
-        )
-        adc_terms.append(f"element_at(array({table}), code{s} + 1)")
-    adc = F.expr("(" + " + ".join(adc_terms) + ")")
-    cand = (
-        codes.select(
-            "vec_id",
-            F.col("cell").cast("long").alias("cell"),
-            adc.alias("adc_scaled"),
-        )
-        .orderBy("adc_scaled", "vec_id")
-        .limit(20)
-    )
-    # keyed fetch: raw vectors ONLY for the 20 shortlisted ids (the
-    # shortlist broadcasts; the vector table never shuffles)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    fetched = emb.join(F.broadcast(cand), "vec_id")
-    exact = F.expr(
-        "aggregate(zip_with(transform(embedding, x -> CAST(x AS DOUBLE)), "
-        + similarity._vec_sql([float(x) for x in qvec])
-        + ", (x, y) -> CAST(round((x - y) * (x - y) * 1e9) AS BIGINT)),"
-        " 0L, (acc, t) -> acc + t)"
-    )
-    return (
-        fetched.withColumn("exact_scaled", exact)
-        .orderBy("exact_scaled", "vec_id")
-        .limit(10)
-        .select(
-            "vec_id",
-            "cell",
-            (F.col("adc_scaled").cast("double") / 1e9).alias("adc_dist"),
-            (F.col("exact_scaled").cast("double") / 1e9).alias("exact_dist"),
-        )
-    )
-
-
-@query(
-    "ann_incremental_index_parity",
-    oracle="""
-    WITH cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-                  FROM embeddings ORDER BY vec_id LIMIT 16),
-    final AS (
-      SELECT vec_id,
-             CASE WHEN vec_id % 11 = 5
-                  THEN list_reverse(embedding::DOUBLE[])
-                  ELSE embedding::DOUBLE[] END AS v
-      FROM embeddings),
-    assigned AS (
-      SELECT vec_id, cid FROM (
-        SELECT f.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-                 list_dot_product(f.v, c.cvec)
-                   / (sqrt(list_dot_product(f.v, f.v))
-                      * sqrt(list_dot_product(c.cvec, c.cvec))) DESC,
-                 c.cid) AS rn
-        FROM final f CROSS JOIN cent c) WHERE rn = 1)
-    SELECT a.vec_id, a.cid AS cell,
-           CAST(list_sum(list_transform(f.v,
-                x -> CAST(floor(x * 1000000) AS BIGINT))) AS BIGINT)
-             AS vec_fp
-    FROM assigned a JOIN final f USING (vec_id)
-    """,
-    survey_ref="north-star: incremental maintenance of the IVF index "
-    "itself — the serving-tier twin of calc_incremental_gl_parity. "
-    "Between centroid retrains a production index absorbs deltas with "
-    "FROZEN centroids: brand-new vectors (vec_id % 7 == 2) assign and "
-    "insert, and RE-EMBEDDED documents (vec_id % 11 == 5, vector "
-    "replaced by its reverse) can change cell, so on the "
-    "partitionBy(cell) table an upsert WITHIN a partition cannot "
-    "express the move — the maintenance is group-replace by vec_id "
-    "ACROSS partitions (delete-by-key everywhere, insert into the new "
-    "cell; MERGE ... WHEN NOT MATCHED BY SOURCE THEN DELETE). The "
-    "stored base index is the session IVF index (stale for every "
-    "affected id by construction); only the delta re-runs assignment. "
-    "Oracle = the FULL-rebuild assignment over the final embedding "
-    "state with the frozen centroid snapshot, so the value hash "
-    "proves incremental index maintenance == rebuild exactly — "
-    "including every moved cell",
-)
-def ann_incremental_index_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, seeds = _ann_constants(spark, sf_dir)
-    is_new = F.col("vec_id") % 7 == 2
-    is_amend = F.col("vec_id") % 11 == 5
-    affected = emb.filter(is_new | is_amend).select("vec_id")
-    delta = emb.filter(is_new | is_amend).withColumn(
-        "embedding",
-        F.when(is_amend, F.reverse("embedding")).otherwise(
-            F.col("embedding")
-        ),
-    )
-    vec_fp = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.floor(x * 1000000).cast("long"),
-    ).alias("vec_fp")
-    base = _ivf_index(spark, sf_dir).select("vec_id", "cell", vec_fp)
-    recomputed = similarity.ivf_assign(delta, seeds).select(
-        "vec_id", "cell", vec_fp
-    )
-    return (
-        base.join(F.broadcast(affected), "vec_id", "left_anti")
-        .select("vec_id", "cell", "vec_fp")
-        .unionByName(recomputed)
-    )
-
-
-@query(
-    "ann_incremental_pq_parity",
-    oracle="""
-    WITH cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-                  FROM embeddings ORDER BY vec_id LIMIT 16),
-    final AS (
-      SELECT vec_id,
-             CASE WHEN vec_id % 11 = 5
-                  THEN list_reverse(embedding::DOUBLE[])
-                  ELSE embedding::DOUBLE[] END AS v
-      FROM embeddings
-      WHERE vec_id % 13 <> 4),
-    assigned AS (
-      SELECT vec_id, cid FROM (
-        SELECT f.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-                 list_dot_product(f.v, c.cvec)
-                   / (sqrt(list_dot_product(f.v, f.v))
-                      * sqrt(list_dot_product(c.cvec, c.cvec))) DESC,
-                 c.cid) AS rn
-        FROM final f CROSS JOIN cent c) WHERE rn = 1),
-    d AS (
-      SELECT f.vec_id, s.sub, c.k,
-             CAST(SUM(CAST(round(
-               (f.v[s.sub * 8 + i.i]
-                - CAST(c.embedding[s.sub * 8 + i.i] AS DOUBLE))
-               * (f.v[s.sub * 8 + i.i]
-                  - CAST(c.embedding[s.sub * 8 + i.i] AS DOUBLE))
-               * 1e9) AS BIGINT)) AS BIGINT) AS dist
-      FROM final f
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s
-      CROSS JOIN (SELECT vec_id AS k, embedding FROM embeddings
-                  WHERE vec_id < 4) c
-      CROSS JOIN (SELECT unnest(generate_series(1, 8)) AS i) i
-      GROUP BY f.vec_id, s.sub, c.k),
-    best AS (
-      SELECT vec_id, sub, MIN(struct_pack(d := dist, k := k)).k AS code
-      FROM d GROUP BY vec_id, sub),
-    codes AS (
-      SELECT vec_id, string_agg(CAST(code AS VARCHAR), '' ORDER BY sub)
-               AS pq_code
-      FROM best GROUP BY vec_id)
-    SELECT a.vec_id, a.cid AS cell, c.pq_code
-    FROM assigned a JOIN codes c USING (vec_id)
-    """,
-    survey_ref="north-star: incremental maintenance of the PRODUCTION "
-    "serving index — the cell-partitioned IVF-PQ CODES table "
-    "(ann_topk_ivfpq_partitioned's layout: vec_id + eight 2-bit codes, "
-    "no raw vectors). ann_incremental_index_parity proved the CELL "
-    "assignment maintainable; this proves the codes: between retrains "
-    "the index absorbs deltas with FROZEN centroids AND frozen "
-    "codebooks, covering all three CRUD arms — brand-new vectors "
-    "(vec_id % 7 == 2) re-encode and insert, re-embedded documents "
-    "(vec_id % 11 == 5, vector replaced by its reverse) re-encode AND "
-    "can change cell, and RETIRED documents (vec_id % 13 == 4, "
-    "tombstone deletes) must vanish from whatever partition holds "
-    "them — so on the partitionBy(cell) table the maintenance is "
-    "group-replace by vec_id ACROSS partitions (delete-by-key "
-    "everywhere, insert into the new cell; the MERGE ... WHEN NOT "
-    "MATCHED BY SOURCE THEN DELETE shape). The stored baseline is the "
-    "PUBLISHED codes table read back (stale codes/cells for every "
-    "affected id, ghost rows for every retired id, by construction); "
-    "only the delta re-runs assignment + encoding. Oracle = the FULL-"
-    "rebuild assignment + encoding over the final embedding state "
-    "(retired ids excluded) with the frozen centroid/codebook "
-    "snapshots, so the value hash proves incremental codes "
-    "maintenance == rebuild exactly — every moved cell, every "
-    "re-encoded code, every scrubbed tombstone",
-)
-def ann_incremental_pq_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _maintained_pq_codes(spark, sf_dir)
-
-
-def _maintained_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MAINTAINED codes table (vec_id, cell, pq_code): the published
-    cell-partitioned base read back, delta-maintained with frozen
-    centroids/codebooks (see ann_incremental_pq_parity's survey_ref).
-    Deliberately NOT session-cached: both consumers (the parity query —
-    a gate-prefix suite member — and the retrain lifecycle) build it
-    lazily, so it adds zero retained heap to the gate session."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = _pq_codebooks(spark, sf_dir)
-    _, seeds = _ann_constants(spark, sf_dir)
-    is_new = F.col("vec_id") % 7 == 2
-    is_amend = F.col("vec_id") % 11 == 5
-    is_delete = F.col("vec_id") % 13 == 4
-    # every touched key leaves the base (delete arm); only the
-    # surviving upserts re-enter — a retired id that is also "new" or
-    # "amended" in the same batch stays deleted (tombstone wins)
-    affected = emb.filter(is_new | is_amend | is_delete).select("vec_id")
-    delta = (
-        emb.filter((is_new | is_amend) & ~is_delete)
-        .withColumn(
-            "embedding",
-            F.when(is_amend, F.reverse("embedding")).otherwise(
-                F.col("embedding")
-            ),
-        )
-    )
-    # stored baseline: READ the published cell-partitioned codes table
-    # (the same parquet directory ann_topk_ivfpq_partitioned probes)
-    base = spark.read.parquet(_ivfpq_table_path(spark, sf_dir)).select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell"),
-        F.concat(
-            *[F.col(f"code{s}").cast("string") for s in range(_PQ_SUBS)]
-        ).alias("pq_code"),
-    )
-    # delta: frozen-centroid cell assignment + frozen-codebook encoding
-    code_exprs = []
-    for s in range(_PQ_SUBS):
-        entries = ",".join(
-            f"named_struct('d', {_pq_spark_dist(s, books[s][k])}, 'c', {k})"
-            for k in range(_PQ_K)
-        )
-        code_exprs.append(f"CAST(array_min(array({entries})).c AS STRING)")
-    recomputed = similarity.ivf_assign(delta, seeds).select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell"),
-        F.expr("concat(" + ",".join(code_exprs) + ")").alias("pq_code"),
-    )
-    return (
-        base.join(F.broadcast(affected), "vec_id", "left_anti")
-        .select("vec_id", "cell", "pq_code")
-        .unionByName(recomputed)
-    )
-
-
-# ---------------------------------------------------------------------------
-# ANN retrain lifecycle (r9 verdict item 2): the maintenance family
-# freezes centroids and codebooks by design; the missing production
-# event is the RETRAIN — new centroids/codebooks trained on the final
-# corpus state, full re-assignment + re-encode of the SURVIVING corpus
-# (keys driven by the maintained index), atomic versioned publish
-# alongside the old index, and an old-vs-new recall-delta report.
-# ---------------------------------------------------------------------------
-
-#: final embedding state shared by the maintenance + retrain oracles:
-#: amendments (vec_id % 11 == 5) replaced by their reverse, retirals
-#: (vec_id % 13 == 4) excluded — identical text to the `final` CTE in
-#: ann_incremental_pq_parity's oracle.
-_FINAL_STATE_DUCK = """
-      SELECT vec_id,
-             CASE WHEN vec_id % 11 = 5
-                  THEN list_reverse(embedding::DOUBLE[])
-                  ELSE embedding::DOUBLE[] END AS v
-      FROM embeddings
-      WHERE vec_id % 13 <> 4
-"""
-
-#: retrained coarse centroids: the 16 highest-id SURVIVING vectors in
-#: their final state, renumbered 0..15 by descending id (production
-#: retrains k-means a fresh sample; a deterministic seed rule keeps the
-#: lifecycle oracle-checkable — the re-assignment/re-encode/publish
-#: mechanics are identical, and the k-means math itself is already
-#: proven by ann_topk_ivf_kmeans).
-_NEWCENT_DUCK = """
-      SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id DESC) - 1 AS BIGINT)
-               AS cid,
-             v AS cvec
-      FROM (SELECT vec_id, v FROM final ORDER BY vec_id DESC LIMIT 16) _s
-"""
-
-
-def _final_embedding_state(emb: DataFrame) -> DataFrame:
-    """The corpus AFTER the maintenance deltas: reversed embeddings for
-    amended ids, retired ids gone (the Spark twin of _FINAL_STATE_DUCK,
-    still in the raw array<float> store form)."""
-    is_amend = F.col("vec_id") % 11 == 5
-    is_delete = F.col("vec_id") % 13 == 4
-    return emb.filter(~is_delete).withColumn(
-        "embedding",
-        F.when(is_amend, F.reverse("embedding")).otherwise(
-            F.col("embedding")
-        ),
-    )
-
-
-_REINDEX_SEED_CACHE: dict[tuple[str, str], tuple] = SessionCache()
-
-
-def _reindex_seeds(spark: SparkSession, sf_dir: str):
-    """(new_seeds, new_books): the retrained coarse centroids (16
-    highest-id survivors, final state, cids 0..15 by descending id) and
-    the retrained PQ codebooks (subvectors of the first _PQ_K new
-    centroids — the same seeding convention as _pq_codebooks). One tiny
-    driver job per (session, sf), cached like _ann_constants."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build():
-        emb = load_table(spark, sf_dir, "embeddings")
-        rows = (
-            _final_embedding_state(emb)
-            .orderBy(F.desc("vec_id"))
-            .select("vec_id", "embedding")
-            .limit(16)
-            .collect()
-        )
-        seeds = [(i, [float(x) for x in r[1]]) for i, r in enumerate(rows)]
-        books = [
-            [seeds[k][1][s * 8 : s * 8 + 8] for k in range(_PQ_K)]
-            for s in range(_PQ_SUBS)
-        ]
-        return seeds, books
-
-    return locked_get(_REINDEX_SEED_CACHE, key, build)
-
-
-#: session-scoped path of the RETRAINED (v2) codes table. Published
-#: ALONGSIDE the v1 index: _ivfpq_table_path's directory is never
-#: touched, the v2 write lands in its own versioned directory, and a
-#: _LATEST pointer file is written only AFTER the data write returns —
-#: the pointer flip is the atomic publish (readers resolving _LATEST
-#: see either the complete old index or the complete new one, never a
-#: partial write; on a real object store this is the manifest swap).
-_IVFPQ_V2_TABLE_CACHE: dict[tuple[str, str], str] = SessionCache()
-
-
-def _ivfpq_v2_table_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> str:
-        import atexit
-        import os
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="ivfpq_v2_table_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = root + "/index_v2"
-        seeds, books = _reindex_seeds(spark, sf_dir)
-        emb = load_table(spark, sf_dir, "embeddings")
-        # the retrain reads the MAINTAINED index's key set — the
-        # lifecycle chains: maintenance proved the key set equals the
-        # final corpus state (ann_incremental_pq_parity), the retrain
-        # re-encodes exactly those survivors. At 100 TB both sides are
-        # bucketed by vec_id so this join is shuffle-free.
-        survivors = _maintained_pq_codes(spark, sf_dir).select("vec_id")
-        corpus = (
-            _final_embedding_state(emb)
-            .join(survivors, "vec_id")
-            .select("vec_id", "embedding")
-        )
-        code_cols = []
-        for s in range(_PQ_SUBS):
-            entries = ",".join(
-                f"named_struct('d', {_pq_spark_dist(s, books[s][k])},"
-                f" 'c', {k})"
-                for k in range(_PQ_K)
-            )
-            code_cols.append(
-                F.expr(f"array_min(array({entries})).c").alias(f"code{s}")
-            )
-        similarity.ivf_assign(corpus, seeds).select(
-            "vec_id", "cell", *code_cols
-        ).write.partitionBy("cell").parquet(path)
-        # data write complete -> flip the pointer (the atomic publish)
-        with open(os.path.join(root, "_LATEST"), "w") as f:
-            f.write("index_v2")
-        return path
-
-    return locked_get(_IVFPQ_V2_TABLE_CACHE, key, build)
-
-
-@query(
-    "ann_reindex_parity",
-    oracle=f"""
-    WITH final AS ({_FINAL_STATE_DUCK}),
-    newcent AS ({_NEWCENT_DUCK}),
-    assigned AS (
-      SELECT vec_id, cid FROM (
-        SELECT f.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-                 list_dot_product(f.v, c.cvec)
-                   / (sqrt(list_dot_product(f.v, f.v))
-                      * sqrt(list_dot_product(c.cvec, c.cvec))) DESC,
-                 c.cid) AS rn
-        FROM final f CROSS JOIN newcent c) _r WHERE rn = 1),
-    d AS (
-      SELECT f.vec_id, s.sub, b.cid AS k,
-             CAST(SUM(CAST(round(
-               (f.v[s.sub * 8 + i.i] - b.cvec[s.sub * 8 + i.i])
-               * (f.v[s.sub * 8 + i.i] - b.cvec[s.sub * 8 + i.i])
-               * 1e9) AS BIGINT)) AS BIGINT) AS dist
-      FROM final f
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s
-      CROSS JOIN (SELECT cid, cvec FROM newcent WHERE cid < {_PQ_K}) b
-      CROSS JOIN (SELECT unnest(generate_series(1, 8)) AS i) i
-      GROUP BY f.vec_id, s.sub, b.cid),
-    best AS (
-      SELECT vec_id, sub, MIN(struct_pack(d := dist, k := k)).k AS code
-      FROM d GROUP BY vec_id, sub),
-    codes AS (
-      SELECT vec_id, string_agg(CAST(code AS VARCHAR), '' ORDER BY sub)
-               AS pq_code
-      FROM best GROUP BY vec_id)
-    SELECT a.vec_id, a.cid AS cell, c.pq_code
-    FROM assigned a JOIN codes c USING (vec_id)
-    """,
-    survey_ref="north-star: the ANN RETRAIN lifecycle (r9 verdict item "
-    "2) — the maintenance family (ann_incremental_index_parity / "
-    "ann_incremental_pq_parity) absorbs deltas with FROZEN centroids "
-    "and codebooks; the remaining production event is the retrain. "
-    "This query performs it end to end: NEW coarse centroids + NEW PQ "
-    "codebooks trained on the final corpus state (deterministic seed "
-    "rule — the k-means math is separately proven by "
-    "ann_topk_ivf_kmeans), full re-assignment + re-encode of the "
-    "SURVIVING corpus with the survivor set read from the MAINTAINED "
-    "index (the lifecycle chains: maintenance proved the key set, the "
-    "retrain consumes it), and an ATOMIC VERSIONED PUBLISH — the v2 "
-    "codes table lands in its own cell-partitioned directory next to "
-    "the untouched v1 index and a _LATEST pointer flips only after "
-    "the data write returns. The returned frame is the v2 table READ "
-    "BACK from its published directory. Oracle = the from-scratch "
-    "rebuild over the final embedding state with the same new "
-    "centroid/codebook snapshot, so the value hash proves "
-    "maintained-then-retrained == rebuilt-from-scratch exactly. At "
-    "100 TB the re-encode is one map-side pass over the bucketed "
-    "survivor join (centroids/codebooks ride the plan as literals) "
-    "and the publish is the table format's atomic manifest swap",
-)
-def ann_reindex_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    idx = spark.read.parquet(_ivfpq_v2_table_path(spark, sf_dir))
-    return idx.select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell"),
-        F.concat(
-            *[F.col(f"code{s}").cast("string") for s in range(_PQ_SUBS)]
-        ).alias("pq_code"),
-    )
-
-
-def _pq_code_probe_top10(
-    spark: SparkSession,
-    codes: DataFrame,
-    cents: list,
-    books: list,
-    qvec: list,
-    final_emb: DataFrame,
-) -> DataFrame:
-    """IVF-PQ probe over a (vec_id, cell, pq_code) codes frame with the
-    given centroid/codebook snapshot: nprobe-4 cell selection, ADC from
-    the stored code digits (query distance table constant-folded to 32
-    literals), top-20 shortlist, keyed raw-vector fetch, exact re-rank
-    to top-10 — ann_topk_ivfpq_partitioned's read path, parameterized
-    over the index version."""
-    qcol = _qcol(qvec)
-    cent_df = spark.createDataFrame(
-        [(cid, cv) for cid, cv in cents], "vec_id long, cvec array<double>"
-    )
-    probe = [
-        r[0]
-        for r in cent_df.select(
-            "vec_id", similarity.cosine(F.col("cvec"), qcol).alias("sim")
-        )
-        .orderBy(F.desc("sim"), "vec_id")
-        .limit(4)
-        .collect()
-    ]
-    adc_terms = []
-    for s in range(_PQ_SUBS):
-        q_sub = [float(x) for x in qvec[s * 8 : s * 8 + 8]]
-        table = ",".join(
-            _pq_lit_dist_sql(q_sub, books[s][k]) for k in range(_PQ_K)
-        )
-        adc_terms.append(
-            f"element_at(array({table}),"
-            f" CAST(substr(pq_code, {s + 1}, 1) AS INT) + 1)"
-        )
-    adc = F.expr("(" + " + ".join(adc_terms) + ")")
-    cand = (
-        codes.filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
-        .select("vec_id", adc.alias("adc_scaled"))
-        .orderBy("adc_scaled", "vec_id")
-        .limit(20)
-    )
-    exact = F.expr(
-        "aggregate(zip_with(transform(embedding, x -> CAST(x AS DOUBLE)), "
-        + similarity._vec_sql([float(x) for x in qvec])
-        + ", (x, y) -> CAST(round((x - y) * (x - y) * 1e9) AS BIGINT)),"
-        " 0L, (acc, t) -> acc + t)"
-    )
-    return (
-        final_emb.select("vec_id", "embedding")
-        .join(F.broadcast(cand), "vec_id")
-        .withColumn("exact_scaled", exact)
-        .orderBy("exact_scaled", "vec_id")
-        .limit(10)
-        .select("vec_id")
-    )
-
-
-@query(
-    "ann_reindex_recall_report",
-    oracle=f"""
-    WITH final AS ({_FINAL_STATE_DUCK}),
-    newcent AS ({_NEWCENT_DUCK}),
-    qn AS (SELECT embedding::DOUBLE[] AS qe FROM embeddings
-           WHERE vec_id = 0),
-    exact_all AS (
-      SELECT f.vec_id,
-             CAST(SUM(CAST(round(
-               (f.v[i.i] - q.qe[i.i]) * (f.v[i.i] - q.qe[i.i]) * 1e9)
-               AS BIGINT)) AS BIGINT) AS exact_scaled
-      FROM final f
-      CROSS JOIN qn q
-      CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) i
-      GROUP BY f.vec_id),
-    exact_top AS (
-      SELECT vec_id FROM exact_all WHERE vec_id <> 0
-      ORDER BY exact_scaled, vec_id LIMIT 10),
-    old_idx AS (SELECT * FROM ({_registered_oracle("ann_incremental_pq_parity")}) _o),
-    new_idx AS (SELECT * FROM ({_registered_oracle("ann_reindex_parity")}) _n),
-    oldcent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-                FROM embeddings ORDER BY vec_id LIMIT 16),
-    old_probe AS (
-      SELECT c.cid FROM oldcent c, qn
-      ORDER BY list_dot_product(c.cvec, qn.qe)
-                 / (sqrt(list_dot_product(c.cvec, c.cvec))
-                    * sqrt(list_dot_product(qn.qe, qn.qe))) DESC, c.cid
-      LIMIT 4),
-    new_probe AS (
-      SELECT c.cid FROM newcent c, qn
-      ORDER BY list_dot_product(c.cvec, qn.qe)
-                 / (sqrt(list_dot_product(c.cvec, c.cvec))
-                    * sqrt(list_dot_product(qn.qe, qn.qe))) DESC, c.cid
-      LIMIT 4),
-    old_adc_table AS ({_PQ_ADC_DUCK_TABLE}),
-    new_adc_table AS (
-      SELECT s.sub, b.cid AS k,
-             CAST(SUM(CAST(round(
-               (q.qe[s.sub * 8 + i.i] - b.cvec[s.sub * 8 + i.i])
-               * (q.qe[s.sub * 8 + i.i] - b.cvec[s.sub * 8 + i.i])
-               * 1e9) AS BIGINT)) AS BIGINT) AS entry
-      FROM qn q
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s
-      CROSS JOIN (SELECT cid, cvec FROM newcent WHERE cid < {_PQ_K}) b
-      CROSS JOIN (SELECT unnest(generate_series(1, 8)) AS i) i
-      GROUP BY s.sub, b.cid),
-    old_scored AS (
-      SELECT o.vec_id, CAST(SUM(t.entry) AS BIGINT) AS adc_scaled
-      FROM old_idx o
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s
-      JOIN old_adc_table t
-        ON t.sub = s.sub
-       AND t.k = CAST(substr(o.pq_code, s.sub + 1, 1) AS INT)
-      WHERE o.vec_id <> 0 AND o.cell IN (SELECT cid FROM old_probe)
-      GROUP BY o.vec_id),
-    new_scored AS (
-      SELECT o.vec_id, CAST(SUM(t.entry) AS BIGINT) AS adc_scaled
-      FROM new_idx o
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s
-      JOIN new_adc_table t
-        ON t.sub = s.sub
-       AND t.k = CAST(substr(o.pq_code, s.sub + 1, 1) AS INT)
-      WHERE o.vec_id <> 0 AND o.cell IN (SELECT cid FROM new_probe)
-      GROUP BY o.vec_id),
-    old_cand AS (SELECT vec_id FROM old_scored
-                 ORDER BY adc_scaled, vec_id LIMIT 20),
-    new_cand AS (SELECT vec_id FROM new_scored
-                 ORDER BY adc_scaled, vec_id LIMIT 20),
-    old_top AS (
-      SELECT e.vec_id FROM old_cand c JOIN exact_all e USING (vec_id)
-      ORDER BY e.exact_scaled, e.vec_id LIMIT 10),
-    new_top AS (
-      SELECT e.vec_id FROM new_cand c JOIN exact_all e USING (vec_id)
-      ORDER BY e.exact_scaled, e.vec_id LIMIT 10),
-    report AS (
-      SELECT 'v1_maintained' AS index_version, vec_id FROM old_top
-      UNION ALL
-      SELECT 'v2_retrained' AS index_version, vec_id FROM new_top)
-    SELECT r.index_version,
-           CAST(COUNT(*) AS INT) AS n_returned,
-           CAST(SUM(CASE WHEN e.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS INT) AS n_matched,
-           CAST(SUM(CASE WHEN e.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS DOUBLE) / 10 AS recall_at_10
-    FROM report r LEFT JOIN exact_top e ON e.vec_id = r.vec_id
-    GROUP BY r.index_version
-    """,
-    survey_ref="north-star: the retrain lifecycle's RECALL-DELTA "
-    "report — after an atomic reindex a deployment decides whether to "
-    "flip traffic by comparing the OLD (maintained, frozen v1 "
-    "centroids/codebooks) and NEW (retrained v2) indexes against the "
-    "exact top-10 over the final corpus state, in one plan: both "
-    "indexes probed through the identical IVF-PQ read path "
-    "(nprobe-4 partition-pruned cell scan, ADC from stored code "
-    "digits, top-20 shortlist, keyed raw-vector fetch, exact re-rank) "
-    "and one aggregation emits (n_returned, n_matched, recall@10) per "
-    "index version — ann_recall_report's harness pointed at index "
-    "VERSIONS instead of index methods. The oracle composes both "
-    "indexes' own hash-verified oracle SQL verbatim (the maintained "
-    "table from ann_incremental_pq_parity, the retrained table from "
-    "ann_reindex_parity), so the evaluation cannot drift from the "
-    "indexes it evaluates",
-)
-def ann_reindex_recall_report(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    final_emb = _final_embedding_state(emb)
-    qvec, old_cents = _ann_constants(spark, sf_dir)
-    old_books = _pq_codebooks(spark, sf_dir)
-    new_seeds, new_books = _reindex_seeds(spark, sf_dir)
-    old_codes = _maintained_pq_codes(spark, sf_dir)
-    new_codes = ann_reindex_parity(spark, sf_dir)
-    old_top = _pq_code_probe_top10(
-        spark, old_codes, old_cents, old_books, qvec, final_emb
-    )
-    new_top = _pq_code_probe_top10(
-        spark, new_codes, new_seeds, new_books, qvec, final_emb
-    )
-    exact_expr = F.expr(
-        "aggregate(zip_with(transform(embedding, x -> CAST(x AS DOUBLE)), "
-        + similarity._vec_sql([float(x) for x in qvec])
-        + ", (x, y) -> CAST(round((x - y) * (x - y) * 1e9) AS BIGINT)),"
-        " 0L, (acc, t) -> acc + t)"
-    )
-    exact_top = (
-        final_emb.filter(F.col("vec_id") != 0)
-        .select("vec_id", exact_expr.alias("exact_scaled"))
-        .orderBy("exact_scaled", "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(1).alias("_hit"))
-    )
-    m = old_top.select(
-        F.lit("v1_maintained").alias("index_version"), "vec_id"
-    ).unionByName(
-        new_top.select(F.lit("v2_retrained").alias("index_version"), "vec_id")
-    )
-    return (
-        m.join(F.broadcast(exact_top), "vec_id", "left")
-        .groupBy("index_version")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_returned"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-            .cast("int")
-            .alias("n_matched"),
-        )
-        .withColumn(
-            "recall_at_10", F.col("n_matched").cast("double") / F.lit(10.0)
-        )
-    )
-
-
-@query(
-    "ann_recall_batch_report",
-    oracle=f"""
-    WITH cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-                  FROM embeddings ORDER BY vec_id LIMIT 16),
-    assigned AS ({_IVF_ASSIGN_DUCK}),
-    q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv,
-                 sqrt(list_dot_product(embedding::DOUBLE[],
-                                       embedding::DOUBLE[])) AS qnorm
-          FROM embeddings WHERE vec_id < 8),
-    probe AS (
-      SELECT qid, cid, qv, qnorm FROM (
-        SELECT q.qid, c.cid, q.qv, q.qnorm,
-               ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-                 list_dot_product(c.cvec, q.qv)
-                   / (sqrt(list_dot_product(c.cvec, c.cvec)) * q.qnorm)
-                 DESC, c.cid) AS rn
-        FROM q CROSS JOIN cent c) WHERE rn <= 4),
-    cand AS (
-      SELECT p.qid, e.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], p.qv)
-               / (sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                        e.embedding::DOUBLE[]))
-                  * p.qnorm) AS cos
-      FROM probe p
-      JOIN assigned a ON a.cid = p.cid
-      JOIN embeddings e ON e.vec_id = a.vec_id
-      WHERE e.vec_id <> p.qid),
-    ivf AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY qid
-                 ORDER BY cos DESC, vec_id) AS rn
-        FROM cand) WHERE rn <= 10),
-    ex_cand AS (
-      SELECT q.qid, e.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], q.qv)
-               / (sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                        e.embedding::DOUBLE[]))
-                  * q.qnorm) AS cos
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.qid),
-    exact AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY qid
-                 ORDER BY cos DESC, vec_id) AS rn
-        FROM ex_cand) WHERE rn <= 10),
-    per AS (
-      SELECT i.qid,
-             CAST(COUNT(*) AS INT) AS n_returned,
-             CAST(SUM(CASE WHEN x.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                  AS INT) AS n_matched
-      FROM ivf i
-      LEFT JOIN exact x ON x.qid = i.qid AND x.vec_id = i.vec_id
-      GROUP BY i.qid)
-    SELECT qid, n_returned, n_matched,
-           CAST(n_matched AS DOUBLE) / 10 AS recall_at_10
-    FROM per
-    UNION ALL
-    SELECT CAST(-1 AS BIGINT) AS qid,
-           CAST(SUM(n_returned) AS INT) AS n_returned,
-           CAST(SUM(n_matched) AS INT) AS n_matched,
-           CAST(SUM(n_matched) AS DOUBLE) / SUM(n_returned) AS recall_at_10
-    FROM per
-    """,
-    survey_ref="north-star: BATCHED recall evaluation — "
-    "ann_recall_report measures one query vector; at 100 TB a "
-    "deployment validates an index against a SAMPLED QUERY SET, and "
-    "this is that harness in one plan: the 8-query batch flows the "
-    "batch-IVF read path (probe ranking as one window over the "
-    "query x centroid cross, probe cells broadcast into the "
-    "cell-partitioned index, per-qid top-10 windows) while the exact "
-    "arm brute-forces the same batch (one pass over the corpus with "
-    "the broadcast query relation), and a per-qid LEFT JOIN + "
-    "aggregation emits recall@10 per query plus the macro row "
-    "(qid = -1, pooled recall). Query-set size scales only the "
-    "broadcast side and the window key cardinality — the corpus is "
-    "scanned a constant number of times regardless of Q",
-)
-def ann_recall_batch_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, cents = _ann_constants(spark, sf_dir)
-    cent_df = spark.createDataFrame(
-        [(cid, cv) for cid, cv in cents], "cid long, cvec array<double>"
-    )
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-        similarity.norm(F.col("embedding")).alias("qnorm"),
-    )
-    probe_rn = F.row_number().over(
-        W.partitionBy("qid").orderBy(
-            F.desc(
-                similarity.dot(F.col("cvec"), F.col("qv"))
-                / (similarity.norm(F.col("cvec")) * F.col("qnorm"))
-            ),
-            "cid",
-        )
-    )
-    probe = (
-        q.crossJoin(F.broadcast(cent_df))
-        .withColumn("rn", probe_rn)
-        .filter(F.col("rn") <= 4)
-        .select("qid", F.col("cid").alias("cell"), "qv", "qnorm")
-    )
-    cos = (
-        similarity.dot(F.col("embedding").cast("array<double>"), F.col("qv"))
-        / (similarity.norm(F.col("embedding")) * F.col("qnorm"))
-    ).alias("cos")
-    topk_rn = F.row_number().over(
-        W.partitionBy("qid").orderBy(F.desc("cos"), "vec_id")
-    )
-    ivf = (
-        _ivf_index(spark, sf_dir)
-        .join(F.broadcast(probe), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cos)
-        .withColumn("rn", topk_rn)
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
-    )
-    exact = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cos)
-        .withColumn("rn", topk_rn)
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id", F.lit(1).alias("_hit"))
-    )
-    per = (
-        ivf.join(F.broadcast(exact), ["qid", "vec_id"], "left")
-        .groupBy("qid")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_returned"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-            .cast("int")
-            .alias("n_matched"),
-        )
-    )
-    macro = per.agg(
-        F.lit(-1).cast("long").alias("qid"),
-        F.sum("n_returned").cast("int").alias("n_returned"),
-        F.sum("n_matched").cast("int").alias("n_matched"),
-        (
-            F.sum("n_matched").cast("double")
-            / F.sum("n_returned").cast("double")
-        ).alias("recall_at_10"),
-    )
-    return (
-        per.withColumn(
-            "recall_at_10", F.col("n_matched").cast("double") / F.lit(10.0)
-        )
-        .unionByName(macro)
     )

@@ -291,26 +291,14 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
     ),
     "llmdata_extras_suite": (
         "north-star operators beyond the dedicated LLM-data slots: "
-        "sign-LSH ANN, embedding-cosine near-dup, near-dup clusters, "
-        "chunk overlap, PII scrub, multimodal PNG decode / roundtrip / "
-        "frame sampling, fused ML inference, product quantization, RAG "
-        "retrieval, BPE merge training, TF-IDF keywords, "
-        "batch/partitioned IVF serving and the four-method recall@10 "
-        "report",
+        "embedding-cosine near-dup, near-dup clusters, chunk overlap, "
+        "PII scrub, multimodal PNG decode / roundtrip / resize / frame "
+        "sampling / image dedup, fused ML inference, BPE merge "
+        "training and TF-IDF keywords",
         (
             "text_bpe_train",
             "text_bpe_apply",
             "multimodal_png_roundtrip",
-            "ann_pq_codes",
-            "ann_pq_adc_topk",
-            "ann_topk_ivfpq",
-            "ann_topk_ivfpq_residual",
-            "ann_topk_ivf_batch",
-            "ann_topk_ivf_partitioned",
-            "ann_topk_ivfpq_partitioned",
-            "ann_recall_report",
-            "pipeline_rag_retrieval",
-            "ann_topk_lsh",
             "dedup_embedding_cosine",
             "dedup_cluster_labels",
             "text_chunk_overlap",
@@ -323,12 +311,6 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
             "text_tfidf_topk",
             "ml_inference_logistic",
             "multimodal_resize_plan",
-            "ann_range_search",
-            "ann_topk_batch",
-            "ann_topk_ivf_kmeans",
-            "ann_incremental_index_parity",
-            "ann_reindex_recall_report",
-            "ann_recall_batch_report",
         ),
     ),
     "incremental_parity_suite": (
@@ -338,23 +320,21 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
         "(group propagation), the 8-stage cascade's three outputs "
         "(explode-grain GL, rollup-grain traceability, lineage-grain "
         "broker trace), the slice-union GL proof, the CHAINED single-"
-        "pass increment across all five maintained outputs, the "
-        "IVF-PQ codes serving index, and both STREAMED forms "
-        "(criteria and GL maintained across checkpointed restarts "
+        "pass increment across all five maintained outputs, and both "
+        "STREAMED forms (criteria and GL maintained across checkpointed "
+        "restarts "
         "through the exactly-once merge/replace sinks), plus the "
         "TWO-LEVEL view-over-view maintenance of the period-close "
         "rollup (COUNT DISTINCT re-aggregated from the maintained "
         "journal, affected periods only), and (r10) the CONSOLIDATION "
         "fold — the ordered mapInPandas fold is group-local, so a "
         "delta batch re-folds only touched groups against the verbatim "
-        "recursive-CTE full-rebuild oracle. "
-        "ann_incremental_index_parity stays fingerprinted in "
-        "llmdata_extras_suite. calc_incremental_gl (the r7-era "
-        "slice-union proof) stays a standalone swept entry: it runs "
+        "recursive-CTE full-rebuild oracle. calc_incremental_gl (the "
+        "r7-era slice-union proof) stays a standalone swept entry: it runs "
         "the cascade on BOTH complement slices — nearly two extra "
         "full cascades of gate-session heap — and its proof content "
         "is superseded by the keyed-MERGE parity members here. The "
-        "chained/streamed/serving members live in "
+        "chained and streamed members live in "
         "incremental_stream_parity_suite: one combined suite "
         "intermittently tipped the gate's 1g heap over after the "
         "prefix's 37 prior slots (the batch+stream burst on top of "
@@ -371,18 +351,14 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
         ),
     ),
     "incremental_stream_parity_suite": (
-        "the incremental-maintenance family's chained, streamed and "
-        "serving-tier members (second driver slot — see "
+        "the incremental-maintenance family's chained and streamed "
+        "members (second driver slot — see "
         "incremental_parity_suite's note on the 1g-heap split): the "
         "CHAINED single-pass increment across all five maintained "
-        "outputs, IVF-PQ codes maintenance with cross-partition moves "
-        "and tombstone deletes, the (r10) ANN RETRAIN lifecycle — new "
-        "centroids/codebooks, survivor re-encode from the maintained "
-        "key set, atomic versioned publish, proven equal to the "
-        "from-scratch rebuild — and the THREE streamed forms (criteria "
-        "via keyed merge, GL and the r10 consolidation fold via "
-        "group-replace, each maintained across checkpointed restarts "
-        "through the exactly-once sinks), and (r11) the MULTI-TABLE "
+        "outputs, the THREE streamed forms (criteria via keyed merge, "
+        "GL and the r10 consolidation fold via group-replace, each "
+        "maintained across checkpointed restarts through the "
+        "exactly-once sinks), and (r11) the MULTI-TABLE "
         "ATOMIC PUBLISH — the chained increment's five outputs "
         "committed as one version set through the transaction "
         "manifest with a crash injected between table data writes, "
@@ -395,8 +371,6 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
         "crash-interrupted checkpointed restart",
         (
             "pipeline_incremental_parity",
-            "ann_incremental_pq_parity",
-            "ann_reindex_parity",
             "stream_incremental_criteria_parity",
             "stream_incremental_gl_parity",
             "stream_consolidate_parity",

@@ -167,26 +167,26 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # north-star incremental-maintenance family (every grain: builder
     # criteria/proposals, GL, traceability, broker trace, period-close
     # view-over-view, the consolidation fold (r10), the chained
-    # single-pass increment, IVF-PQ codes, the ANN retrain lifecycle
-    # (r10), both streamed forms) — each sub hash-proven equal to its
+    # single-pass increment, both streamed forms, the transactional
+    # publish and the CDC change feed) — each sub hash-proven equal to its
     # verbatim full-rebuild oracle; two slots because one combined
     # suite intermittently tipped the gate's 1g heap (see suites.py;
     # scripts/check_oracle.py --vanilla now asserts post-GC heap
     # headroom per rehearsal, r10)
     "incremental_parity_suite",
     "incremental_stream_parity_suite",
-    # LLM-data north-star operators (ann_topk_bruteforce rotated out in
-    # r4: it is the labeled O(n*q) baseline and the ANN family stays
-    # driver-covered by ann_topk_ivf + llmdata_extras_suite)
+    # LLM-data north-star operators: text profiling, dedup, the
+    # remaining LLM-data extras and the pretraining-corpus pipeline
     "text_profile_suite",
     "dedup_patterns_suite",
-    # (the corpus-prep family's two slots are re-pinned with
-    # commissions queries in place, so every slot around them sees
-    # the same session state: the table-maintenance time-travel read
-    # and the A3 conditional aggregation, also an agg_patterns_suite
-    # sub)
+    # (the corpus-prep family's two slots and the ANN family's one are
+    # re-pinned with commissions queries in place, so every slot around
+    # them sees the same session state: the table-maintenance
+    # time-travel read, the S10 keyed MERGE sync (also an
+    # export_entities_suite sub) and the A3 conditional aggregation
+    # (also an agg_patterns_suite sub))
     "sink_time_travel_parity",
-    "ann_topk_ivf",
+    "export_merge_upsert",
     "llmdata_extras_suite",
     "pipeline_pretrain_corpus",
     "agg_conditional",
@@ -209,15 +209,12 @@ DRIVER_PRIORITY: tuple[str, ...] = (
 #: Rotation plan if driver slots free up (or the prefix grows): the
 #: next queries to pin are currently driver-"local" only — each
 #: already passes the full local sweep + vanilla rehearsal.
-#:   0. export_merge_upsert (S10 keyed MERGE sync; fingerprinted in
-#:                                 export_entities_suite; re-pin only
-#:                                 if a dedicated row is wanted)
-#:   1. multimodal_png_roundtrip (beyond-§2 extra, also fingerprinted
+#:   0. multimodal_png_roundtrip (beyond-§2 extra, also fingerprinted
 #:                                 in llmdata_extras)
-#:   2. builder_selection_criteria / builder_mode_key_mappings
+#:   1. builder_selection_criteria / builder_mode_key_mappings
 #:                                 (builder outputs beyond the pinned
 #:                                 mode slots; share their caches)
-#:   3. ingest_zip_prefix_summary (evicted r9 — its slot funds
+#:   2. ingest_zip_prefix_summary (evicted r9 — its slot funds
 #:                                 incremental_parity_suite — and
 #:                                 fingerprinted in prep_patterns_suite;
 #:                                 re-pin only if a dedicated row is

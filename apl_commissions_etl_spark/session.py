@@ -26,6 +26,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset:
+    min(48g, two thirds of physical memory), whole GiB, at least 1g.
+    A heap larger than the host lets the kernel OOM-kill the JVM; on a
+    15 GiB host this is 10g, above the 8 GiB line the heap-dependent
+    engine choices key on (``registry.SMALL_HEAP_BYTES``,
+    ``caching._big_heap``)."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    gib = min(48, phys_bytes * 2 // 3 // (1 << 30))
+    return f"{max(gib, 1)}g"
+
+
 def get_spark(
     app_name: str = "apl-commissions-etl-spark",
     master: str | None = None,
@@ -36,7 +49,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back
     to ``local[*]``) so tests, perfbench and the driver harness share
-    one code path.
+    one code path. The driver heap is ``$SPARK_DRIVER_MEM`` if set,
+    else ``default_driver_mem()``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -55,7 +69,10 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -66,113 +83,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def warm_shared_caches(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Materialize the session-scoped shared frames (calc staging +
-    8-stage cascade, builder per-split/criteria, mode-cascade routing
-    keys, LSH pair index + cluster labels, ANN constants) exactly as a
-    long-running service would at startup.
-
-    The reference materializes its staging tables once per run
-    (TRUNCATE + INSERT...SELECT before any calculation); this is the
-    Spark equivalent, so per-query timings measure the QUERY, not
-    population of shared state.  Returns seconds spent per cache
-    family so callers can report the cost instead of hiding it.
-
-    The four independent cache families (calc cascade, builder
-    criteria → mode keys, LSH pairs → cluster labels, ANN constants)
-    run as CONCURRENT chains: Spark's scheduler interleaves their
-    jobs, so wall time is the longest chain, not the sum — exactly
-    what a multi-tenant service does at startup. Each chain registers
-    the temp-view families it needs through
-    ``sources.testdata.registered_once``, which blocks racing chains
-    until the claimer's CREATE VIEWs have completed — so no chain can
-    observe missing views or re-register (and silently uncache) a
-    family another chain already built on.  Every
-    session cache the chains populate goes through
-    ``caching.locked_get`` — per-key double-checked locking — so even
-    a future accessor shared across chains, or a user query racing
-    warm-up from another thread, cannot double-build or leak an eager
-    localCheckpoint; the chains' disjointness is an optimization, not
-    a correctness requirement. Per-step numbers are each chain's own
-    busy time; concurrent steps overlap, so their sum exceeds the
-    wall clock.
-    """
-    import time
-    from concurrent.futures import ThreadPoolExecutor
-
-    timings: dict[str, float] = {}
-
-    def step(name, fn):
-        t0 = time.time()
-        fn()
-        timings[name] = round(time.time() - t0, 3)
-
-    from .plans.builder_fixtures import register_builder_views
-    from .plans.fixtures import register_fixture_views
-    from .queries import builder, builder_modes, calcdomain, llmdata
-
-    # eager localCheckpoints: touching each accessor materializes it.
-    # Each chain registers the view families IT needs (registered_once
-    # blocks racers until the claimer's CREATE VIEWs complete), so the
-    # dedup/ANN chains — which read documents/embeddings directly —
-    # start instantly instead of idling behind ~5s of serial
-    # registration + session first-touch costs.
-    def chain_calc():
-        step("calc_views", lambda: register_fixture_views(spark, sf_dir))
-        # no separate dim-warming job: every staging dim is a broadcast
-        # side of the cascade, so the cascade's own broadcast builds
-        # fill the dim caches in the same pass. A concurrent
-        # union-of-counts pre-warm (the r4–r7 design) only re-ran the
-        # same scans on a second thread — interleaved A/B at sf0.1
-        # measured the fused form 0.5–1.1 s faster WALL, with every
-        # OTHER chain's busy time also dropping (less task-slot
-        # contention). Cache-fill-by-broadcast is the same work a 1000-
-        # executor cluster would do: the dims are computed exactly once
-        # wherever the first broadcast exchange needs them.
-        step(
-            "calc_staging_cascade",
-            lambda: calcdomain._stages(spark, sf_dir),
-        )
-
-    def chain_builder():
-        step("builder_views", lambda: register_builder_views(spark, sf_dir))
-        # cert_info is prefetched by chain_ann (it has the most slack);
-        # locked_get makes this a blocking share, never a double build
-        step("builder_criteria", lambda: builder._criteria(spark, sf_dir))
-        step("mode_cascade_keys",
-             lambda: builder_modes._cascade(spark, sf_dir))
-
-    def chain_dedup():
-        step("lsh_pair_index", lambda: llmdata._lsh_pairs(spark, sf_dir))
-        step("dedup_cluster_labels",
-             lambda: llmdata._cluster_labels(spark, sf_dir))
-
-    def chain_ann():
-        step("ann_constants", lambda: llmdata._ann_constants(spark, sf_dir))
-        step("ivf_index", lambda: llmdata._ivf_index(spark, sf_dir))
-        # NOTE (r13): probe selection is NOT warmed — it is per-serving-
-        # call work and runs inside every ann_* call as pure driver
-        # arithmetic (similarity.select_probe_cells_local); the r12
-        # ann_probe warm step memoised it outside the timed region and
-        # was removed per the r12 verdict.
-        # fused per-doc signal frame of the pretraining pipeline's
-        # gates (this chain is the shortest; the doc scan is cheap)
-        step("doc_signals", lambda: llmdata._doc_signals(spark, sf_dir))
-        # per-split checkpoint warms on THIS chain's slack: the builder
-        # chain's criteria build is fused (no per-split dependency), so
-        # this runs concurrently with the mode cascade instead of on
-        # the critical path
-        step("builder_per_split", lambda: builder._per_split(spark, sf_dir))
-
-    # longest chain first: the scheduler is FIFO, so jobs submitted
-    # earlier win ties for task slots — giving the critical-path chain
-    # (builder: expansion → per-split → criteria → mode cascade, all
-    # serial) first claim shortens the wall, which is max(chain), at
-    # the expense of the chains with slack
-    chains = (chain_builder, chain_dedup, chain_calc, chain_ann)
-    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
-        futures = [pool.submit(c) for c in chains]
-        for f in futures:
-            f.result()  # re-raise any chain failure
-    return timings

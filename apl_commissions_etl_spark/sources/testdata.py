@@ -26,9 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     """Scale-adaptive spread for narrow-split scans (guide §2.5 "input
     skew: one huge unsplittable file ... otherwise repartition
@@ -147,13 +144,12 @@ _VIEW_REGISTRY_LOCK = threading.Lock()
 def needs_registration(spark: SparkSession, family: str, sf_dir: str) -> bool:
     """True exactly once per (session, family, sf_dir); switching sf_dir
     re-registers (and correctly invalidates stale caches).  The
-    get+set is atomic so concurrent warm-up chains can't both claim
+    get+set is atomic so two concurrent callers can't both claim
     the registration slot.
 
     NOTE claim-then-register is NOT safe under concurrency on its own:
     a second chain told "already registered" could race ahead of the
-    claimer's in-flight CREATE VIEW.  Concurrent callers (the warm-up
-    chains) must go through ``registered_once``, which blocks waiters
+    claimer's in-flight CREATE VIEW.  Concurrent callers must go through ``registered_once``, which blocks waiters
     until the claimer's registration body has COMPLETED."""
     key = (spark.sparkContext.applicationId, family)
     with _VIEW_REGISTRY_LOCK:
@@ -177,8 +173,9 @@ def registered_once(
 ) -> None:
     """Run ``register()`` exactly once per (session, family, sf_dir),
     BLOCKING concurrent callers until it has completed — the safe form
-    of the needs_registration claim for warm-up chains that register
-    their own view families concurrently instead of serially up front.
+    of the needs_registration claim for threads that register their
+    own view families concurrently (the fixture modules call it for
+    every family).
     A failed registration releases the claim so a later call retries;
     a call with a NEW sf_dir re-registers (same invalidation contract
     as ``needs_registration``)."""

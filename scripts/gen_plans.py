@@ -105,15 +105,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "decode/feature pass must have (pure map, no exchange).",
     ),
     (
-        "pipeline_rag_retrieval",
-        ["BroadcastHashJoin", "Window"],
-        ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
-        "RAG serving in one plan: the query batch broadcasts into the "
-        "bucketed index side (one hash join, no per-query driver "
-        "loop), the top-k window and the context string_agg share the "
-        "qid exchange, and doc hydration is a plain equi-join.",
-    ),
-    (
         "text_bpe_train",
         [],
         ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
@@ -164,31 +155,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "in the plan, the lossless alternative to a df cap.",
     ),
     (
-        "ann_topk_ivfpq",
-        ["TakeOrderedAndProject"],
-        ["CartesianProduct", "BatchEvalPython", "SortMergeJoin",
-         "BroadcastHashJoin", "Exchange"],
-        "The IVF-PQ read path: nprobe cell membership is a FILTER "
-        "directly on the inverted-index scan (it prunes ~3/4 of rows "
-        "before any distance math — tests/test_plans.py asserts the "
-        "filter sits below the ADC projection), ADC scoring is a "
-        "codegen projection of constant-folded table lookups, and "
-        "both the 20-candidate shortlist and the exact top-10 are "
-        "TakeOrdered — no join, no exchange, no Python anywhere.",
-    ),
-    (
-        "ann_topk_ivf_batch",
-        ["BroadcastHashJoin", "WindowGroupLimit"],
-        ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
-        "Batch IVF serving with zero per-query driver work: the "
-        "(query x 16-centroid) probe ranking is a tiny broadcast "
-        "nested-loop cross resolved by one windowed top-4, the probe "
-        "relation broadcast-hash-joins into the cell-partitioned "
-        "inverted index (the index side never shuffles), and the "
-        "per-qid top-10 window runs as a WindowGroupLimit — partial "
-        "top-k on the map side before the qid exchange.",
-    ),
-    (
         "audit_join_preflight",
         ["HashAggregate"],
         ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
@@ -219,16 +185,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "JVM-side hash joins; no all-pairs comparison in the plan.",
     ),
     (
-        "ann_incremental_pq_parity",
-        ["BroadcastHashJoin"],
-        ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
-        "IVF-PQ codes maintenance: the published codes table anti-"
-        "joins the broadcast affected-key set (delete arm), the delta "
-        "re-encodes map-side against frozen literal codebooks and "
-        "re-assigns cells against frozen literal centroids — the only "
-        "joins are the broadcast anti-join and the union's exchange.",
-    ),
-    (
         "pipeline_incremental_parity",
         ["BroadcastHashJoin"],
         ["CartesianProduct", "BatchEvalPython"],
@@ -250,16 +206,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "broadcast semi-join and re-folds through the sanctioned "
         "sorted mapInPandas stage — only the touched groups ever "
         "reach Python, everything else is the baseline union arm.",
-    ),
-    (
-        "ann_reindex_recall_report",
-        ["BroadcastHashJoin", "TakeOrderedAndProject"],
-        ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
-        "Retrain recall-delta report (r10): both index versions probe "
-        "through the partition-pruned codes scan, ADC scores from "
-        "constant-folded literal tables, each top-k is a TakeOrdered, "
-        "and the 20-row shortlists broadcast into the raw-vector "
-        "fetch — the vector table never shuffles for either version.",
     ),
     (
         "calc_skewed_group_parity",

@@ -59,7 +59,7 @@ cold plan shapes for exactly those flagships.
 
 
 #: headline set: the heavy operator classes (scan-agg, shuffle join,
-#: window, domain calc, builder, consolidation, export, dedup, ANN,
+#: window, domain calc, builder, consolidation, export, dedup,
 #: multimodal, audit) without running every registry entry
 HEADLINE = [
     "agg_pricing_summary",
@@ -81,21 +81,12 @@ HEADLINE = [
     "dedup_incremental_batch",
     "dedup_simhash_hamming",
     "text_bpe_train",
-    "pipeline_rag_retrieval",
     "cdc_apply_changelog",
     "text_chunk_overlap",
     "multimodal_codec_roundtrip",
     "multimodal_image_dedup_dhash",
     "multimodal_image_dedup_hamming",
     "pipeline_pretrain_corpus",
-    "ann_topk_bruteforce",
-    "ann_topk_ivf",
-    "ann_topk_ivfpq",
-    "ann_topk_ivfpq_residual",
-    "ann_topk_ivf_batch",
-    "ann_topk_ivf_partitioned",
-    "ann_topk_ivfpq_partitioned",
-    "ann_recall_report",
     "stream_session_window",
     "seq_asof_attribution",
     "win_sessionize",
@@ -118,15 +109,10 @@ EXTRA = [
     "calc_incremental_trace_parity",
     "calc_incremental_broker_trace_parity",
     "pipeline_incremental_parity",
-    "ann_incremental_index_parity",
-    "ann_incremental_pq_parity",
     "report_incremental_period_close_parity",
-    # r10: consolidation-fold increment, ANN retrain lifecycle, and the
-    # group-skew stress twins (all one-shot by design, like the rest of
-    # the maintenance family)
+    # r10: consolidation-fold increment and the group-skew stress twins
+    # (all one-shot by design, like the rest of the maintenance family)
     "consolidate_incremental_parity",
-    "ann_reindex_parity",
-    "ann_reindex_recall_report",
     "calc_skewed_group_parity",
     "builder_skewed_group_parity",
     # r11: multi-table atomic publish (batch + streamed) + time travel

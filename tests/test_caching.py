@@ -1,6 +1,7 @@
 """caching.locked_get: the per-key locked memoization every session
-cache accessor routes through (warm-up chains run concurrently, so
-double-build races must be structurally impossible), plus the table-
+cache accessor routes through (threads of one session may reach
+one accessor at once, so double-build races must be structurally
+impossible), plus the table-
 handle split-count memo."""
 
 from __future__ import annotations

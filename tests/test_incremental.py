@@ -150,53 +150,6 @@ def test_pipeline_incremental_covers_all_five_outputs(spark, sf_dir):
     assert dup == 0
 
 
-def test_ann_pq_incremental_moves_cells_and_reencodes(spark, sf_dir):
-    """Amended vectors (reversed embeddings) must be able to change
-    BOTH cell and code — the cross-partition group-replace the
-    within-partition upsert cannot express — and the merged index must
-    equal the full rebuild over the final embedding state."""
-    from apl_commissions_etl_spark.queries import llmdata
-    from apl_commissions_etl_spark.registry import all_queries
-
-    qs = all_queries()
-    merged = qs["ann_incremental_pq_parity"].spark_fn(spark, sf_dir)
-    base = spark.read.parquet(
-        llmdata._ivfpq_table_path(spark, sf_dir)
-    ).select(
-        "vec_id",
-        F.col("cell").cast("long").alias("base_cell"),
-        F.concat(
-            *[
-                F.col(f"code{s}").cast("string")
-                for s in range(llmdata._PQ_SUBS)
-            ]
-        ).alias("base_code"),
-    )
-    amended = merged.filter(F.col("vec_id") % 11 == 5).join(
-        base, "vec_id"
-    )
-    moved = amended.filter(F.col("cell") != F.col("base_cell")).count()
-    recoded = amended.filter(F.col("pq_code") != F.col("base_code")).count()
-    assert moved > 0, "no amended vector changed cell: fixture too weak"
-    assert recoded > 0, "no amended vector re-encoded: fixture too weak"
-    # tombstones: retired ids existed in the stored base and must be
-    # absent from the maintained index
-    n_retired_in_base = base.filter(F.col("vec_id") % 13 == 4).count()
-    assert n_retired_in_base > 0, "no retired id in base: fixture too weak"
-    assert merged.filter(F.col("vec_id") % 13 == 4).count() == 0
-    # untouched ids keep their stored rows verbatim
-    untouched = merged.filter(
-        (F.col("vec_id") % 7 != 2)
-        & (F.col("vec_id") % 11 != 5)
-        & (F.col("vec_id") % 13 != 4)
-    ).join(base, "vec_id")
-    drift = untouched.filter(
-        (F.col("cell") != F.col("base_cell"))
-        | (F.col("pq_code") != F.col("base_code"))
-    ).count()
-    assert drift == 0
-
-
 def test_consolidate_incremental_equals_full_refold(spark, sf_dir):
     """The group-propagation re-fold must equal the full fold exactly,
     and the baseline must be genuinely stale for amended groups (the
@@ -266,65 +219,6 @@ def test_consolidate_incremental_equals_full_refold(spark, sf_dir):
         "no baseline retained run vanished under the re-fold: the "
         "fixture never exercises the group-replace delete arm"
     )
-
-
-def test_ann_reindex_publishes_v2_alongside_v1(spark, sf_dir):
-    """The retrain must be a real lifecycle event: the v2 table is
-    published to its own directory with the _LATEST pointer flipped
-    only after the data write, the v1 index stays untouched and
-    readable, and the retrained index genuinely differs from the
-    maintained one (new centroid space => moved cells + new codes)."""
-    import os
-
-    from apl_commissions_etl_spark.queries import llmdata
-    from apl_commissions_etl_spark.registry import all_queries
-
-    qs = all_queries()
-    new = qs["ann_reindex_parity"].spark_fn(spark, sf_dir)
-    old = qs["ann_incremental_pq_parity"].spark_fn(spark, sf_dir)
-
-    v2_path = llmdata._ivfpq_v2_table_path(spark, sf_dir)
-    v1_path = llmdata._ivfpq_table_path(spark, sf_dir)
-    assert v1_path != v2_path
-    # pointer flipped after the data write
-    with open(os.path.join(os.path.dirname(v2_path), "_LATEST")) as f:
-        assert f.read() == os.path.basename(v2_path)
-    # old index untouched and readable after the publish
-    assert spark.read.parquet(v1_path).count() > 0
-
-    # same survivor key set, genuinely retrained content
-    old_n, new_n = old.count(), new.count()
-    assert old_n == new_n > 0
-    j = (
-        old.withColumnRenamed("cell", "old_cell")
-        .withColumnRenamed("pq_code", "old_code")
-        .join(new, "vec_id")
-    )
-    assert j.count() == old_n, "retrain changed the survivor key set"
-    moved = j.filter(F.col("old_cell") != F.col("cell")).count()
-    recoded = j.filter(F.col("old_code") != F.col("pq_code")).count()
-    assert moved > 0, "no vector changed cell under the new centroids"
-    assert recoded > 0, "no vector re-encoded under the new codebooks"
-
-
-def test_ann_reindex_recall_report_compares_both_versions(spark, sf_dir):
-    """One row per index version, both probed with the same exact
-    baseline: n_returned is the full top-10 for each, recall in [0,1],
-    and the report covers exactly the two lifecycle versions."""
-    from apl_commissions_etl_spark.registry import all_queries
-
-    qs = all_queries()
-    rows = {
-        r["index_version"]: r
-        for r in qs["ann_reindex_recall_report"].spark_fn(
-            spark, sf_dir
-        ).collect()
-    }
-    assert set(rows) == {"v1_maintained", "v2_retrained"}
-    for r in rows.values():
-        assert r["n_returned"] == 10
-        assert 0 <= r["n_matched"] <= 10
-        assert abs(r["recall_at_10"] - r["n_matched"] / 10.0) < 1e-12
 
 
 def test_period_close_incremental_is_not_a_rebuild(spark, sf_dir):

@@ -1,44 +1,11 @@
 """Tests for the LLM-data operators that the DuckDB oracle can't
-cover: approximate ANN recall, LSH candidate soundness, multimodal
+cover: LSH candidate soundness, connected components, multimodal
 batch plumbing."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from apl_commissions_etl_spark.operators import dedup, multimodal, similarity
+from apl_commissions_etl_spark.operators import dedup, multimodal
 from apl_commissions_etl_spark.sources.testdata import load_table
-
-
-def _query_vec(emb):
-    return F.lit(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    ).cast("array<double>")
-
-
-def test_ann_lsh_results_subset_of_bucket_and_sound(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = _query_vec(emb)
-    exact = similarity.cosine_topk_bruteforce(emb, q, k=10).collect()
-    approx = similarity.cosine_topk_lsh(emb, q, k=10, planes=8).collect()
-    # every approximate hit must carry the true cosine (scores match
-    # the exact computation for the same vec_id)
-    exact_scores = {r.vec_id: r.cosine for r in exact}
-    all_scores = {
-        r.vec_id: r.cosine
-        for r in emb.select(
-            "vec_id", similarity.cosine(F.col("embedding"), q).alias("cosine")
-        ).collect()
-    }
-    for r in approx:
-        assert abs(all_scores[r.vec_id] - r.cosine) < 1e-12
-    # the query vector itself lives in its own bucket -> rank 1
-    assert approx and approx[0].vec_id == 0
-    # sanity recall: bucketing 8 planes on 64-dim data should still
-    # return a nonempty, correctly-ordered list
-    cosines = [r.cosine for r in approx]
-    assert cosines == sorted(cosines, reverse=True)
-    assert exact_scores  # brute force nonempty
 
 
 def test_minhash_lsh_candidates_superset_of_high_jaccard(spark, sf_dir):
@@ -116,33 +83,6 @@ def test_png_payload_ending_in_nul_roundtrips_exactly(spark, sf_dir):
         raw = t.encode("utf-8")
         assert out[i].n_bytes == len(raw)
         assert out[i].content_hash == hashlib.sha256(raw).hexdigest()
-
-
-def test_ivf_recall_vs_bruteforce(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from apl_commissions_etl_spark.operators import similarity
-    from apl_commissions_etl_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 7).select("embedding").collect()[0][0]
-    qcol = F.lit(list(qvec)).cast("array<double>")
-    exact = {r.vec_id for r in similarity.cosine_topk_bruteforce(emb, qcol, k=10).collect()}
-    cents = similarity.ivf_centroids(emb, n_centroids=16)
-    approx = {
-        r.vec_id
-        for r in similarity.cosine_topk_ivf(emb, qcol, cents, k=10, nprobe=8).collect()
-    }
-    # recall@10 with half the cells probed should be high on this data
-    assert len(exact & approx) >= 5
-    # probing ALL cells degenerates to exact search
-    full = {
-        r.vec_id
-        for r in similarity.cosine_topk_ivf(
-            emb, qcol, cents, k=10, nprobe=16
-        ).collect()
-    }
-    assert full == exact
 
 
 def test_multimodal_resize_and_frame_sampling(spark, sf_dir):
@@ -381,27 +321,6 @@ def test_connected_components_matches_union_find(spark):
     check()
 
 
-def test_ivf_assign_join_carrier_matches_literal(spark, sf_dir):
-    """The broadcast-join cell assignment (64K-centroid carrier) must
-    agree with the literal-array assignment cell for cell."""
-    from apl_commissions_etl_spark.operators import similarity
-    from apl_commissions_etl_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = similarity.ivf_centroids(emb, n_centroids=8)
-    lit = {
-        r.vec_id: r.cell
-        for r in similarity.ivf_assign(emb, cents).select("vec_id", "cell").collect()
-    }
-    jn = {
-        r.vec_id: r.cell
-        for r in similarity.ivf_assign_via_join(emb, cents)
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert lit == jn and len(lit) == emb.count()
-
-
 def test_embedding_lsh_subset_and_recall(spark, sf_dir):
     """The banded sign-LSH near-dup pairs must be a strict SUBSET of
     the brute-force pairs at the same threshold (verify-filtered), with
@@ -517,80 +436,6 @@ def test_prefix_filter_finds_every_qualifying_pair(spark):
             expected.add((a, b))
     assert got == expected
     assert (1, 4) in got  # the exact dup survived
-
-
-def test_ivfpq_rerank_exact_and_shortlist_sound(spark, sf_dir):
-    """The IVF-PQ read path's exact_dist column must equal the true
-    squared L2 (1e-9 grid) to the query for every returned id, the
-    rows must come from probed cells only, and the final ordering is
-    (exact, vec_id) — i.e. the PQ stage only shapes the SHORTLIST,
-    never the reported exact distances."""
-    from pyspark.sql import functions as F
-
-    from apl_commissions_etl_spark.queries import llmdata
-    from apl_commissions_etl_spark.registry import all_queries
-    from apl_commissions_etl_spark.sources.testdata import load_table
-
-    rows = all_queries()["ann_topk_ivfpq"].spark_fn(spark, sf_dir).collect()
-    assert len(rows) == 10
-    assert [ (r.exact_dist, r.vec_id) for r in rows ] == sorted(
-        (r.exact_dist, r.vec_id) for r in rows
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec, _ = llmdata._ann_constants(spark, sf_dir)
-    truth = {
-        r.vec_id: r.d
-        for r in emb.select(
-            "vec_id",
-            F.expr(
-                "aggregate(zip_with(transform(embedding, x -> CAST(x AS "
-                "DOUBLE)), "
-                + llmdata.similarity._vec_sql([float(x) for x in qvec])
-                + ", (x, y) -> CAST(round((x - y) * (x - y) * 1e9) AS "
-                "BIGINT)), 0L, (acc, t) -> acc + t)"
-            ).alias("d"),
-        ).collect()
-    }
-    cells = {
-        r.vec_id: r.cell
-        for r in llmdata._ivf_index(spark, sf_dir)
-        .select("vec_id", "cell")
-        .collect()
-    }
-    probed = {r.cell for r in rows}
-    assert len(probed) <= 4
-    for r in rows:
-        assert r.vec_id != 0
-        assert abs(r.exact_dist - truth[r.vec_id] / 1e9) < 1e-12
-        assert cells[r.vec_id] == r.cell
-        # ADC is an 8-lookup approximation, but on the same 1e-9 grid
-        # it must be non-negative and finite
-        assert r.adc_dist >= 0.0
-
-
-def test_residual_pq_reduces_adc_error(spark, sf_dir):
-    """The residual codebook's whole point: quantizing residuals to
-    the coarse centroid spends the same 8x4 code budget on a far
-    smaller-energy signal, so the ADC approximation error must come
-    out well below the raw-vector PQ's on the same shortlist (measured
-    ~8x smaller at sf0.001). Also pins the structural contract shared
-    with ann_topk_ivfpq: exact re-rank ordering and probed-cell rows."""
-    from apl_commissions_etl_spark.registry import all_queries
-
-    qs = all_queries()
-    raw = qs["ann_topk_ivfpq"].spark_fn(spark, sf_dir).collect()
-    res = qs["ann_topk_ivfpq_residual"].spark_fn(spark, sf_dir).collect()
-    assert len(res) == 10
-
-    def mean_err(rows):
-        return sum(abs(r.adc_dist - r.exact_dist) for r in rows) / len(rows)
-
-    assert mean_err(res) < mean_err(raw) / 2
-    assert [(r.exact_dist, r.vec_id) for r in res] == sorted(
-        (r.exact_dist, r.vec_id) for r in res
-    )
-    assert len({r.cell for r in res}) <= 4
-    assert all(r.vec_id != 0 for r in res)
 
 
 def test_hamming_banded_pairs_exact_within_bound(spark):
@@ -766,66 +611,3 @@ def test_auto_cc_dispatches_and_survives_long_chains(spark):
     assert all(labels[i] == (1, 64) for i in range(1, 65))
 
 
-def test_incremental_index_parity_moves_cells(spark, sf_dir):
-    """The re-embedded delta must actually MOVE some vectors across
-    cells (otherwise the cross-partition group-replace path is
-    vacuous), and unaffected ids keep their stored assignment."""
-    from apl_commissions_etl_spark.queries import llmdata
-    from apl_commissions_etl_spark.registry import all_queries
-
-    merged = all_queries()["ann_incremental_index_parity"].spark_fn(
-        spark, sf_dir
-    )
-    base = llmdata._ivf_index(spark, sf_dir).select(
-        "vec_id", F.col("cell").alias("old_cell")
-    )
-    joined = merged.join(base, "vec_id")
-    moved = joined.filter(F.col("cell") != F.col("old_cell"))
-    assert moved.count() > 0
-    assert moved.filter(
-        ~((F.col("vec_id") % 11 == 5) | (F.col("vec_id") % 7 == 2))
-    ).count() == 0
-
-
-def test_pq_lit_dist_python_fold_matches_engine(spark, sf_dir):
-    """_pq_lit_dist_sql folds the literal ADC-table distances on the
-    driver (r13); the integer must equal what the engine's own
-    CAST(round((qx-cx)^2*1e9) AS BIGINT) tree evaluates to, for every
-    table entry of both PQ families (plain + residual), because those
-    literals feed oracle-hashed outputs."""
-    from apl_commissions_etl_spark.queries import llmdata
-
-    qvec, _ = llmdata._ann_constants(spark, sf_dir)
-    qvec = [float(x) for x in qvec]
-    books = llmdata._pq_codebooks(spark, sf_dir)
-    rbooks, cell_vecs = llmdata._pq_residual_books(spark, sf_dir)
-    probe, _ = llmdata._probe_cells(spark, sf_dir)
-
-    def tree_sql(q_sub, cent):  # the pre-r13 engine-folded form
-        terms = []
-        for qx, cx in zip(q_sub, cent):
-            x = f"(CAST('{qx!r}' AS DOUBLE) - CAST('{cx!r}' AS DOUBLE))"
-            terms.append(f"CAST(round({x} * {x} * 1e9) AS BIGINT)")
-        return "(" + " + ".join(terms) + ")"
-
-    pairs = []
-    for s in range(llmdata._PQ_SUBS):
-        q_sub = qvec[s * 8 : s * 8 + 8]
-        for k in range(llmdata._PQ_K):
-            pairs.append((q_sub, books[s][k]))
-        for c in probe:
-            q_res = [
-                qvec[s * 8 + i] - cell_vecs[c][s * 8 + i] for i in range(8)
-            ]
-            for k in range(llmdata._PQ_K):
-                pairs.append((q_res, rbooks[s][k]))
-    engine_row = spark.range(1).select(
-        *[
-            F.expr(tree_sql(q, c)).alias(f"v{i}")
-            for i, (q, c) in enumerate(pairs)
-        ]
-    ).collect()[0]
-    for i, (q, c) in enumerate(pairs):
-        folded = llmdata._pq_lit_dist_sql(q, c)
-        assert folded.endswith("L")
-        assert int(folded[:-1]) == engine_row[f"v{i}"]

@@ -12,10 +12,10 @@ import pytest
 from apl_commissions_etl_spark.registry import all_queries
 
 #: numerically / orderingly sensitive representatives: float aggs,
-#: money rounding, percent banding, windows over ties, hash ids, a
-#: self-trained model, the fused text metrics, and the split-config
-#: builder mode, whose (GroupId, ProposalId) grouping must not depend
-#: on how the shuffle splits a group
+#: money rounding, percent banding, windows over ties, hash ids, the
+#: fused text metrics, and the split-config builder mode, whose
+#: (GroupId, ProposalId) grouping must not depend on how the shuffle
+#: splits a group
 SENSITIVE = [
     "agg_pricing_summary",
     "agg_conformance_banding",
@@ -23,10 +23,6 @@ SENSITIVE = [
     "builder_split_hierarchies",
     "text_profile_suite",
     "seq_anomaly_zscore",
-    # round-3 additions: scaled-int PQ distances, windowed RAG context
-    # assembly
-    "ann_pq_codes",
-    "pipeline_rag_retrieval",
     "builder_mode_split_configs",
 ]
 

@@ -21,14 +21,9 @@ from apl_commissions_etl_spark.registry import all_queries
 #: queries whose plan may contain a true cartesian, each bounded by
 #: construction:
 #: - dedup_embedding_cosine: the labeled brute-force all-pairs baseline
-#:   (the LSH/IVF variants are the scale path);
-#: - ann_topk_*: the probe side is a literal query vector / a
-#:   16-row centroid list (constant-size).
+#:   (the LSH variant is the scale path).
 CARTESIAN_OK = {
     "dedup_embedding_cosine",
-    "ann_topk_bruteforce",
-    "ann_topk_lsh",
-    "ann_topk_ivf",
 }
 
 #: queries allowed to run Python batch stages (Arrow mapInPandas /
@@ -61,6 +56,9 @@ for _suite, (_ref, _subs) in SUITE_DEFS.items():
 
 def test_registry_plan_invariants(spark, sf_dir):
     qs = all_queries()
+    # an allow-list entry whose query is gone would pass silently
+    stale = (CARTESIAN_OK | PANDAS_OK) - qs.keys()
+    assert not stale, f"allow-lists name unregistered queries: {sorted(stale)}"
     bad: dict[str, str] = {}
     for name, q in qs.items():
         df = q.spark_fn(spark, sf_dir)

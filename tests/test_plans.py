@@ -91,95 +91,3 @@ def test_dim_filter_prunes_before_join(spark, sf_dir):
     assert "l_extendedprice" in opt and "> 0.0" in opt
 
 
-def test_ivfpq_cell_filter_executes_before_adc_scoring(spark, sf_dir):
-    """The IVF-PQ read path's 100 TB contract: the nprobe cell filter
-    prunes the index scan BEFORE any PQ/ADC expression evaluates, the
-    shortlist is a TakeOrdered (no full sort / no exchange of scored
-    rows), and no join or Python appears anywhere."""
-    from apl_commissions_etl_spark.registry import all_queries
-
-    df = all_queries()["ann_topk_ivfpq"].spark_fn(spark, sf_dir)
-    plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan
-    for bad in ("CartesianProduct", "BatchEvalPython", "SortMergeJoin",
-                "BroadcastHashJoin"):
-        assert bad not in plan
-    # printed top-down (leaves last): the ADC projection (element_at
-    # table lookups) must sit ABOVE the Filter line holding the cell
-    # IN-list, i.e. the filter runs first on the way up from the scan
-    lines = plan.splitlines()
-    adc_line = next(
-        i for i, ln in enumerate(lines) if "element_at" in ln
-    )
-    cell_filter_line = next(
-        i for i, ln in enumerate(lines)
-        if "Filter" in ln and "cell#" in ln and " IN " in ln
-    )
-    assert adc_line < cell_filter_line, (
-        "cell filter must be closer to the scan than the ADC scoring"
-    )
-
-
-def test_ivf_partitioned_table_probe_prunes_partitions(spark, sf_dir):
-    """The cell-partitioned index table delivers the 100 TB claim: the
-    nprobe filter resolves as PARTITION PRUNING on the scan — the probe
-    lists only the probed cells' directories (PartitionFilters set,
-    DataFilters empty: no per-row cell predicate even runs), and only
-    nprobe of the 16 cell partitions are read."""
-    from apl_commissions_etl_spark.registry import all_queries
-
-    df = all_queries()["ann_topk_ivf_partitioned"].spark_fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    scan = next(
-        ln for ln in plan.splitlines() if "FileScan parquet" in ln
-    )
-    assert "PartitionFilters: [cell" in scan
-    assert "DataFilters: []" in scan
-    # the pruning IN-list holds <= nprobe of the 16 cells
-    import re
-
-    inlist = re.search(r"PartitionFilters: \[cell#\d+ IN \(([^)]*)\)", scan)
-    assert inlist, f"expected an IN-list partition filter, got: {scan}"
-    assert 1 <= len(inlist.group(1).split(",")) <= 4
-    # and the table genuinely has more cells than nprobe to prune away
-    from apl_commissions_etl_spark.queries.llmdata import _ivf_table_path
-
-    all_cells = {
-        r.cell
-        for r in spark.read.parquet(_ivf_table_path(spark, sf_dir))
-        .select("cell")
-        .distinct()
-        .collect()
-    }
-    assert len(all_cells) > 4, "fixture must have more cells than nprobe"
-
-
-def test_ivfpq_partitioned_codes_probe_prunes_and_fetches_keyed(
-    spark, sf_dir
-):
-    """The IVF-PQ CODES table completes the serving layout: the probe's
-    cell filter resolves as partition pruning on the codes scan (no
-    per-row cell predicate), the index scan reads ONLY vec_id + codes
-    (8 small ints — never a raw vector), and the exact re-rank reaches
-    the vector table through a broadcast of the 20-row shortlist."""
-    import re
-
-    from apl_commissions_etl_spark.registry import all_queries
-
-    df = all_queries()["ann_topk_ivfpq_partitioned"].spark_fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-    code_scan = next(s for s in scans if "code0" in s)
-    assert "PartitionFilters: [cell" in code_scan
-    # (DataFilters carries the vec_id != 0 predicate — only the CELL
-    # filter must resolve at partition level)
-    inlist = re.search(
-        r"PartitionFilters: \[cell#\d+ IN \(([^)]*)\)", code_scan
-    )
-    assert inlist, f"expected an IN-list partition filter, got: {code_scan}"
-    assert 1 <= len(inlist.group(1).split(",")) <= 4
-    # the codes scan must not read the raw vector column
-    assert "embedding" not in code_scan.split("ReadSchema")[-1]
-    # shortlist side broadcasts; the vector table never shuffles
-    assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan

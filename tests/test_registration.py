@@ -1,4 +1,4 @@
-"""registered_once: the blocking-once guard that lets warm-up chains
+"""registered_once: the blocking-once guard that lets threads
 register their own view families concurrently — waiters must never
 proceed before the claimer's registration body has COMPLETED (the bare
 needs_registration claim is claim-then-register and unsafe under

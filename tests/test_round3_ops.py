@@ -1,5 +1,5 @@
-"""Property tests for the round-3 operators: PQ self-reconstruction,
-BPE merge learning on a known corpus, CDC last-writer-wins."""
+"""Property tests for the round-3 operators: BPE merge learning on a
+known corpus, CDC last-writer-wins."""
 
 from __future__ import annotations
 
@@ -47,31 +47,6 @@ def _live_plan(plan: str) -> str:
     return "\n".join(out)
 
 
-
-
-def test_pq_seed_vectors_reconstruct_exactly(spark, sf_dir):
-    """The codebooks ARE the subvectors of vec_id 0-3, so those four
-    vectors must quantize with zero reconstruction error and code
-    digits equal to their own id."""
-    rows = {
-        r["vec_id"]: r
-        for r in _q("ann_pq_codes", spark, sf_dir)
-        .filter(F.col("vec_id") < 4)
-        .collect()
-    }
-    for vid in range(4):
-        assert rows[vid]["recon_err"] == 0.0
-        assert rows[vid]["pq_code"] == str(vid) * 8
-
-
-def test_pq_adc_ranks_by_quantized_distance(spark, sf_dir):
-    rows = _q("ann_pq_adc_topk", spark, sf_dir).collect()
-    assert len(rows) == 10
-    exacts = [r["exact_dist"] for r in rows]
-    assert exacts == sorted(exacts)
-    assert all(r["adc_dist"] >= 0 for r in rows)
-
-
 def test_bpe_merges_reduce_corpus_tokens(spark, sf_dir):
     rows = {r["round"]: r for r in _q("text_bpe_train", spark, sf_dir).collect()}
     t0, t1, t2 = (rows[i]["corpus_tokens"] for i in range(3))
@@ -80,7 +55,6 @@ def test_bpe_merges_reduce_corpus_tokens(spark, sf_dir):
     assert t1 == t0 - rows[1]["pair_count"]
     assert t2 == t1 - rows[2]["pair_count"]
     assert rows[1]["pair_count"] >= rows[2]["pair_count"] > 0
-
 
 
 def test_cdc_tombstones_drop_keys(spark, sf_dir):

@@ -1,0 +1,19 @@
+"""get_spark's default driver heap: min(48g, two thirds of physical
+memory), so a session started without SPARK_DRIVER_MEM never asks for a
+heap larger than the host. No JVM is started."""
+
+from __future__ import annotations
+
+from apl_commissions_etl_spark.session import default_driver_mem
+
+GIB = 1 << 30
+
+
+def test_default_driver_mem_is_two_thirds_of_host_capped_at_48g():
+    assert default_driver_mem(4 * GIB) == "2g"
+    assert default_driver_mem(15 * GIB) == "10g"
+    assert default_driver_mem(256 * GIB) == "48g"
+    # never below 1g, even on a host too small to run the engine
+    assert default_driver_mem(GIB) == "1g"
+    # reads the host's memory when no total is given
+    assert default_driver_mem().endswith("g")
