@@ -6,8 +6,9 @@ Layout:
     schemas     -- declared StructTypes for every pipeline layer
     functions/  -- scalar/cleaning/hashing/text expression helpers
     sources/    -- readers (csv header-sniff, testdata parquet) and sinks
-    operators/  -- reusable relational operators (band joins, argmax,
-                   dedup families, vector math, window patterns)
+    operators/  -- reusable relational operators (as-of joins, skew
+                   salting, consolidation fold, exports, signature
+                   dedup, multimodal codecs)
     plans/      -- the domain pipeline: prep -> dims -> calc -> outputs
     streaming/  -- Structured Streaming surface over the events table
 """

@@ -1,3 +1,3 @@
-from . import dedup, multimodal, similarity, textanalysis
+from . import dedup, multimodal
 
-__all__ = ["dedup", "multimodal", "similarity", "textanalysis"]
+__all__ = ["dedup", "multimodal"]

@@ -1,299 +1,21 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
-SimHash, embedding-cosine.
+"""Near-duplicate clustering operators for fixed-width bit-string
+signatures: the banded Hamming pair join and connected components.
 
 Scale design (100 TB):
-- exact dedup = hash-groupBy on a fingerprint -- one shuffle on a
-  32-hex key, heavily combinable map-side;
-- n-gram Jaccard / MinHash avoid the O(n²) all-pairs comparison:
-  candidate pairs come from an equi-join on shingle / LSH-band keys
-  (shuffle on the band key), and only candidates get verified;
-- every hash is MD5/SHA of deterministic strings -- reproducible
-  across engines, partitions and runs (no JVM hashCode, no seed
-  drift), which also makes the operators DuckDB-oracle-checkable.
+- the banded self-join avoids the O(n²) all-pairs comparison:
+  candidate pairs come from an equi-join on band keys (shuffle on the
+  band key), and only candidates get their Hamming distance verified;
+- components come from iterative min-label propagation or star
+  contraction over the sparse pair graph, each round checkpointed;
+- every signature is derived from deterministic bytes, so the
+  operators are reproducible across engines, partitions and runs,
+  which also makes them DuckDB-oracle-checkable.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from .textanalysis import fingerprint_bow, normalize_text
-
-
-def word_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """Distinct word n-gram shingles, one row per (id, shingle).
-
-    The token array is materialized as a projected column FIRST:
-    inlining ``split(normalize(...))`` into the per-shingle lambda
-    makes Catalyst re-evaluate the split O(tokens*n) times per row
-    (measured 10x slower at sf0.1)."""
-    toks = df.select(F.col(id_col), F.split(normalize_text(text_col), " ").alias("toks"))
-    idx = F.sequence(F.lit(1), F.greatest(F.size("toks") - (n - 1), F.lit(0)))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(F.col("toks"), i + off) for off in range(n)]
-        ),
-    )
-    return (
-        toks.select(F.col(id_col), F.explode(grams).alias("shingle"))
-        .distinct()
-    )
-
-
-def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep one canonical row (min id) per bag-of-words fingerprint;
-    report group size. Hash-groupBy: one combinable shuffle."""
-    fp = df.select(
-        F.col(id_col), fingerprint_bow(text_col).alias("fingerprint")
-    )
-    return fp.groupBy("fingerprint").agg(
-        F.min(id_col).alias("canonical_id"),
-        F.count(F.lit(1)).alias("n_dups"),
-    )
-
-
-def _pair_jaccard(
-    shingles: DataFrame, id_col: str, threshold: float | None = None
-) -> DataFrame:
-    """All candidate pairs sharing >= 1 shingle with exact Jaccard.
-    The shingle equi-join IS the candidate generator -- no cartesian.
-
-    The threshold (when given) is applied to the UNROUNDED ratio; the
-    projected ``jaccard`` column is rounded to 6 dp for cross-engine
-    value stability. Filtering on the rounded value would admit pairs
-    whose true jaccard sits in [t - 5e-7, t) — wrong, and a mismatch
-    against any oracle that filters the raw ratio."""
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = shingles.select(F.col(id_col).alias("id_a"), "shingle")
-    b = shingles.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
-    raw = (
-        F.col("inter")
-        * F.lit(1.0)
-        / (F.col("na") + F.col("nb") - F.col("inter"))
-    )
-    out = inter.join(na, "id_a").join(nb, "id_b")
-    if threshold is not None:
-        out = out.filter(raw >= threshold)
-    return out.select(
-        "id_a",
-        "id_b",
-        F.round(raw, 6).cast("double").alias("jaccard"),
-    )
-
-
-def frequent_shingles(shingles: DataFrame, max_df: int) -> DataFrame:
-    """Shingles whose document frequency exceeds ``max_df`` — the
-    'stop-shingles'. A shingle shared by d documents contributes
-    O(d²) rows to the candidate self-join, so one boilerplate phrase
-    shared by a million documents would single-handedly produce 10¹²
-    candidate pairs. The heavy-hitter set is tiny by definition
-    (few keys can exceed a high df), hence broadcastable."""
-    return (
-        shingles.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("shingle")
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = None,
-) -> DataFrame:
-    """Near-duplicate pairs by word-n-gram Jaccard >= threshold.
-
-    ``max_df`` guards the candidate join against hot shingles:
-    candidates come from the CAPPED shingle set (stop-shingles with
-    df > max_df dropped before the self-join, bounding any one
-    shingle's contribution to O(max_df²) pairs), while the Jaccard
-    itself is verified against the FULL shingle sets via
-    array_intersect — so surviving pairs score exactly as uncapped.
-    Only pairs whose every shared shingle is a stop-shingle are lost,
-    and such pairs are boilerplate collisions, not near-duplicates."""
-    sh = word_shingles(df, id_col, text_col, n)
-    if max_df is None:
-        return _pair_jaccard(sh, id_col, threshold)
-    capped = sh.join(F.broadcast(frequent_shingles(sh, max_df)), "shingle", "left_anti")
-    cand = (
-        capped.select(F.col(id_col).alias("id_a"), "shingle")
-        .join(capped.select(F.col(id_col).alias("id_b"), "shingle"), "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sets = shingle_sets(sh, id_col)
-    joined = cand.join(
-        sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    raw = inter * F.lit(1.0) / union
-    return joined.filter(raw >= threshold).select(
-        "id_a",
-        "id_b",
-        F.round(raw, 6).cast("double").alias("jaccard"),
-    )
-
-
-def shingle_sets(shingles: DataFrame, id_col: str) -> DataFrame:
-    """One row per id with its distinct-shingle ARRAY — the single
-    shuffle every MinHash/LSH stage downstream reuses as a projection."""
-    return shingles.groupBy(id_col).agg(F.collect_set("shingle").alias("sh"))
-
-
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, num_hashes: int = 8
-) -> DataFrame:
-    """MinHash signature: h_j = MIN(md5('<j>:' || shingle)). MD5-as-
-    permutation is deterministic and engine-independent; one groupBy
-    computes all K mins."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"h{j}")
-        for j in range(num_hashes)
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 2,
-    threshold: float = 0.5,
-    max_bucket: int | None = None,
-    persist=None,
-) -> DataFrame:
-    """MinHash + LSH banding, ONE shuffle to build state then pure
-    projections: shingle sets (groupBy) -> signatures = array_min of a
-    per-set transform (no second aggregation) -> band keys -> band
-    equi-join proposes candidates -> candidates verified with exact
-    Jaccard via array_intersect on the two shingle ARRAYS (only
-    candidate pairs pay the set comparison — the all-pairs shingle
-    self-join never happens).
-
-    ``max_bucket`` guards the band join against hot buckets: a band
-    key shared by d documents contributes O(d²) candidates, and at
-    corpus scale one degenerate key (empty docs, boilerplate) can
-    dominate the whole join. Band keys with more than ``max_bucket``
-    members are skipped — such buckets are mass-duplicate clusters
-    that exact dedup (the cheaper pass that should run first) already
-    collapses, not near-duplicate structure.
-
-    ``persist`` (e.g. ``lambda df: df.localCheckpoint()``) is applied
-    to the banded-signature frame, which the candidate stage otherwise
-    references once per (band x side x hot-bucket agg) -- 8 executions
-    of the heaviest aggregation for the default 2 bands (Catalyst does
-    not deduplicate non-exchange subtrees). At cluster scale this is
-    the signatures table every LSH system materializes."""
-    rows_per_band = num_hashes // bands
-    sh = word_shingles(df, id_col, text_col, n)
-
-    # ONE aggregation computes the shingle set AND all K signature
-    # mins. (Deliberately no transform/array_min lambdas here: a
-    # codegen-cache collision between higher-order-function lambdas of
-    # DIFFERENT queries produced a transiently wrong first execution —
-    # see tests/test_llmdata.py::test_minhash_stable_after_hof_queries.)
-    banded = sh.groupBy(id_col).agg(
-        F.collect_set("shingle").alias("sh"),
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"h{j}")
-            for j in range(num_hashes)
-        ],
-    )
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(F.md5(F.concat_ws("|", *cols)).alias(f"band{b}"))
-    banded = banded.select(F.col(id_col), F.col("sh"), *band_cols)
-    if persist is not None:
-        banded = persist(banded)
-
-    candidates = None
-    for b in range(bands):
-        left = banded.select(
-            F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"),
-            F.col(f"band{b}").alias("bk"),
-        )
-        right = banded.select(
-            F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"),
-            F.col(f"band{b}").alias("bk"),
-        )
-        if max_bucket is not None:
-            hot = (
-                banded.groupBy(F.col(f"band{b}").alias("bk"))
-                .agg(F.count(F.lit(1)).alias("c"))
-                .filter(F.col("c") > max_bucket)
-                .select("bk")
-            )
-            left = left.join(F.broadcast(hot), "bk", "left_anti")
-            right = right.join(F.broadcast(hot), "bk", "left_anti")
-        cand = (
-            left.join(right, "bk")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "sh_a", "sh_b")
-        )
-        candidates = cand if candidates is None else candidates.unionByName(cand)
-    candidates = candidates.dropDuplicates(["id_a", "id_b"])
-
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    raw = inter * F.lit(1.0) / union
-    return candidates.filter(raw >= threshold).select(
-        "id_a", "id_b",
-        F.round(raw, 6).cast("double").alias("jaccard"),
-    )
-
-
-#: hex digits with odd parity (low bit set) -- used for MD5-char-parity
-#: SimHash bits, reproducible in any engine with md5 + substr.
-_ODD_HEX = ("1", "3", "5", "7", "9", "b", "d", "f")
-
-
-def simhash_signature(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 16
-) -> DataFrame:
-    """SimHash over tokens: bit_i = sign of sum over token occurrences
-    of ±1, where ±1 is the parity of hex digit i of md5(token).
-    Returns the signature as a bit-string column (cross-engine-stable;
-    Hamming distance = count of differing chars)."""
-    w = F.split(normalize_text(text_col), " ")
-    # materialize md5 once per token; inlining it into the 16 substring
-    # expressions would hash each token `bits` times
-    tokens = df.select(F.col(id_col), F.explode(w).alias("tok")).select(
-        F.col(id_col), F.md5("tok").alias("h")
-    )
-    bit_sums = [
-        F.sum(
-            F.when(F.substring(F.col("h"), i + 1, 1).isin(*_ODD_HEX), 1).otherwise(-1)
-        ).alias(f"s{i}")
-        for i in range(bits)
-    ]
-    sums = tokens.groupBy(id_col).agg(*bit_sums)
-    sig = F.concat(
-        *[
-            F.when(F.col(f"s{i}") > 0, F.lit("1")).otherwise(F.lit("0"))
-            for i in range(bits)
-        ]
-    )
-    return sums.select(F.col(id_col), sig.alias("simhash"))
 
 
 def hamming_banded_pairs(
@@ -305,8 +27,8 @@ def hamming_banded_pairs(
     max_bucket: int = 20,
 ) -> DataFrame:
     """Near-duplicate SIGNATURE pairs within ``max_hamming`` bit flips,
-    by banded equality join — the SimHash-family scale path applied to
-    any fixed-width bit-string signature (SimHash, perceptual dHash).
+    by banded equality join — the scale path for any fixed-width
+    bit-string signature (here the perceptual dHash).
 
     Pigeonhole soundness: with ``bands`` equal-width bands, any pair
     differing in at most ``bands - 1`` bits collides in at least one
@@ -324,8 +46,8 @@ def hamming_banded_pairs(
     scale, not corpus scale — the candidate space a 100 TB image
     corpus can actually afford. ``max_bucket`` drops band keys shared
     by more than that many DISTINCT signatures (degenerate strata:
-    all-black thumbnails, boilerplate headers), same guard as
-    ``minhash_lsh_pairs``.
+    all-black thumbnails, boilerplate headers): without it one hot
+    band key of d signatures costs O(d²) candidate rows.
 
     Verification stays JVM-side: each 64-bit signature splits into two
     32-bit halves parsed with ``conv(_, 2, 10)``, and the Hamming
@@ -383,8 +105,8 @@ def connected_components(
 ) -> DataFrame:
     """Cluster labels for the near-duplicate graph: every node gets the
     MINIMUM id reachable through the (undirected) edge set, plus the
-    cluster size — the step that turns pair output (MinHash/Jaccard/
-    cosine) into deduplication groups.
+    cluster size — the step that turns near-duplicate pair output
+    into deduplication groups.
 
     Min-label propagation: each round, every node takes the min of its
     own label and its neighbors' labels; converges in O(graph diameter)
@@ -392,7 +114,7 @@ def connected_components(
     so the diameter — and the round count — is tiny regardless of
     corpus size. Each round is ONE shuffle of the (sparse) edge list
     joined to the label frame; ``edges`` is eagerly localCheckpoint-ed
-    first so the upstream candidate-generation plan (LSH etc.) runs
+    first so the upstream candidate-generation plan (banded join) runs
     exactly once, and each round's labels are checkpointed to truncate
     the iterative lineage. For adversarial graphs with long chains the
     alternating large-star/small-star variant (O(log n) rounds) is the
@@ -605,9 +327,9 @@ def connected_components_auto(
     Dispatch signal: average degree of the materialized edge list (two
     counts over a frame both variants checkpoint anyway — at 100 TB
     this is two cheap jobs over the delta-scale pair set, noise next
-    to the rounds they steer). Measured on this repo's graphs: the
-    sparse families (MinHash-LSH pairs, 64-bit dhash) sit at ~1.0 at
-    both sf0.01 and sf0.1, the dense 16-bit simhash graph — the r8
+    to the rounds they steer). Measured on the graphs this wrapper was
+    tuned on: sparse pair graphs (64-bit dhash pairs) sit at ~1.0 at
+    both sf0.01 and sf0.1, a dense 16-bit signature graph — the r8
     failure — at 2.15-2.49; 1.5 splits them with margin on both sides.
     A graph that still exhausts propagation's round bound falls back
     to star contraction instead of failing (the loud RuntimeError stays
@@ -632,162 +354,3 @@ def connected_components_auto(
         return connected_components(e, nodes, id_col, max_iter=max_iter)
     except RuntimeError:
         return connected_components_star(e, nodes, id_col)
-
-
-def embedding_lsh_pairs(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    planes_per_band: int = 4,
-    bands: int = 16,
-    max_bucket: int = 50,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine — the SCALE path.
-
-    Sign-LSH banded candidate generation (the random-hyperplane twin of
-    the MinHash band join): each vector keys into ``bands`` buckets,
-    one per contiguous group of ``planes_per_band`` coordinates, the
-    bucket id being the sign pattern of that group. Two vectors at
-    angle θ agree on one plane with p = 1 - θ/π, so a band matches with
-    p^planes and at least one of B bands matches with 1-(1-p^planes)^B
-    — at cosine 0.4, 4x16 gives ~94% recall while pruning the
-    candidate space to same-bucket pairs (vs the O(n²) crossJoin of
-    ``embedding_cosine_pairs``, kept as the correctness baseline).
-
-    Candidates come from per-band bucket equi-joins (never a
-    cartesian); cosine is verified on candidates only, so the output is
-    exactly a subset of the brute-force pairs. Buckets larger than
-    ``max_bucket`` are dropped before the self-join — mass-duplicate
-    clusters belong to exact dedup, the same hot-bucket contract as the
-    MinHash band join (and the reason the band join stays near-linear
-    on duplicate-dense corpora)."""
-    from .similarity import cosine
-
-    keyed_cols = []
-    for b in range(bands):
-        signs = [
-            F.when(
-                F.element_at(F.col(vec_col), b * planes_per_band + i + 1) >= 0,
-                "1",
-            ).otherwise("0")
-            for i in range(planes_per_band)
-        ]
-        keyed_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat(*signs).alias("bucket"))
-        )
-    keyed = emb.select(
-        F.col(id_col).alias("id"), F.explode(F.array(*keyed_cols)).alias("bb")
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # bucket-size cap: the (band, bucket) count table is at most
-    # bands * 2^planes rows — broadcast-small at any corpus size
-    ok = (
-        keyed.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= max_bucket)
-        .select("band", "bucket")
-    )
-    keyed = keyed.join(F.broadcast(ok), ["band", "bucket"])
-    a = keyed.select("band", "bucket", F.col("id").alias("id_a"))
-    b2 = keyed.select("band", "bucket", F.col("id").alias("id_b"))
-    cand = (
-        a.join(b2, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ea = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    eb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(ea, "id_a")
-        .join(eb, "id_b")
-        .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def embedding_cosine_pairs(
-    emb: DataFrame, id_col: str, vec_col: str, threshold: float
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine >= threshold.
-    Brute-force all-pairs -- correctness baseline; the LSH-bucketed
-    variant ``embedding_lsh_pairs`` above is the scale path."""
-    from .similarity import cosine
-
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            cosine(F.col("va"), F.col("vb")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Near-duplicate pairs by word-SET Jaccard >= threshold using
-    PREFIX FILTERING (the canonical set-similarity-join pruning,
-    PPJoin-family): tokens are globally ordered rarest-first (df asc,
-    token asc); a pair with Jaccard >= t must share a token inside
-    each document's first ``n - ceil(t*n) + 1`` tokens of that order,
-    so ONLY prefix tokens enter the candidate equi-join. Because the
-    prefix is the RAREST part of each document, hot tokens are pruned
-    from candidate generation by construction — a principled bound
-    where the shingle path needs an explicit df cap — and the
-    guarantee is lossless: no qualifying pair can be missed.
-    Candidates then verify EXACT Jaccard on the full token sets.
-
-    At 100 TB: token-df ranking is one key-scale aggregation, the
-    candidate space is sum over prefix tokens of df² (small by
-    construction), and every stage is an equi-join/groupBy — no
-    cartesian anywhere."""
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.split(normalize_text(text_col), " ")))
-        .alias("t"),
-    )
-    tdf = toks.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
-    w_doc = Window.partitionBy(id_col)
-    ranked = (
-        toks.join(tdf, "t")
-        .withColumn(
-            "rn",
-            F.row_number().over(w_doc.orderBy("df", "t")),
-        )
-        .withColumn("n", F.count(F.lit(1)).over(w_doc))
-    )
-    pref = ranked.filter(
-        F.col("rn") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-    ).select(id_col, "t")
-    cand = (
-        pref.select(F.col(id_col).alias("id_a"), "t")
-        .join(pref.select(F.col(id_col).alias("id_b"), "t"), "t")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sets = toks.groupBy(id_col).agg(F.collect_set("t").alias("ts"))
-    joined = cand.join(
-        sets.select(F.col(id_col).alias("id_a"), F.col("ts").alias("ts_a")),
-        "id_a",
-    ).join(
-        sets.select(F.col(id_col).alias("id_b"), F.col("ts").alias("ts_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("ts_a", "ts_b"))
-    union = F.size("ts_a") + F.size("ts_b") - inter
-    raw = inter * F.lit(1.0) / union
-    return joined.filter(raw >= threshold).select(
-        "id_a",
-        "id_b",
-        F.round(raw, 6).cast("double").alias("jaccard"),
-    )

@@ -181,8 +181,8 @@ def dhash_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     At 100 TB the hash is computed once at ingest and stored; dedup is
     then a hash-equality groupBy (this module's exact-dedup shape) or
-    a banded hamming-neighborhood join (the SimHash shape) — never a
-    pixel-space comparison."""
+    a banded hamming-neighborhood join (dedup.hamming_banded_pairs) —
+    never a pixel-space comparison."""
     from ..shipping import ensure_package_on_executors
 
     ensure_package_on_executors(df.sparkSession)

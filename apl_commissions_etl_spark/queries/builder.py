@@ -104,24 +104,6 @@ _CRITERIA_CACHE: dict[tuple[str, str], DataFrame] = SessionCache()
 _PER_SPLIT_CACHE: dict[tuple[str, str], DataFrame] = SessionCache()
 
 
-def _certs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The certs fact, spread across the session's parallelism.
-
-    Since r6 the spread lives INSIDE the view itself: the testdata
-    parquet has ONE row group, so every scan starts as a single task
-    and the expensive expansion (G-prefix strings, split/tier CROSS
-    JOINs) used to run single-threaded BEFORE the post-hoc repartition
-    here could help. ``input_certificate_info`` now wraps its orders
-    scan in a ``/*+ REPARTITION(32) */`` hint (a comment to the DuckDB
-    oracle), so the exchange moves BELOW the expansion — narrow base
-    rows shuffle instead of the expanded fact, and the string building
-    parallelizes (measured 2.3s -> 1.5s on the per-split build at
-    sf0.1). This accessor survives as the naming seam; on a real
-    cluster the scan itself provides the spread and the hint's
-    exchange coalesces under AQE."""
-    return _certs(spark, sf_dir)
-
-
 def _certs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The expansion VIEW itself, for one-shot warm-path builds that
     fuse the expansion into their own aggregation job.  ``_per_split``

@@ -32,13 +32,9 @@ a whole family.
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators import textanalysis as ta
 from ..registry import REGISTRY, query
-from ..sources.testdata import load_table
 
 #: shared result schema of every generated fingerprint sub-query
 #: (scripts/gen_suites.py emits exactly these 7 columns per sub)
@@ -208,28 +204,6 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
             "stream_attribution_rollup",
         ),
     ),
-    "dedup_patterns_suite": (
-        "north-star deduplication family: exact (hash-groupBy), n-gram "
-        "Jaccard (shingle equi-join, df-capped), prefix-filtering "
-        "set-similarity join (lossless PPJoin-family pruning), "
-        "MinHash+LSH (band join + verify, bucket-capped), SimHash "
-        "(md5-parity bits), span-level chunk dedup, embedding "
-        "sign-LSH near-dup, banded-Hamming SimHash clustering "
-        "(star-contraction CC over the dense signature graph) and the "
-        "star-contraction label-parity proof itself",
-        (
-            "dedup_exact",
-            "dedup_ngram_jaccard",
-            "dedup_prefix_filter_jaccard",
-            "dedup_minhash_lsh",
-            "dedup_simhash",
-            "dedup_chunk_spans",
-            "dedup_incremental_batch",
-            "dedup_embedding_lsh",
-            "dedup_simhash_hamming",
-            "dedup_cluster_labels_star",
-        ),
-    ),
     "fix_patterns_suite": (
         "§2 post-transform repair family (sql/fix*, scripts/fix-*): "
         "far-future expiration repair, heaped schedule-rate fix, "
@@ -290,26 +264,17 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
         ),
     ),
     "llmdata_extras_suite": (
-        "north-star operators beyond the dedicated LLM-data slots: "
-        "embedding-cosine near-dup, near-dup clusters, chunk overlap, "
-        "PII scrub, multimodal PNG decode / roundtrip / resize / frame "
-        "sampling / image dedup, fused ML inference, BPE merge "
-        "training and TF-IDF keywords",
+        "north-star multimodal operators beyond the dedicated slots: "
+        "PNG roundtrip / decode / resize plan, BMP+WAV codec "
+        "roundtrip, frame sampling, and perceptual-hash image dedup "
+        "(hash equality and banded Hamming clusters)",
         (
-            "text_bpe_train",
-            "text_bpe_apply",
             "multimodal_png_roundtrip",
-            "dedup_embedding_cosine",
-            "dedup_cluster_labels",
-            "text_chunk_overlap",
-            "text_pii_scrub",
             "multimodal_decode",
             "multimodal_codec_roundtrip",
             "multimodal_frame_sample",
             "multimodal_image_dedup_dhash",
             "multimodal_image_dedup_hamming",
-            "text_tfidf_topk",
-            "ml_inference_logistic",
             "multimodal_resize_plan",
         ),
     ),
@@ -481,79 +446,6 @@ def _register_suites() -> None:
             "Family fingerprint suite over: " + ", ".join(subs) + "."
         )
         query(suite_name, oracle=oracle, survey_ref=ref)(spark_fn)
-
-
-@query(
-    "text_profile_suite",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, lang,
-             lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm,
-             trim(text) AS raw,
-             n_chars
-      FROM documents
-    ), w AS (
-      SELECT doc_id, lang, norm, raw, n_chars,
-             string_split(norm, ' ') AS words
-      FROM t
-    ), m AS (
-      SELECT doc_id, lang, norm, raw, n_chars, words,
-             least(length(raw) / 200.0, 1.0) AS len_score,
-             len(list_filter(words, x -> x IN ('the','a','of','and','in','to')))
-               * 1.0 / len(words) AS sw,
-             list_sum(list_transform(words, x -> length(x)))
-               * 1.0 / len(words) AS wl,
-             len(list_filter(words,
-                 x -> x IN ('the','a','of','and','value'))) AS en_s,
-             len(list_filter(words,
-                 x -> x IN ('el','la','de','que','los'))) AS es_s,
-             len(list_filter(words,
-                 x -> x IN ('de5','le5','shi4','zai4','he2'))) AS zh_s
-      FROM w
-    )
-    SELECT doc_id,
-           len(words) AS n_tokens_ws,
-           len(list_filter(string_split_regex(raw, '[^A-Za-z0-9]+'),
-                           x -> x <> '')) AS n_tokens_bpe_ish,
-           n_chars,
-           CAST(round(greatest(0.0,
-             len_score * 0.4
-             + greatest(1.0 - abs(sw - 0.15) * 2, 0.0) * 0.3
-             + (CASE WHEN wl >= 3 AND wl <= 10 THEN 1.0 ELSE 0.5 END) * 0.3
-           ), 6) AS DOUBLE) AS quality,
-           lang AS labeled_lang,
-           CASE WHEN greatest(en_s, es_s, zh_s) = 0 THEN 'und'
-                WHEN es_s > en_s AND zh_s <= es_s THEN 'es'
-                WHEN zh_s > en_s AND zh_s > es_s THEN 'zh'
-                ELSE 'en' END AS detected_lang,
-           md5(norm) AS fp_exact,
-           md5(array_to_string(list_sort(words), ' ')) AS fp_bow
-    FROM m
-    """,
-    survey_ref=(
-        "north-star text analysis in ONE scan: token counting "
-        "(whitespace + BPE-ish regex), quality scoring, language-ID, "
-        "document fingerprinting (also registered individually as "
-        "text_token_count / text_quality_score / text_lang_id / "
-        "text_fingerprint)"
-    ),
-)
-def text_profile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All four per-document text metrics from a single pass over
-    ``documents`` — the fused projection a 100 TB corpus profile would
-    actually run (one scan, zero shuffles, whole-stage codegen)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        ta.token_count_ws("text").alias("n_tokens_ws"),
-        ta.token_count_bpe_ish("text").alias("n_tokens_bpe_ish"),
-        "n_chars",
-        ta.quality_score("text").alias("quality"),
-        F.col("lang").alias("labeled_lang"),
-        ta.lang_id("text").alias("detected_lang"),
-        ta.fingerprint_exact("text").alias("fp_exact"),
-        ta.fingerprint_bow("text").alias("fp_bow"),
-    )
 
 
 _register_suites()

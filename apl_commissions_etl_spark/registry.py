@@ -105,7 +105,7 @@ def query(name: str, oracle: str | None = None, survey_ref: str = ""):
 #: operator family at least once — family "suite" queries (see
 #: ``queries/suites.py``) compress whole families into one checkable
 #: result so the budget stretches across all of §2.1-§2.13 plus the
-#: LLM-data north-star operators.  Everything not listed keeps its
+#: multimodal north-star operators.  Everything not listed keeps its
 #: module registration order after the prioritized head.
 DRIVER_PRIORITY: tuple[str, ...] = (
     # §2.4 aggregation family (A1-A12; the three r2-era dedicated agg
@@ -175,20 +175,22 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # headroom per rehearsal, r10)
     "incremental_parity_suite",
     "incremental_stream_parity_suite",
-    # LLM-data north-star operators: text profiling, dedup, the
-    # remaining LLM-data extras and the pretraining-corpus pipeline
-    "text_profile_suite",
-    "dedup_patterns_suite",
-    # (the corpus-prep family's two slots and the ANN family's one are
-    # re-pinned with commissions queries in place, so every slot around
-    # them sees the same session state: the table-maintenance
-    # time-travel read, the S10 keyed MERGE sync (also an
-    # export_entities_suite sub) and the A3 conditional aggregation
-    # (also an agg_patterns_suite sub))
+    # builder outputs beyond the pinned mode slots (share their
+    # caches): the selection criteria and the mode key mappings
+    "builder_selection_criteria",
+    "builder_mode_key_mappings",
+    # (the freed LLM-data, corpus-prep and ANN slots are re-pinned with
+    # commissions queries in place, so every slot around them sees the
+    # same session state: the table-maintenance time-travel read, the
+    # S10 keyed MERGE sync (also an export_entities_suite sub), the
+    # S5 zip-prefix ingest summary (also a prep_patterns_suite sub)
+    # and the A3 conditional aggregation (also an agg_patterns_suite
+    # sub))
     "sink_time_travel_parity",
     "export_merge_upsert",
+    # the last LLM-data slot: multimodal codecs and image dedup
     "llmdata_extras_suite",
-    "pipeline_pretrain_corpus",
+    "ingest_zip_prefix_summary",
     "agg_conditional",
     # §2.12 reporting layer + §2.13 sequence analytics
     "report_views_suite",
@@ -209,19 +211,13 @@ DRIVER_PRIORITY: tuple[str, ...] = (
 #: Rotation plan if driver slots free up (or the prefix grows): the
 #: next queries to pin are currently driver-"local" only — each
 #: already passes the full local sweep + vanilla rehearsal.
-#:   0. multimodal_png_roundtrip (beyond-§2 extra, also fingerprinted
-#:                                 in llmdata_extras)
-#:   1. builder_selection_criteria / builder_mode_key_mappings
-#:                                 (builder outputs beyond the pinned
-#:                                 mode slots; share their caches)
-#:   2. ingest_zip_prefix_summary (evicted r9 — its slot funds
-#:                                 incremental_parity_suite — and
-#:                                 fingerprinted in prep_patterns_suite;
-#:                                 re-pin only if a dedicated row is
-#:                                 wanted)
+#:   0. builder_proposals (the builder's proposal output; replaces
+#:                         llmdata_extras_suite when the multimodal
+#:                         family is deleted, and shares the caches of
+#:                         the builder slots above)
 #: (The r7/r8 incremental-family candidates — builder_incremental_*,
 #: calc_incremental_*_parity, stream_incremental_* — were pinned in r9
-#: via incremental_parity_suite below.)
+#: via incremental_parity_suite above.)
 #: Keep this list in sync when adding families so the 50-slot prefix
 #: stays an intentional choice rather than registration-order accident.
 #:

@@ -126,10 +126,6 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 #: (applicationId, view-family) -> sf_dir already registered.  Replacing
 #: a temp view (CREATE OR REPLACE / createOrReplaceTempView) makes Spark
 #: uncache every cached plan that depends on it — so re-registering the
@@ -241,9 +237,3 @@ def register_base_tables(
             spark, f"base:{t}", sf_dir,
             lambda t=t: load_table(spark, sf_dir, t).createOrReplaceTempView(t),
         )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view so operators can be written in
-    either the DataFrame or SQL API against the same names."""
-    register_base_tables(spark, sf_dir)

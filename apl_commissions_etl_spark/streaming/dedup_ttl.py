@@ -7,9 +7,9 @@ and a dedup operator that never evicts eventually owns the whole state
 store. The processing-time timeout evicts each fingerprint's cell
 ``ttl_ms`` after it was last re-confirmed, capping state at
 (arrival rate x ttl) entries — the standard production trade: a
-duplicate arriving after the TTL window re-emits, which downstream
-batch dedup (``dedup_incremental_batch`` over the bucketed fingerprint
-index) catches on the next compaction.
+duplicate arriving after the TTL window re-emits, which a downstream
+batch dedup over the fingerprint index catches on the next
+compaction.
 
 Carrier: ``applyInPandasWithState`` with ``ProcessingTimeTimeout``
 (state timeout == TTL eviction). Spark 4's ``transformWithStateInPandas``

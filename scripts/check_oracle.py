@@ -9,8 +9,8 @@ the real driver hashes, so we flag ANY float mismatch loudly).
 Usage: python scripts/check_oracle.py [sf_dir] [name_filter...]
 
 ``--scale-smoke``: the pre-sweep scale-regression gate (r8 verdict
-item 3 — dedup_simhash_hamming failed ONLY at sf0.1, which no routine
-check ran). Diffs the registry against the newest committed
+item 3 — a banded-Hamming dedup query failed ONLY at sf0.1, which no
+routine check ran). Diffs the registry against the newest committed
 SWEEP_r*.log to find every query added since the last round and runs
 each at sf0.1 in its OWN fresh subprocess session with the configured
 (real, non-vanilla) driver heap — per the session-budget note in

@@ -13,6 +13,7 @@ registry-wide sweep.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -63,14 +64,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "point side is tiny; sort-merge at scale).",
     ),
     (
-        "dedup_minhash_lsh",
-        [],
-        ["CartesianProduct", "BatchEvalPython"],
-        "Shingle -> minhash -> band bucket self-join: candidates come "
-        "from band-key equality (hot buckets capped), verification "
-        "touches candidates only. All JVM-side.",
-    ),
-    (
         "seq_asof_attribution",
         ["Window"],
         ["BroadcastNestedLoopJoin", "CartesianProduct", "SortMergeJoin"],
@@ -105,26 +98,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "decode/feature pass must have (pure map, no exchange).",
     ),
     (
-        "text_bpe_train",
-        [],
-        ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
-        "Two BPE merge rounds as one declarative plan: pair counts "
-        "are combinable hash aggregations, each round's argmax is a "
-        "1-row broadcast (BroadcastNestedLoopJoin on a single row, "
-        "not a cartesian), merges are codegen string replaces. No "
-        "Python anywhere in the training loop.",
-    ),
-    (
-        "text_bpe_apply",
-        ["BroadcastHashJoin"],
-        ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"],
-        "Tokenizing the corpus with the learned merges: the "
-        "(word -> post-merge token count) map is vocab-sized and "
-        "BROADCASTS into the word-exploded fact — a sort-merge join "
-        "here would shuffle the entire token stream; the only "
-        "exchanges are the vocab fold and the per-doc re-aggregation.",
-    ),
-    (
         "mode_cascade (finest routing aggregation)",
         ["BroadcastHashJoin"],
         ["SortMergeJoin", "CartesianProduct", "BatchEvalPython"],
@@ -144,15 +117,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "Batch twin of the TTL-state streaming dedup: one "
         "gaps-and-islands window pass per key — the LAG and the "
         "emission filter share a single (user, type) exchange.",
-    ),
-    (
-        "dedup_prefix_filter_jaccard",
-        ["HashJoin"],
-        ["CartesianProduct", "BatchEvalPython", "BroadcastNestedLoopJoin"],
-        "Prefix-filtering set-similarity join: token-df ranking, the "
-        "prefix-token candidate equi-join, and the exact-verify joins "
-        "are ALL hash joins — no all-pairs comparison appears anywhere "
-        "in the plan, the lossless alternative to a df cap.",
     ),
     (
         "audit_join_preflight",
@@ -314,10 +278,16 @@ def main() -> None:
         for m in must_not:
             if m in plan:
                 failures.append(f"{name}: forbidden {m!r} in plan")
-        # keep the operator tree, drop the verbose field dumps
+        # keep the operator tree, drop the verbose field dumps; mask
+        # the session counters (expression ids, exchange plan ids,
+        # lambda variable suffixes) so an unchanged plan regenerates
+        # byte-identically and the cut below lands on the same character
         tree = "\n".join(
             ln for ln in plan.splitlines() if not ln.lstrip().startswith("+- Project [")
         )
+        tree = re.sub(r"#\d+", "#", tree)
+        tree = re.sub(r"plan_id=\d+", "plan_id=", tree)
+        tree = re.sub(r"lambda (\w+?)_\d+", r"lambda \1_", tree)
         if len(tree) > 4000:
             tree = tree[:4000] + "\n… (truncated)"
         sections.append(

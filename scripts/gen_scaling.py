@@ -51,7 +51,7 @@ the dims in this domain stay group-scale (BASELINE.md: 12K brokers /
 `exch` counts the aggregation shuffles that remain.
 
 Caveat: queries backed by the session staging caches (calc cascade,
-builder criteria, LSH pair index) report the STEADY-STATE plan here —
+builder criteria, dhash index) report the STEADY-STATE plan here —
 localCheckpoint truncates the lineage, so their exch/bhj counts can
 read lower than the cold plan. PLANS.md documents the un-persisted
 cold plan shapes for exactly those flagships.
@@ -76,17 +76,10 @@ HEADLINE = [
     "join_date_band",
     "join_rate_fallback",
     "win_dedup_keep_latest",
-    "dedup_minhash_lsh",
-    "dedup_cluster_labels",
-    "dedup_incremental_batch",
-    "dedup_simhash_hamming",
-    "text_bpe_train",
     "cdc_apply_changelog",
-    "text_chunk_overlap",
     "multimodal_codec_roundtrip",
     "multimodal_image_dedup_dhash",
     "multimodal_image_dedup_hamming",
-    "pipeline_pretrain_corpus",
     "stream_session_window",
     "seq_asof_attribution",
     "win_sessionize",

@@ -53,8 +53,9 @@ def main() -> None:
 
     rows = []
     for k in (1, 4, 16):
-        # same spread the engine applies (_certs_spread): the derived
-        # view is ONE partition locally, so the replicated explode and
+        # same spread the engine applies (the REPARTITION hint in
+        # input_certificate_info): the derived view is ONE partition
+        # locally, so the replicated explode and
         # the whole-fact aggregations would otherwise run
         # single-threaded — on a real cluster the scan provides this.
         # Spread BEFORE the explode so replication itself parallelizes.

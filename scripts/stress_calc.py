@@ -108,95 +108,5 @@ def main() -> None:
     print(f"updated {OUT}")
 
 
-
-
-# appended: shuffle-bound counterpart (MinHash-LSH over replicated docs)
-# run with: python scripts/stress_calc.py --dedup
-MARK2 = "## Docs-replication stress (MinHash-LSH dedup)"
-
-
-def dedup_stress() -> None:
-    from apl_commissions_etl_spark.operators import dedup
-    from apl_commissions_etl_spark.sources.testdata import load_table
-
-    spark = get_spark("stress-dedup")
-    # spread before the explode, as the engine's _docs accessor does:
-    # the corpus arrives as one parquet split locally and the
-    # CPU-heavy shingle/minhash stages would otherwise start
-    # single-threaded
-    base = (
-        load_table(spark, SF, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    # throwaway pass: JVM JIT + codegen warm-up must not be billed to
-    # the 1x row (it distorts every ratio in the table)
-    dedup.minhash_lsh_pairs(
-        base, "doc_id", "text", max_bucket=20,
-        persist=lambda df: df.localCheckpoint(),
-    ).count()
-
-    rows = []
-    for k in (1, 4, 16):
-        docs = base
-        if k > 1:
-            # unique ids per replica; every replica is an exact dup of
-            # its source, so near-dup structure (and hot-bucket load)
-            # grows with k — the worst case for the band join
-            docs = base.withColumn(
-                "replica", F.explode(F.sequence(F.lit(0), F.lit(k - 1)))
-            ).select(
-                (F.col("doc_id") * 100 + F.col("replica")).alias("doc_id"),
-                "text",
-            )
-        t0 = time.time()
-        n = dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", max_bucket=20,
-            persist=lambda df: df.localCheckpoint(),
-        ).count()
-        dt = round(time.time() - t0, 2)
-        rows.append((k, n, dt))
-        print(f"[stress] {k}x docs -> {n} LSH pairs in {dt}s", file=sys.stderr)
-
-    t1 = rows[0][2]
-    lines = [
-        MARK2,
-        "",
-        "`documents` replicated in-plan (unique ids; every replica is an",
-        "exact duplicate of its source — the adversarial case for LSH: the",
-        "duplicate-cluster density, and therefore the hot-bucket pressure",
-        "on the band join, grows with the factor). sf0.1 base (5K docs),",
-        "max_bucket=20 cap active, local[32]:",
-        "",
-        "| docs | LSH pairs | seconds | time vs 1x | data vs 1x |",
-        "|---|---|---|---|---|",
-    ]
-    for k, n, dt in rows:
-        lines.append(f"| {k}x | {n} | {dt} | {round(dt / t1, 1)}x | {k}x |")
-    lines += [
-        "",
-        "The bucket cap is what keeps this workload bounded: without it,",
-        "16x exact-duplicate density would make the capped buckets",
-        "quadratic (each 16-member cluster alone is 120 candidate pairs).",
-        "Capped buckets are mass-duplicate clusters that the cheaper",
-        "exact-dedup pass collapses first; the cap is the documented",
-        "contract, not a shortcut.",
-        "",
-    ]
-    section = "\n".join(lines)
-    text = open(OUT).read()
-    if MARK2 in text:
-        text = re.sub(re.escape(MARK2) + r".*?(?=^## |\Z)", section, text,
-                      flags=re.S | re.M)
-    else:
-        text = text.rstrip() + "\n\n" + section
-    open(OUT, "w").write(text)
-    print(f"updated {OUT}")
-
-
 if __name__ == "__main__":
-    if "--dedup" in sys.argv:
-        dedup_stress()
-    else:
-        main()
+    main()

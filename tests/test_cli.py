@@ -11,7 +11,7 @@ def test_list_filters_by_prefix(capsys):
     assert main(["list", "calc_"]) == 0
     out = capsys.readouterr().out
     assert "calc_gl_entries" in out
-    assert "dedup_minhash_lsh" not in out
+    assert "agg_pricing_summary" not in out
 
 
 def test_query_unknown_name_fails(capsys):

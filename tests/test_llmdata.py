@@ -1,45 +1,11 @@
 """Tests for the LLM-data operators that the DuckDB oracle can't
-cover: LSH candidate soundness, connected components, multimodal
+cover: banded Hamming pair soundness, connected components, multimodal
 batch plumbing."""
 
 from __future__ import annotations
 
 from apl_commissions_etl_spark.operators import dedup, multimodal
 from apl_commissions_etl_spark.sources.testdata import load_table
-
-
-def test_minhash_lsh_candidates_superset_of_high_jaccard(spark, sf_dir):
-    """LSH with 2 bands of 4 rows: any pair with jaccard ~1 has
-    near-certain band collision; verify every >=0.9 pair from the
-    exact computation is found by the LSH path."""
-    d = load_table(spark, sf_dir, "documents")
-    exact = {
-        (r.id_a, r.id_b)
-        for r in dedup.ngram_jaccard_pairs(d, "doc_id", "text", threshold=0.9).collect()
-    }
-    lsh = {
-        (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_pairs(
-            d, "doc_id", "text", num_hashes=8, bands=2, threshold=0.9
-        ).collect()
-    }
-    assert exact, "testdata should contain planted near-duplicates"
-    missed = exact - lsh
-    # 2 bands of 4 at j>=0.9: P(miss) = (1-j^4)^2 <= ~12% per pair;
-    # allow a small miss count, not systematic failure
-    assert len(missed) <= max(1, len(exact) // 4), (missed, exact)
-
-
-def test_simhash_near_dup_signatures_close(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", threshold=0.9).collect()
-    sigs = {
-        r.doc_id: r.simhash
-        for r in dedup.simhash_signature(d, "doc_id", "text").collect()
-    }
-    for p in pairs:
-        ham = sum(a != b for a, b in zip(sigs[p.id_a], sigs[p.id_b]))
-        assert ham <= 4, (p, ham)
 
 
 def test_multimodal_decode_batching(spark, sf_dir):
@@ -117,85 +83,6 @@ def test_multimodal_resize_and_frame_sampling(spark, sf_dir):
     assert {(r.doc_id, r.frame_index): r.frame_hash for r in rows} == again
 
 
-def test_minhash_stable_after_hof_queries(spark, sf_dir):
-    """Regression: running other higher-order-function queries
-    (quality score / lang-id, which use F.filter lambdas) before
-    MinHash made its FIRST full execution drop one pair (codegen-cache
-    collision between lambda expressions; Spark 4.1.x). The signature
-    stage now uses a plain aggregation — results must be identical
-    before and after the trigger queries."""
-    from apl_commissions_etl_spark.registry import all_queries
-
-    qs = all_queries()
-    baseline = {
-        (r.id_a, r.id_b)
-        for r in qs["dedup_minhash_lsh"].spark_fn(spark, sf_dir).collect()
-    }
-    qs["text_quality_score"].spark_fn(spark, sf_dir).toPandas()
-    qs["text_lang_id"].spark_fn(spark, sf_dir).toPandas()
-    after = {
-        (r.id_a, r.id_b)
-        for r in qs["dedup_minhash_lsh"].spark_fn(spark, sf_dir).collect()
-    }
-    assert baseline == after
-
-
-def test_hot_shingle_cap_bounds_candidates(spark):
-    """A stop-shingle shared by every document must not make the
-    candidate join quadratic: with the df cap, boilerplate-only
-    overlaps produce NO candidate pairs, while a genuine near-dup
-    pair (sharing many sub-cap shingles) is still found with its
-    exact (uncapped) Jaccard."""
-    boiler = "terms and conditions apply to all"
-    rows = [(i, f"{boiler} document body {i} alpha beta gamma") for i in range(40)]
-    # one genuine near-dup pair sharing a long distinctive tail
-    tail = "the quick brown fox jumps over the lazy dog again and again"
-    rows += [(100, f"{boiler} {tail} one"), (101, f"{boiler} {tail} two")]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-
-    capped = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", n=3, threshold=0.3, max_df=10
-    )
-    got = {(r.id_a, r.id_b): r.jaccard for r in capped.collect()}
-    assert (100, 101) in got
-    # boilerplate-only pairs are gone: every surviving pair involves
-    # the two planted near-dups
-    assert all(a >= 100 and b >= 100 for a, b in got)
-
-    # the surviving pair's jaccard equals the uncapped (exact) value
-    uncapped = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", n=3, threshold=0.3, max_df=None
-    )
-    exact = {(r.id_a, r.id_b): r.jaccard for r in uncapped.collect()}
-    assert got[(100, 101)] == exact[(100, 101)]
-
-
-def test_hot_band_bucket_cap_skips_degenerate_buckets(spark):
-    """40 identical documents collapse into one LSH band bucket; with
-    max_bucket the O(n²) bucket is skipped entirely while a small
-    near-dup cluster elsewhere still pairs up."""
-    clone = "identical boilerplate text repeated across the whole corpus here"
-    rows = [(i, clone) for i in range(40)]
-    tail = "a very distinctive sentence that only these two documents share fully"
-    rows += [(100, f"{tail} variant one"), (101, f"{tail} variant two")]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-
-    pairs = dedup.minhash_lsh_pairs(
-        df, "doc_id", "text", n=3, num_hashes=8, bands=2, threshold=0.3,
-        max_bucket=10,
-    )
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert (100, 101) in got
-    assert all(a >= 100 and b >= 100 for a, b in got)
-
-    # sanity: without the cap the clone cluster floods the result
-    flood = dedup.minhash_lsh_pairs(
-        df, "doc_id", "text", n=3, num_hashes=8, bands=2, threshold=0.3,
-        max_bucket=None,
-    )
-    assert flood.count() >= 40 * 39 // 2
-
-
 def test_connected_components_path_graph(spark):
     """A 5-node path (needs multiple propagation rounds) plus an
     isolated node and a separate triangle: labels = component minima,
@@ -215,56 +102,6 @@ def test_connected_components_path_graph(spark):
         1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 7: 7, 10: 10, 11: 10, 12: 10,
     }
     assert got[3][1] == 5 and got[7][1] == 1 and got[11][1] == 3
-
-
-def test_chunk_overlap_reconstructs_tokens(spark, sf_dir):
-    """Chunk invariants: seqs are dense from 0; every chunk except the
-    last has exactly `size` tokens; stride-prefix concatenation of all
-    chunks reproduces the original token stream."""
-    from apl_commissions_etl_spark.operators import textanalysis as ta
-
-    d = load_table(spark, sf_dir, "documents").limit(50)
-    size, stride = 16, 12
-    chunks = ta.chunk_tokens(d, "doc_id", "text", size=size, stride=stride)
-    rows = chunks.orderBy("doc_id", "chunk_seq").collect()
-    toks = {
-        r.doc_id: r.toks
-        for r in d.select("doc_id", ta.words("text").alias("toks")).collect()
-    }
-    by_doc: dict = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert set(by_doc) == set(toks)
-    for doc_id, rs in by_doc.items():
-        assert [r.chunk_seq for r in rs] == list(range(len(rs)))
-        rebuilt: list = []
-        for r in rs[:-1]:
-            assert r.n_tokens == size or r.n_tokens == len(toks[doc_id]) - (
-                r.chunk_seq * stride
-            )
-            rebuilt.extend(r.chunk_text.split(" ")[:stride])
-        rebuilt.extend(rs[-1].chunk_text.split(" "))
-        assert rebuilt == toks[doc_id]
-
-
-def test_pii_scrub_redacts_planted_values(spark):
-    from apl_commissions_etl_spark.operators import textanalysis as ta
-
-    df = spark.createDataFrame(
-        [
-            (1, "contact bob.smith+x@example.co.uk or call 5551234567 now"),
-            (2, "no pii here, just 123 and a short 42"),
-            (3, "a@b.io mails a@b.io twice; card 4111111111111111"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r for r in ta.pii_scrub(df, "doc_id", "text").collect()}
-    assert got[1].n_emails == 1 and got[1].n_longnums == 1
-    assert got[1].scrubbed == "contact <EMAIL> or call <NUM> now"
-    assert got[2].n_emails == 0 and got[2].n_longnums == 0
-    assert got[2].scrubbed == "no pii here, just 123 and a short 42"
-    assert got[3].n_emails == 2 and got[3].n_longnums == 1
-    assert got[3].scrubbed == "<EMAIL> mails <EMAIL> twice; card <NUM>"
 
 
 def test_connected_components_matches_union_find(spark):
@@ -319,123 +156,6 @@ def test_connected_components_matches_union_find(spark):
         assert all(got[n][1] == sizes[want_label[n]] for n in nodes)
 
     check()
-
-
-def test_embedding_lsh_subset_and_recall(spark, sf_dir):
-    """The banded sign-LSH near-dup pairs must be a strict SUBSET of
-    the brute-force pairs at the same threshold (verify-filtered), with
-    recall high enough to be a usable scale path."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    th = 0.4
-    brute = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.embedding_cosine_pairs(
-            emb, "vec_id", "embedding", threshold=th
-        ).collect()
-    }
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.embedding_lsh_pairs(
-            emb, "vec_id", "embedding", threshold=th
-        ).collect()
-    }
-    assert lsh <= brute
-    if brute:
-        assert len(lsh) / len(brute) >= 0.7
-
-
-def test_embedding_lsh_prunes_on_true_near_dups(spark):
-    """On a TRUE near-dup corpus (each base vector plus a tiny
-    sign-preserving perturbation, cosine ~1), the production-shaped
-    config (8 planes x 8 bands) must find ~every planted pair while
-    scoring only a small fraction of all pairs — the pruning that makes
-    the operator the scale path."""
-    n_base, dims = 200, 64
-
-    import hashlib
-
-    def coord(i, j):
-        # deterministic pseudo-random in [-1, 1], zero-free, well-mixed
-        # (a linear-congruential pattern here correlates sign patterns
-        # across vectors and skews the buckets)
-        h = int(hashlib.md5(f"{i},{j}".encode()).hexdigest()[:8], 16)
-        v = (h % 1999) / 999.5 - 1.0
-        return v if abs(v) > 1e-3 else 0.5
-
-    rows = []
-    for i in range(n_base):
-        base = [coord(i, j) for j in range(dims)]
-        rows.append((2 * i, base))
-        rows.append((2 * i + 1, [x * (1.0 + 0.001 * ((j % 7) - 3)) for j, x in enumerate(base)]))
-    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-
-    found = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.embedding_lsh_pairs(
-            emb, "vec_id", "embedding", threshold=0.99,
-            planes_per_band=8, bands=8,
-        ).collect()
-    }
-    planted = {(2 * i, 2 * i + 1) for i in range(n_base)}
-    # sign-preserving scaling keeps every band bucket identical -> 100% recall
-    assert planted <= found
-    # pruning: candidates scored << all pairs (threshold -1 keeps all scored)
-    scored = dedup.embedding_lsh_pairs(
-        emb, "vec_id", "embedding", threshold=-1.0,
-        planes_per_band=8, bands=8,
-    ).count()
-    n = 2 * n_base
-    assert scored < n * (n - 1) / 2 * 0.10
-
-
-def test_bpe_apply_consistent_with_train(spark, sf_dir):
-    """The tokenizer loop closes: applying the learned merges to every
-    document must reproduce the training loop's round-2 corpus token
-    count exactly, and merging can only shrink token counts."""
-    from apl_commissions_etl_spark.registry import all_queries
-
-    qs = all_queries()
-    train = {r["round"]: r for r in
-             qs["text_bpe_train"].spark_fn(spark, sf_dir).collect()}
-    applied = qs["text_bpe_apply"].spark_fn(spark, sf_dir).collect()
-    assert sum(r["n_tokens_bpe"] for r in applied) == train[2]["corpus_tokens"]
-    assert sum(r["n_tokens_char"] for r in applied) == train[0]["corpus_tokens"]
-    for r in applied:
-        assert 0 < r["n_tokens_bpe"] <= r["n_tokens_char"]
-
-
-def test_prefix_filter_finds_every_qualifying_pair(spark):
-    """Prefix filtering is LOSSLESS: compare against the all-pairs
-    word-set Jaccard on a small corpus with planted near-dups and a
-    boilerplate token shared by every doc (the hot-key case a df cap
-    would mishandle)."""
-    import itertools
-
-    from apl_commissions_etl_spark.operators import dedup
-
-    texts = {
-        1: "common alpha beta gamma delta epsilon",
-        2: "common alpha beta gamma delta zeta",
-        3: "common completely different words here now",
-        4: "common alpha beta gamma delta epsilon",   # exact dup of 1
-        5: "common unrelated text again something else",
-    }
-    df = spark.createDataFrame(
-        [(k, v) for k, v in texts.items()], "doc_id long, text string"
-    )
-    got = {
-        (r.id_a, r.id_b)
-        for r in dedup.prefix_filter_jaccard_pairs(
-            df, "doc_id", "text", threshold=0.5
-        ).collect()
-    }
-    expected = set()
-    for a, b in itertools.combinations(sorted(texts), 2):
-        sa, sb = set(texts[a].split()), set(texts[b].split())
-        if len(sa & sb) / len(sa | sb) >= 0.5:
-            expected.add((a, b))
-    assert got == expected
-    assert (1, 4) in got  # the exact dup survived
 
 
 def test_hamming_banded_pairs_exact_within_bound(spark):
@@ -609,5 +329,3 @@ def test_auto_cc_dispatches_and_survives_long_chains(spark):
         ).collect()
     }
     assert all(labels[i] == (1, 64) for i in range(1, 65))
-
-

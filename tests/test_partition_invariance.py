@@ -12,16 +12,14 @@ import pytest
 from apl_commissions_etl_spark.registry import all_queries
 
 #: numerically / orderingly sensitive representatives: float aggs,
-#: money rounding, percent banding, windows over ties, hash ids, the
-#: fused text metrics, and the split-config builder mode, whose
-#: (GroupId, ProposalId) grouping must not depend on how the shuffle
-#: splits a group
+#: money rounding, percent banding, windows over ties, hash ids, and
+#: the split-config builder mode, whose (GroupId, ProposalId) grouping
+#: must not depend on how the shuffle splits a group
 SENSITIVE = [
     "agg_pricing_summary",
     "agg_conformance_banding",
     "calc_stage7_commissions",
     "builder_split_hierarchies",
-    "text_profile_suite",
     "seq_anomaly_zscore",
     "builder_mode_split_configs",
 ]

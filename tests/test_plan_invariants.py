@@ -7,24 +7,16 @@ posture holds for every registered operator at once:
   Arrow scalar UDFs outside the sanctioned grouped/map stages — Python
   enters only through mapInPandas/applyInPandas where the operator is
   an ordered fold or a codec boundary;
-- no CartesianProduct (both sides shuffled, no broadcast) except the
-  explicitly labeled brute-force baseline. BroadcastNestedLoopJoin is
-  NOT flagged: it is the intended physical strategy for non-equi
-  predicates against a broadcast-small side (theta bands, '*'
-  wildcards) — by definition one side fits in memory.
+- no CartesianProduct (both sides shuffled, no broadcast) anywhere.
+  BroadcastNestedLoopJoin is NOT flagged: it is the intended physical
+  strategy for non-equi predicates against a broadcast-small side
+  (theta bands, '*' wildcards) — by definition one side fits in
+  memory.
 """
 
 from __future__ import annotations
 
 from apl_commissions_etl_spark.registry import all_queries
-
-#: queries whose plan may contain a true cartesian, each bounded by
-#: construction:
-#: - dedup_embedding_cosine: the labeled brute-force all-pairs baseline
-#:   (the LSH variant is the scale path).
-CARTESIAN_OK = {
-    "dedup_embedding_cosine",
-}
 
 #: queries allowed to run Python batch stages (Arrow mapInPandas /
 #: applyInPandas): the ordered consolidation fold and the multimodal
@@ -48,8 +40,6 @@ PANDAS_OK = {
 from apl_commissions_etl_spark.queries.suites import SUITE_DEFS  # noqa: E402
 
 for _suite, (_ref, _subs) in SUITE_DEFS.items():
-    if set(_subs) & CARTESIAN_OK:
-        CARTESIAN_OK.add(_suite)
     if set(_subs) & PANDAS_OK:
         PANDAS_OK.add(_suite)
 
@@ -57,8 +47,8 @@ for _suite, (_ref, _subs) in SUITE_DEFS.items():
 def test_registry_plan_invariants(spark, sf_dir):
     qs = all_queries()
     # an allow-list entry whose query is gone would pass silently
-    stale = (CARTESIAN_OK | PANDAS_OK) - qs.keys()
-    assert not stale, f"allow-lists name unregistered queries: {sorted(stale)}"
+    stale = PANDAS_OK - qs.keys()
+    assert not stale, f"allow-list names unregistered queries: {sorted(stale)}"
     bad: dict[str, str] = {}
     for name, q in qs.items():
         df = q.spark_fn(spark, sf_dir)
@@ -71,6 +61,6 @@ def test_registry_plan_invariants(spark, sf_dir):
             "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan
         ) and name not in PANDAS_OK:
             bad[name] = "unexpected pandas stage"
-        elif "CartesianProduct" in plan and name not in CARTESIAN_OK:
+        elif "CartesianProduct" in plan:
             bad[name] = "unbroadcast cartesian product"
     assert not bad, f"plan invariant violations: {bad}"
