@@ -69,14 +69,14 @@ BUILDER_VIEWS: list[tuple[str, str]] = [
                     ELSE 100 END AS CertSplitPercent,
                t.BrokerSeq AS SplitBrokerSeq,
                'P' || CAST((c.GroupKey % 25) * 1000 + s.SplitSeq * 10
-                           + t.BrokerSeq AS VARCHAR(20)) AS SplitBrokerId,
+                           + t.BrokerSeq AS STRING) AS SplitBrokerId,
                'Broker ' || CAST((c.GroupKey % 25) * 1000 + s.SplitSeq * 10
-                           + t.BrokerSeq AS VARCHAR(20)) AS SplitBrokerName,
+                           + t.BrokerSeq AS STRING) AS SplitBrokerName,
                CASE WHEN c.GroupKey % 13 = 2 AND t.BrokerSeq = 1
                     THEN 'P' || CAST((c.GroupKey % 25) * 1000 + s.SplitSeq * 10
-                                     + t.BrokerSeq + 7 AS VARCHAR(20))
+                                     + t.BrokerSeq + 7 AS STRING)
                     ELSE 'P' || CAST((c.GroupKey % 25) * 1000 + s.SplitSeq * 10
-                                     + t.BrokerSeq AS VARCHAR(20)) END
+                                     + t.BrokerSeq AS STRING) END
                  AS PaidBrokerId,
                'SCH-' || CAST((c.GroupKey + s.SplitSeq + t.BrokerSeq
                     + CASE WHEN c.GroupKey % 8 = 1 AND c.CertificateId % 3 = 0
@@ -85,7 +85,7 @@ BUILDER_VIEWS: list[tuple[str, str]] = [
                            ELSE 0 END
                     + CASE WHEN c.GroupKey % 31 = 3 THEN c.CertificateId
                            ELSE 0 END) % 3
-                              AS VARCHAR(20)) AS ScheduleCode,
+                              AS STRING) AS ScheduleCode,
                CASE WHEN c.GroupKey % 23 = 2 THEN 'A '
                     WHEN c.CertificateId % 19 = 6 AND s.SplitSeq = 1 THEN 'I'
                     ELSE 'A' END AS RecStatus,
@@ -96,29 +96,29 @@ BUILDER_VIEWS: list[tuple[str, str]] = [
                  AS Company,
                CASE WHEN c.CertificateId % 10 = 4 THEN ''
                     WHEN c.CertificateId % 10 = 7 THEN 'bad$'
-                    ELSE CAST(50 + c.CertificateId % 500 AS VARCHAR(20))
+                    ELSE CAST(50 + c.CertificateId % 500 AS STRING)
                          || '.25' END AS CertPremium,
                CASE WHEN c.CertificateId % 12 = 5 THEN ''
-                    ELSE 'CUST-' || CAST(c.CertificateId % 97 AS VARCHAR(20))
+                    ELSE 'CUST-' || CAST(c.CertificateId % 97 AS STRING)
                     END AS CustomerId,
-               'Cat' || CAST(c.CertificateId % 5 AS VARCHAR(20))
+               'Cat' || CAST(c.CertificateId % 5 AS STRING)
                  AS ProductCategory,
-               'Master' || CAST(c.CertificateId % 3 AS VARCHAR(20))
+               'Master' || CAST(c.CertificateId % 3 AS STRING)
                  AS ProductMasterCategory
         FROM (SELECT o_orderkey AS CertificateId,
                      CASE WHEN o_custkey % 23 = 7 THEN '00000'
                           WHEN o_custkey % 29 = 11 THEN 'G000'
-                          ELSE 'G' || CAST(o_custkey AS VARCHAR(20)) END
+                          ELSE 'G' || CAST(o_custkey AS STRING) END
                        AS GroupId,
-                     'Group ' || CAST(o_custkey AS VARCHAR(20)) AS GroupName,
+                     'Group ' || CAST(o_custkey AS STRING) AS GroupName,
                      CASE WHEN o_custkey % 31 = 3 THEN DATE '2020-06-15'
                           ELSE CAST(o_orderdate AS DATE) END
                        AS CertEffectiveDate,
                      o_orderpriority AS ProductCode,
                      CASE WHEN o_orderkey % 11 = 0 THEN '*'
-                          ELSE 'PL' || CAST(o_orderkey % 4 AS VARCHAR(20)) END
+                          ELSE 'PL' || CAST(o_orderkey % 4 AS STRING) END
                        AS PlanCode,
-                     'S' || CAST(o_custkey % 50 AS VARCHAR(20)) AS SitusState,
+                     'S' || CAST(o_custkey % 50 AS STRING) AS SitusState,
                      o_custkey AS GroupKey
               FROM (SELECT /*+ REPARTITION(32) */ * FROM orders)
                    orders_spread) c
@@ -131,9 +131,9 @@ BUILDER_VIEWS: list[tuple[str, str]] = [
     (
         "prestage_proposals",
         """
-        SELECT 'PP-' || CAST(c_custkey AS VARCHAR(20)) || '-'
-                 || CAST(n.n AS VARCHAR(20)) AS Id,
-               'G' || CAST(c_custkey AS VARCHAR(20)) AS GroupId,
+        SELECT 'PP-' || CAST(c_custkey AS STRING) || '-'
+                 || CAST(n.n AS STRING) AS Id,
+               'G' || CAST(c_custkey AS STRING) AS GroupId,
                CASE WHEN n.n = 1 THEN DATE '1993-01-01'
                     WHEN n.n = 2 THEN DATE '1995-06-01'
                     ELSE DATE '1997-03-01' END AS EffectiveDateFrom,
@@ -147,13 +147,13 @@ BUILDER_VIEWS: list[tuple[str, str]] = [
                CASE WHEN c_custkey % 7 = 3 AND n.n = 2 THEN CAST(NULL AS INT)
                     ELSE 1993 + n.n END AS DateRangeTo,
                CASE WHEN c_custkey % 4 = 0 AND n.n = 3
-                      THEN md5('CFG' || CAST(c_custkey AS VARCHAR(20)) || 'X')
-                    ELSE md5('CFG' || CAST(c_custkey AS VARCHAR(20))) END
+                      THEN md5('CFG' || CAST(c_custkey AS STRING) || 'X')
+                    ELSE md5('CFG' || CAST(c_custkey AS STRING)) END
                  AS SplitConfigurationMD5,
                CASE WHEN c_custkey % 9 = 4 THEN '*'
                     WHEN c_custkey % 5 = 1 AND n.n = 2 THEN 'B,C'
                     ELSE 'A,B' END AS PlanCodes,
-               'PROD' || CAST(n.n % 2 AS VARCHAR(20)) || ',PRODX' AS ProductCodes
+               'PROD' || CAST(n.n % 2 AS STRING) || ',PRODX' AS ProductCodes
         FROM customer
         CROSS JOIN (SELECT 1 AS n UNION ALL SELECT 2 UNION ALL SELECT 3) n
         WHERE n.n <= 1 + (c_custkey % 3)

@@ -39,11 +39,11 @@ FIXTURE_VIEWS: list[tuple[str, str]] = [
     (
         "stg_premium_transactions",
         """
-        SELECT 'PT-' || CAST(l_orderkey AS VARCHAR(20)) || '-'
-                 || CAST(l_linenumber AS VARCHAR(20)) || '-'
-                 || CAST(l_partkey AS VARCHAR(20)) || '-'
-                 || CAST(l_suppkey AS VARCHAR(20)) || '-'
-                 || CAST(CAST(FLOOR(l_extendedprice) AS BIGINT) AS VARCHAR(20))
+        SELECT 'PT-' || CAST(l_orderkey AS STRING) || '-'
+                 || CAST(l_linenumber AS STRING) || '-'
+                 || CAST(l_partkey AS STRING) || '-'
+                 || CAST(l_suppkey AS STRING) || '-'
+                 || CAST(CAST(FLOOR(l_extendedprice) AS BIGINT) AS STRING)
                AS PremiumTransactionId,
                l_orderkey AS CertificateId,
                CAST(l_shipdate AS DATE) AS TransactionDate,
@@ -56,9 +56,9 @@ FIXTURE_VIEWS: list[tuple[str, str]] = [
     (
         "stg_policies",
         """
-        SELECT CAST(o_orderkey AS VARCHAR(20)) AS PolicyId,
+        SELECT CAST(o_orderkey AS STRING) AS PolicyId,
                o_orderkey AS CertificateId,
-               'G' || CAST(o_custkey AS VARCHAR(20)) AS GroupId,
+               'G' || CAST(o_custkey AS STRING) AS GroupId,
                o_orderpriority AS ProductCode,
                CAST(o_orderdate AS DATE) AS EffectiveDate,
                (o_custkey % 100) + 1 AS GroupSize
@@ -68,8 +68,8 @@ FIXTURE_VIEWS: list[tuple[str, str]] = [
     (
         "stg_proposals",
         """
-        SELECT 'PR-' || CAST(c_custkey AS VARCHAR(20)) AS ProposalId,
-               'G' || CAST(c_custkey AS VARCHAR(20)) AS GroupId,
+        SELECT 'PR-' || CAST(c_custkey AS STRING) AS ProposalId,
+               'G' || CAST(c_custkey AS STRING) AS GroupId,
                c_nationkey AS LeadBrokerId,
                DATE '1992-01-01' AS EffectiveDateFrom,
                CASE WHEN c_custkey % 10 = 9 THEN DATE '1997-01-01' END
@@ -82,7 +82,7 @@ FIXTURE_VIEWS: list[tuple[str, str]] = [
     (
         "stg_premium_split_versions",
         """
-        SELECT 'SV-' || CAST(GroupKey AS VARCHAR(20)) AS SplitVersionId,
+        SELECT 'SV-' || CAST(GroupKey AS STRING) AS SplitVersionId,
                ProposalId,
                1 AS Status,
                EffectiveDateFrom AS EffectiveFrom,
@@ -95,21 +95,21 @@ FIXTURE_VIEWS: list[tuple[str, str]] = [
     (
         "stg_premium_split_participants",
         """
-        SELECT 'SP-' || CAST(GroupKey AS VARCHAR(20)) || '-1' AS SplitParticipantId,
+        SELECT 'SP-' || CAST(GroupKey AS STRING) || '-1' AS SplitParticipantId,
                SplitVersionId,
                1 AS Sequence,
                CAST(CASE WHEN GroupKey % 2 = 0 THEN 60 ELSE 100 END
                     AS DECIMAL(18,4)) AS SplitPercent,
-               'H-' || CAST(GroupKey AS VARCHAR(20)) || '-1' AS HierarchyId,
+               'H-' || CAST(GroupKey AS STRING) || '-1' AS HierarchyId,
                (GroupKey % 25) * 1000 + 1 AS WritingBrokerId,
                GroupKey
         FROM stg_premium_split_versions
         UNION ALL
-        SELECT 'SP-' || CAST(GroupKey AS VARCHAR(20)) || '-2',
+        SELECT 'SP-' || CAST(GroupKey AS STRING) || '-2',
                SplitVersionId,
                2,
                CAST(40 AS DECIMAL(18,4)),
-               'H-' || CAST(GroupKey AS VARCHAR(20)) || '-2',
+               'H-' || CAST(GroupKey AS STRING) || '-2',
                (GroupKey % 25) * 1000 + 2,
                GroupKey
         FROM stg_premium_split_versions
@@ -132,7 +132,7 @@ FIXTURE_VIEWS: list[tuple[str, str]] = [
                'HV-' || HierarchyId AS HierarchyVersionId,
                WritingBrokerId AS EntityId,
                1 AS TierLevel,
-               'SCH-' || CAST(GroupKey % 3 AS VARCHAR(20)) AS ScheduleCode,
+               'SCH-' || CAST(GroupKey % 3 AS STRING) AS ScheduleCode,
                CASE WHEN WritingBrokerId % 5 = 0
                     THEN CAST(7.5 AS DECIMAL(18,4)) END AS ParticipantRate
         FROM stg_premium_split_participants
@@ -141,7 +141,7 @@ FIXTURE_VIEWS: list[tuple[str, str]] = [
                'HV-' || HierarchyId,
                WritingBrokerId + 500000,
                2,
-               'SCH-' || CAST((GroupKey + 1) % 3 AS VARCHAR(20)),
+               'SCH-' || CAST((GroupKey + 1) % 3 AS STRING),
                CAST(NULL AS DECIMAL(18,4))
         FROM stg_premium_split_participants
         WHERE GroupKey % 3 = 0
@@ -150,7 +150,7 @@ FIXTURE_VIEWS: list[tuple[str, str]] = [
     (
         "stg_schedule_rates",
         """
-        SELECT 'SCH-' || CAST(s.n AS VARCHAR(20)) AS ScheduleCode,
+        SELECT 'SCH-' || CAST(s.n AS STRING) AS ScheduleCode,
                p.ProductCode,
                '*' AS State,
                b.GroupSizeFrom,
@@ -177,7 +177,7 @@ FIXTURE_VIEWS: list[tuple[str, str]] = [
     (
         "stg_commission_assignment_versions",
         """
-        SELECT 'AV-' || CAST(EntityId AS VARCHAR(20)) AS AssignmentVersionId,
+        SELECT 'AV-' || CAST(EntityId AS STRING) AS AssignmentVersionId,
                EntityId AS BrokerId,
                '__DEFAULT__' AS ProposalId,
                0 AS Status,

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caching import SessionCache, locked_get, session_cache
+from ..caching import SessionCache, locked_get
 from ..operators.consolidate import consolidate_proposals
 from ..plans import builder
 from ..plans.builder_fixtures import (
@@ -122,19 +122,14 @@ def _per_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     certificate split with canonical tier string + hierarchy hash) —
     the single most expensive shared subplan across builder queries."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    # session_cache keyed on GroupId (r12): the per-split frame's
-    # consumers aggregate and window by GroupId(+CertificateId), so a
-    # GroupId-partitioned checkpoint (whose LogicalRDD REPORTS that
-    # partitioning — see caching.session_cache) lets them run
-    # exchange-free; the r11 plain localCheckpoint surfaced
-    # UnknownPartitioning under AQE and every consumer re-shuffled it
-    # (guide §2.4)
+    # keyed on GroupId by the same rule run_builder uses: the per-split
+    # frame's consumers aggregate and window by GroupId(+CertificateId),
+    # so they run exchange-free over the checkpoint (guide §2.4)
     return locked_get(
         _PER_SPLIT_CACHE,
         key,
-        lambda: session_cache(
-            builder.split_hierarchies(_certs_raw(spark, sf_dir)),
-            key_cols=("GroupId",),
+        lambda: builder.checkpoint_by_group(
+            builder.split_hierarchies(_certs_raw(spark, sf_dir))
         ),
     )
 
@@ -149,16 +144,12 @@ def _criteria(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialization first — the fused build is what a cold
         # builder run takes, and both forms produce identical values
         ps = _PER_SPLIT_CACHE.get(key)
-        # session_cache keyed on GroupId (r12): build_proposals groups
-        # by (GroupId, ConfigHash[, CertificateId]) and the overlap /
-        # mode cascades window by GroupId — all satisfied by a
-        # GroupId-partitioned checkpoint, so the whole builder family
-        # runs its criteria-scale aggregations with no Exchange
-        return session_cache(
-            builder.selection_criteria(
-                _certs_raw(spark, sf_dir), per_split=ps
-            ),
-            key_cols=("GroupId",),
+        # keyed on GroupId: build_proposals groups by (GroupId,
+        # ConfigHash[, CertificateId]) and the overlap / mode cascades
+        # window by GroupId, so the whole builder family runs its
+        # criteria-scale aggregations with no Exchange
+        return builder.checkpoint_by_group(
+            builder.selection_criteria(_certs_raw(spark, sf_dir), per_split=ps)
         )
 
     return locked_get(_CRITERIA_CACHE, key, build)

@@ -18,6 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from apl_commissions_etl_spark.caching import _big_heap
 from apl_commissions_etl_spark.registry import all_queries
 from apl_commissions_etl_spark.session import get_spark
 
@@ -41,10 +42,11 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
     (
         "builder_proposals",
         [],
-        ["CartesianProduct", "BatchEvalPython"],
+        ["CartesianProduct", "BatchEvalPython", "Exchange"],
         "Proposal derivation over the session-cached criteria frame "
-        "(localCheckpoint leaf): hash aggregations with map-side "
-        "partial combine; no Python in the plan.",
+        "(a localCheckpoint leaf hash-partitioned on GroupId): both "
+        "hash aggregations group by keys that start with GroupId, so "
+        "neither shuffles; no Python in the plan.",
     ),
     (
         "join_date_band",
@@ -227,6 +229,15 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
 
 def main() -> None:
     spark = get_spark("plans", shuffle_partitions=8)
+    heap_gib = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory() / (1 << 30)
+    if not _big_heap(spark.range(1)):
+        # small-heap sessions skip the keyed session checkpoints
+        # (caching.session_cache), so their plans show shuffles the
+        # engine's configured sessions never run
+        sys.exit(
+            f"gen_plans: driver heap {heap_gib:.1f} GiB is below the 8 GiB the "
+            "keyed session checkpoints need; set SPARK_DRIVER_MEM>=8g"
+        )
     qs = all_queries()
     sections: list[str] = [
         "# PLANS — flagship physical plans (generated)\n",
@@ -235,6 +246,7 @@ def main() -> None:
         "be regenerated if a plan regresses. Registry-wide invariants\n"
         "(no row-at-a-time Python, no unbroadcast cartesians) are\n"
         "separately enforced by `tests/test_plan_invariants.py`.\n",
+        f"Generated in a session with a {heap_gib:.1f} GiB driver heap.\n",
     ]
     failures: list[str] = []
     for name, must, must_not, note in AUDITS:

@@ -222,6 +222,59 @@ def test_run_builder_entry_point_modes(spark, sf_dir):
     assert h.groupBy("HierarchyEntityId").count().filter("count > 1").count() == 0
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_run_builder_derives_criteria_once(spark, sf_dir):
+    """``F.sha2`` appears only in ``split_hierarchies`` and
+    ``selection_criteria``: when no criteria-derived output (nor a mode
+    cascade over ``out["criteria"]``) plans a ``sha2(``, every one of
+    them reads the checkpoints run_builder materialised instead of
+    re-deriving the two certificate-scale aggregations."""
+    from apl_commissions_etl_spark.plans import builder_modes as modes
+
+    register_builder_views(spark, sf_dir)
+    out = builder.run_builder(spark, spark.table("input_certificate_info"))
+    derived = [k for k in out if k != "broker_assignments"]
+    assert len(derived) == 7
+    for name in derived:
+        assert "sha2(" not in _executed_plan(out[name]), name
+    cascade = modes.mode_cascade(out["criteria"])
+    for name in ("remainder", "nc_certs"):
+        assert "sha2(" not in _executed_plan(cascade[name]), name
+
+
+def test_run_builder_proposals_plan_without_shuffle(spark, sf_dir):
+    """The criteria checkpoint is hash-partitioned on GroupId, and
+    build_proposals groups by (GroupId, ConfigHash[, CertificateId]),
+    so the proposals aggregate without an Exchange."""
+    from apl_commissions_etl_spark.caching import _big_heap
+
+    if not _big_heap(spark.range(1)):
+        pytest.skip(
+            "keyed session_cache layout requires a >=8GiB driver heap "
+            "(small-heap sessions deliberately fall back to the plain "
+            "checkpoint — run with SPARK_DRIVER_MEM>=8g)"
+        )
+    register_builder_views(spark, sf_dir)
+    out = builder.run_builder(spark, spark.table("input_certificate_info"))
+    assert _executed_plan(out["proposals"]).count("Exchange hashpartitioning") == 0
+
+
+def test_run_builder_dry_run_starts_no_job(spark, sf_dir):
+    register_builder_views(spark, sf_dir)
+    certs = spark.table("input_certificate_info")
+    sc = spark.sparkContext
+    sc.setJobGroup("builder-dry-run", "run_builder dry run")
+    try:
+        builder.run_builder(spark, certs, dry_run=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("builder-dry-run")) == []
+
+
 def test_mode_split_configs_one_group_per_proposal(spark, sf_dir):
     """mode_prestage_split_configs groups by (GroupId, ProposalId) where
     the reference groups by ProposalId alone. The two agree only while

@@ -67,3 +67,26 @@ def test_sql_over_base_table_and_reporting_view(spark, capsys):
                  "WHERE TotalEarnedCommission > 0",
                  "--sf-dir", SF]) == 0
     assert "brokers" in capsys.readouterr().out
+
+
+BUILDER_OUTPUTS = {
+    "criteria", "pha", "proposals", "proposals_fixed", "split_versions",
+    "hierarchies", "key_mappings", "broker_assignments",
+}
+
+
+def test_build_proposals_writes_outputs(spark, tmp_path, capsys):
+    from apl_commissions_etl_spark.registry import all_queries
+
+    out = tmp_path / "proposals"
+    assert main(["build-proposals", "--out", str(out), "--sf-dir", SF]) == 0
+    assert {p.name for p in out.iterdir()} == BUILDER_OUTPUTS
+    want = all_queries()["builder_proposals"].spark_fn(spark, SF).count()
+    assert spark.read.parquet(str(out / "proposals")).count() == want
+
+
+def test_build_proposals_dry_run_writes_nothing(spark, tmp_path, capsys):
+    out = tmp_path / "proposals"
+    assert main(["build-proposals", "--out", str(out), "--sf-dir", SF,
+                 "--dry-run"]) == 0
+    assert not out.exists()
