@@ -14,9 +14,11 @@ incomplete step. Here:
       (the materialization contract of every reference transform,
       S8/S11: TRUNCATE-and-reload == overwrite);
     - a JSON-lines manifest records step status + row count + wall
-      time; resume skips stages whose manifest row says 'completed'
-      AND whose output exists — the same double-check the reference
-      does against state tables;
+      time; the row count is observed on the write itself (a
+      ``count(1)`` Observation), so recording it costs no second
+      scan of the written parquet; resume skips stages whose manifest
+      row says 'completed' AND whose output exists — the same
+      double-check the reference does against state tables;
     - failures record 'failed' and re-raise; a later run re-executes
       from the failed stage (earlier outputs are reused, not rebuilt);
     - dry_run explains every stage instead of writing (ref --dry-run,
@@ -40,7 +42,8 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 StageFn = Callable[[SparkSession, "PipelineContext"], DataFrame]
 
@@ -141,8 +144,10 @@ class Pipeline:
                     df.explain("formatted")
                     rows = None
                 else:
+                    obs = Observation()
+                    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
                     df.write.mode("overwrite").parquet(ctx.stage_path(name))
-                    rows = spark.read.parquet(ctx.stage_path(name)).count()
+                    rows = obs.get["rows"]
             except Exception as e:
                 self._append_manifest(
                     root,

@@ -17,6 +17,22 @@ local[N]):
 - UTC session timezone: date arithmetic must not depend on the host.
 - shuffle.partitions is a knob: ~2-3x total cores locally; on a real
   cluster leave AQE to coalesce from a high initial number.
+- One C2 JIT thread in the driver (``-XX:CICompilerCount=2``: one C1
+  and one C2 compiler thread, what HotSpot picks by itself on hosts
+  with up to 3 CPUs). Each entry point is a batch job in a fresh
+  process, and most of what the driver runs is plan analysis and
+  code generation that runs too briefly to repay C2 compilation: on
+  a 4-CPU host (3 compiler threads by default) the compiler threads
+  used 100 of the JVM's 172 CPU seconds in one perfbench
+  ``increment_then_close`` run, twice the driver threads and the
+  tasks together (``scripts/jvm_thread_cpu.py``).
+  With one C2 thread the tiered policy raises the C2 thresholds
+  while its queue is long, so only the hottest methods reach C2. On
+  20x that input (the sf0.1 period close, cold and then warm, 3
+  fresh-process pairs) neither wall nor CPU time got worse. Dropping
+  C2 altogether (C1 only) cut small runs' CPU by ~45% but made the
+  warm sf0.1 close ~60% slower. Executors are left alone: on a
+  cluster they run the generated per-row code that C2 pays off on.
 """
 
 from __future__ import annotations
@@ -73,6 +89,7 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(),
         )
+        .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -77,6 +77,40 @@ def test_limit_and_dry_run(spark, tmp_path):
     assert not (tmp_path / "dry" / "a" / "_SUCCESS").exists()
 
 
+def _jobs_in_group(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_rows_observed_on_the_write(spark, tmp_path):
+    """The manifest's row count costs no job beyond the write itself."""
+    def frame(s, ctx=None):
+        return _mk(s, 50).filter(F.col("id") % 3 == 0)
+
+    plain = _jobs_in_group(
+        spark, "plain-write",
+        lambda: frame(spark).write.mode("overwrite").parquet(str(tmp_path / "plain")),
+    )
+    p = Pipeline("t")
+    p.add("a", frame)
+    root = str(tmp_path / "out")
+    results = []
+    staged = _jobs_in_group(
+        spark, "pipeline-write", lambda: results.extend(p.run(spark, root))
+    )
+    assert 0 < staged <= plain
+    written = spark.read.parquet(str(tmp_path / "out" / "a")).count()
+    assert results[0].rows == written == 17
+    manifest = [json.loads(line) for line in open(tmp_path / "out" / "_manifest.jsonl")]
+    assert manifest[-1]["rows"] == written
+
+
 def test_domain_pipeline_end_to_end(spark, sf_dir, tmp_path):
     p = domain_pipeline(sf_dir)
     results = p.run(spark, str(tmp_path / "domain"))
