@@ -20,7 +20,7 @@ local[N]):
 - One C2 JIT thread in the driver (``-XX:CICompilerCount=2``: one C1
   and one C2 compiler thread, what HotSpot picks by itself on hosts
   with up to 3 CPUs). Each entry point is a batch job in a fresh
-  process, and most of what the driver runs is plan analysis and
+  process, and most of the Spark driver JVM's work is plan analysis and
   code generation that runs too briefly to repay C2 compilation: on
   a 4-CPU host (3 compiler threads by default) the compiler threads
   used 100 of the JVM's 172 CPU seconds in one perfbench
