@@ -7,8 +7,7 @@ Layout:
     functions/  -- scalar/cleaning/hashing/text expression helpers
     sources/    -- readers (csv header-sniff, testdata parquet) and sinks
     operators/  -- reusable relational operators (as-of joins, skew
-                   salting, consolidation fold, exports, signature
-                   dedup, multimodal codecs)
+                   salting, consolidation fold, exports, media codecs)
     plans/      -- the domain pipeline: prep -> dims -> calc -> outputs
     streaming/  -- Structured Streaming surface over the events table
 """

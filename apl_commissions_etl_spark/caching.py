@@ -1,7 +1,7 @@
 """Session-scoped memoization with per-key locking.
 
 The query modules keep module-level caches of expensive shared frames
-(calc staging cascade, builder criteria, dhash index...), and
+(calc staging cascade, builder criteria, dimension frames...), and
 any two threads of one session may reach the same accessor at once.
 A bare ``if key not in cache: cache[key] = build()`` is
 check-then-act: two threads can both miss and double-build — at

@@ -165,48 +165,3 @@ def overwrite_partitions(df: DataFrame, path: str, part_col: str) -> None:
         .mode("overwrite")
         .parquet(path)
     )
-
-
-def compact_small_files(
-    spark, path: str, target_files_per_partition: int = 1,
-    part_col: str | None = None,
-) -> dict[str, int]:
-    """Small-file compaction: read a parquet dataset back and rewrite
-    it with a bounded file count. Long-running ingestion (streaming
-    sinks, per-batch appends) accumulates tiny files; at scale the
-    NameNode/listing cost and per-file task overhead dominate reads,
-    so periodic compaction is part of the sink contract.
-
-    Returns {"files_before": n, "files_after": m} so callers (and
-    tests) can assert the rewrite actually consolidated. Partitioned
-    datasets compact per partition (coalesce within, layout
-    preserved); unpartitioned ones compact globally."""
-    import glob as _glob
-    import os as _os
-
-    def _count(p: str) -> int:
-        return len(
-            [
-                f
-                for f in _glob.glob(_os.path.join(p, "**", "*.parquet"), recursive=True)
-                if _os.path.isfile(f)
-            ]
-        )
-
-    before = _count(path)
-    df = spark.read.parquet(path)
-    if part_col:
-        compacted = df.repartition(target_files_per_partition, F.col(part_col))
-        writer = compacted.write.partitionBy(part_col)
-    else:
-        compacted = df.coalesce(target_files_per_partition)
-        writer = compacted.write
-    tmp = path.rstrip("/") + "__compacted"
-    writer.mode("overwrite").parquet(tmp)
-    # atomic-ish swap (local/test path; object stores swap via manifest
-    # or table-format commit instead)
-    import shutil as _shutil
-
-    _shutil.rmtree(path)
-    _os.rename(tmp, path)
-    return {"files_before": before, "files_after": _count(path)}

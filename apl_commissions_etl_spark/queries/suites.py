@@ -263,21 +263,6 @@ SUITE_DEFS: dict[str, tuple[str, tuple[str, ...]]] = {
             "export_blob_staged",
         ),
     ),
-    "llmdata_extras_suite": (
-        "north-star multimodal operators beyond the dedicated slots: "
-        "PNG roundtrip / decode / resize plan, BMP+WAV codec "
-        "roundtrip, frame sampling, and perceptual-hash image dedup "
-        "(hash equality and banded Hamming clusters)",
-        (
-            "multimodal_png_roundtrip",
-            "multimodal_decode",
-            "multimodal_codec_roundtrip",
-            "multimodal_frame_sample",
-            "multimodal_image_dedup_dhash",
-            "multimodal_image_dedup_hamming",
-            "multimodal_resize_plan",
-        ),
-    ),
     "incremental_parity_suite": (
         "north-star incremental-maintenance family, every grain, each "
         "sub PROVEN equal to its full rebuild by a verbatim full-"

@@ -104,9 +104,9 @@ def query(name: str, oracle: str | None = None, survey_ref: str = ""):
 #: head of the registry to the set that covers every SURVEY.md §2
 #: operator family at least once — family "suite" queries (see
 #: ``queries/suites.py``) compress whole families into one checkable
-#: result so the budget stretches across all of §2.1-§2.13 plus the
-#: multimodal north-star operators.  Everything not listed keeps its
-#: module registration order after the prioritized head.
+#: result so the budget stretches across all of §2.1-§2.13.  Everything
+#: not listed keeps its module registration order after the prioritized
+#: head.
 DRIVER_PRIORITY: tuple[str, ...] = (
     # §2.4 aggregation family (A1-A12; the three r2-era dedicated agg
     # slots — agg_conditional / agg_conformance_banding /
@@ -179,17 +179,17 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # caches): the selection criteria and the mode key mappings
     "builder_selection_criteria",
     "builder_mode_key_mappings",
-    # (the freed LLM-data, corpus-prep and ANN slots are re-pinned with
-    # commissions queries in place, so every slot around them sees the
-    # same session state: the table-maintenance time-travel read, the
-    # S10 keyed MERGE sync (also an export_entities_suite sub), the
-    # S5 zip-prefix ingest summary (also a prep_patterns_suite sub)
-    # and the A3 conditional aggregation (also an agg_patterns_suite
-    # sub))
+    # (the freed LLM-data, corpus-prep, ANN and multimodal slots are
+    # re-pinned with commissions queries in place, so every slot around
+    # them sees the same session state: the table-maintenance
+    # time-travel read, the S10 keyed MERGE sync (also an
+    # export_entities_suite sub), the builder's proposal output (shares
+    # the caches of the builder slots above), the S5 zip-prefix ingest
+    # summary (also a prep_patterns_suite sub) and the A3 conditional
+    # aggregation (also an agg_patterns_suite sub))
     "sink_time_travel_parity",
     "export_merge_upsert",
-    # the last LLM-data slot: multimodal codecs and image dedup
-    "llmdata_extras_suite",
+    "builder_proposals",
     "ingest_zip_prefix_summary",
     "agg_conditional",
     # §2.12 reporting layer + §2.13 sequence analytics
@@ -210,11 +210,8 @@ DRIVER_PRIORITY: tuple[str, ...] = (
 
 #: Rotation plan if driver slots free up (or the prefix grows): the
 #: next queries to pin are currently driver-"local" only — each
-#: already passes the full local sweep + vanilla rehearsal.
-#:   0. builder_proposals (the builder's proposal output; replaces
-#:                         llmdata_extras_suite when the multimodal
-#:                         family is deleted, and shares the caches of
-#:                         the builder slots above)
+#: already passes the full local sweep + vanilla rehearsal.  None is
+#: queued: the last candidate, builder_proposals, is pinned above.
 #: (The r7/r8 incremental-family candidates — builder_incremental_*,
 #: calc_incremental_*_parity, stream_incremental_* — were pinned in r9
 #: via incremental_parity_suite above.)
@@ -248,7 +245,6 @@ def all_queries() -> dict[str, Query]:
         exports,
         ingest,
         joins,
-        llmdata,
         policies,
         reporting,
         reporting_brokers,

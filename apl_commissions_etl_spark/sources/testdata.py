@@ -1,9 +1,9 @@
 """Loaders for the driver-generated parquet tables.
 
-TPC-H-ish star schema + events/documents/embeddings
-(see /root/repo/TESTDATA.md). These are the generic-operator test
-inputs; the domain pipeline has its own fixture builders in
-``plans/fixtures.py``.
+TPC-H-ish star schema + events/documents (see TESTDATA.md; the
+generated set's ``embeddings`` table has no reader and is not loaded).
+These are the generic-operator test inputs; the domain pipeline has its
+own fixture builders in ``plans/fixtures.py``.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ TABLES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -75,7 +74,10 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
 #: every query pays it at build time (r13 profile, guide §5 "the
 #: driver should do almost no data work").  Reusing the immutable
 #: handle removes that per-call tax; the scan itself still executes in
-#: full inside every consuming query.
+#: full inside every consuming query.  A process has one live
+#: SparkContext, so ``load_table`` drops every other application's
+#: entries (here and in _SPLIT_COUNTS) when it adds one: a process that
+#: stops and restarts Spark holds no dead session's handles.
 _TABLE_FRAMES: dict = {}
 _TABLE_FRAMES_LOCK = threading.Lock()
 
@@ -108,6 +110,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = _read_table(spark, sf_dir, name)
     if key is not None:
         with _TABLE_FRAMES_LOCK:
+            for m in (_TABLE_FRAMES, _SPLIT_COUNTS):
+                for k in [k for k in m if k[0] != key[0]]:
+                    del m[k]
             df = _TABLE_FRAMES.setdefault(key, df)
     return df
 

@@ -18,8 +18,8 @@ ttlDurationMs=...)``), but its state protocol needs ``google.protobuf``,
 which this runtime does not ship — the timeout-based form below is the
 dependency-free equivalent and checkpoints/restores identically.
 
-Reference twin: the batch fingerprint index of
-``operators/incremental.py`` — this is its always-on form.
+Batch twin: the ``stream_dedup_ttl`` query's gaps-and-islands window
+(``queries/streamops.py``) — this is its always-on form.
 """
 
 from __future__ import annotations

@@ -91,15 +91,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "full sorts of the fact at scale).",
     ),
     (
-        "multimodal_codec_roundtrip",
-        ["MapInPandas"],
-        ["CartesianProduct", "BatchEvalPython", "Exchange"],
-        "Real BMP/WAV codec boundary: two Arrow-batched mapInPandas "
-        "stages (encode, decode) fused into one shuffle-free pipeline "
-        "over the document scan — the shape a 100 TB media "
-        "decode/feature pass must have (pure map, no exchange).",
-    ),
-    (
         "mode_cascade (finest routing aggregation)",
         ["BroadcastHashJoin"],
         ["SortMergeJoin", "CartesianProduct", "BatchEvalPython"],
@@ -128,27 +119,6 @@ AUDITS: list[tuple[str, list[str], list[str], str]] = [
         "one key-scale join; the broadcast side-total frames appear as "
         "single-row nested-loop joins (cost-free), and the fact-scale "
         "join being estimated never executes.",
-    ),
-    (
-        "multimodal_image_dedup_dhash (un-persisted decode+hash)",
-        ["MapInPandas"],
-        ["CartesianProduct", "BatchEvalPython", "Exchange"],
-        "The perceptual-hash ingest pass as it runs COLD (in steady "
-        "state the session checkpoint truncates this to a stored-hash "
-        "scan — the 'hash computed once at ingest' shape): PNG decode "
-        "+ 65 block sums + 64 compare bits in ONE sanctioned Arrow "
-        "mapInPandas stage over the document scan — pure map, no "
-        "exchange anywhere before the hash is stored.",
-    ),
-    (
-        "multimodal_image_dedup_hamming (banded pair join)",
-        ["HashJoin"],
-        ["CartesianProduct", "BatchEvalPython", "MapInPandas"],
-        "The banded Hamming candidate join over DISTINCT stored "
-        "hashes (the component labeling above it is iterative and "
-        "checkpointed per round): band explosion, hot-bucket guard, "
-        "band-key equality self-join, integer bit_count verify — all "
-        "JVM-side hash joins; no all-pairs comparison in the plan.",
     ),
     (
         "pipeline_incremental_parity",
@@ -265,22 +235,6 @@ def main() -> None:
             from apl_commissions_etl_spark.queries.builder import _criteria
 
             df = modes.finest_configs(_criteria(spark, SF))
-        elif name.startswith("multimodal_image_dedup_dhash"):
-            from apl_commissions_etl_spark.operators import multimodal
-            from apl_commissions_etl_spark.sources.testdata import load_table
-
-            d = load_table(spark, SF, "documents")
-            df = multimodal.dhash_features(
-                multimodal.attach_png_payload(d, "doc_id", "text"), "doc_id"
-            )
-        elif name.startswith("multimodal_image_dedup_hamming"):
-            from apl_commissions_etl_spark.operators import dedup as dd
-            from apl_commissions_etl_spark.queries.llmdata import _dhash_feats
-
-            hs = _dhash_feats(spark, SF).select("dhash").distinct()
-            df = dd.hamming_banded_pairs(
-                hs, "dhash", bits=64, bands=4, max_hamming=3, max_bucket=20
-            )
         else:
             df = qs[name].spark_fn(spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()

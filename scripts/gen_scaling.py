@@ -59,8 +59,8 @@ cold plan shapes for exactly those flagships.
 
 
 #: headline set: the heavy operator classes (scan-agg, shuffle join,
-#: window, domain calc, builder, consolidation, export, dedup,
-#: multimodal, audit) without running every registry entry
+#: window, domain calc, builder, consolidation, export, dedup, audit)
+#: without running every registry entry
 HEADLINE = [
     "agg_pricing_summary",
     "agg_group_stats",
@@ -77,9 +77,6 @@ HEADLINE = [
     "join_rate_fallback",
     "win_dedup_keep_latest",
     "cdc_apply_changelog",
-    "multimodal_codec_roundtrip",
-    "multimodal_image_dedup_dhash",
-    "multimodal_image_dedup_hamming",
     "stream_session_window",
     "seq_asof_attribution",
     "win_sessionize",

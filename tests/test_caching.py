@@ -1,8 +1,8 @@
 """caching.locked_get: the per-key locked memoization every session
 cache accessor routes through (threads of one session may reach
 one accessor at once, so double-build races must be structurally
-impossible), plus the table-
-handle split-count memo."""
+impossible), plus the table-handle and split-count memos of
+sources.testdata."""
 
 from __future__ import annotations
 
@@ -274,3 +274,30 @@ def test_split_count_served_only_for_the_frame_it_was_measured_on(
     finally:
         testdata._SPLIT_COUNTS.pop(id(other), None)
         testdata._SPLIT_COUNTS.pop(key, None)
+
+
+def test_load_table_drops_entries_of_other_applications(spark, sf_dir):
+    """A process has one live SparkContext: when load_table adds a
+    handle it drops every entry that another (stopped) application left
+    in the handle and split-count maps, and keeps the current ones."""
+    app = spark.sparkContext.applicationId
+    nation = testdata.load_table(spark, sf_dir, "nation")
+    testdata.spread(nation)  # memoises nation's split count
+    added = (app, sf_dir, "region")
+    stale = ("app-stopped-0000", sf_dir, "nation")
+    with testdata._TABLE_FRAMES_LOCK:
+        testdata._TABLE_FRAMES.pop(added, None)
+        testdata._SPLIT_COUNTS.pop(added, None)
+        current_frames = set(testdata._TABLE_FRAMES)
+        current_counts = set(testdata._SPLIT_COUNTS)
+        testdata._TABLE_FRAMES[stale] = nation
+        testdata._SPLIT_COUNTS[stale] = 1
+    assert (app, sf_dir, "nation") in current_counts
+
+    region = testdata.load_table(spark, sf_dir, "region")
+
+    assert stale not in testdata._TABLE_FRAMES
+    assert stale not in testdata._SPLIT_COUNTS
+    assert current_frames <= set(testdata._TABLE_FRAMES)
+    assert current_counts <= set(testdata._SPLIT_COUNTS)
+    assert testdata._TABLE_FRAMES[added] is region

@@ -82,17 +82,3 @@ def test_overwrite_partitions_touches_only_present_parts(spark, tmp_path):
         (r.id, r.v, r.part) for r in spark.read.parquet(path).collect()
     }
     assert got == {(1, "a2", "p1"), (3, "c", "p2"), (4, "d", "p3")}
-
-
-def test_compact_small_files(spark, tmp_path):
-    from apl_commissions_etl_spark.operators.export import compact_small_files
-
-    path = str(tmp_path / "frag")
-    df = spark.range(1000).withColumn("v", F.col("id") * 2)
-    df.repartition(16).write.parquet(path)
-    stats = compact_small_files(spark, path, target_files_per_partition=1)
-    assert stats["files_before"] >= 16
-    assert stats["files_after"] == 1
-    back = spark.read.parquet(path)
-    assert back.count() == 1000
-    assert back.agg(F.sum("v")).collect()[0][0] == 999 * 1000

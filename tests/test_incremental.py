@@ -1,58 +1,10 @@
-"""Incremental aggregate maintenance == full recompute, on a real
-table split into history + delta batches."""
+"""Incremental maintenance of the builder, calc, consolidation and
+period-close outputs == their full rebuilds, plus strictness checks that
+each delta batch really replaces stale baseline rows."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from apl_commissions_etl_spark.operators.incremental import (
-    merge_partial_aggregates,
-    partial_aggregate,
-)
-from apl_commissions_etl_spark.sources.testdata import load_table
-
-SPECS = {
-    "n": ("o_orderkey", "count"),
-    "total": ("dec_price", "sum"),
-    "first_dt": ("o_orderdate", "min"),
-    "last_dt": ("o_orderdate", "max"),
-}
-
-
-def _rows(df):
-    return {
-        r.o_custkey: (r.n, r.total, r.first_dt, r.last_dt)
-        for r in df.collect()
-    }
-
-
-def test_incremental_merge_equals_full_recompute(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders").withColumn(
-        "dec_price", F.col("o_totalprice").cast("decimal(18,2)")
-    )
-    history = o.filter(F.col("o_orderkey") % 5 != 0)
-    delta = o.filter(F.col("o_orderkey") % 5 == 0)
-
-    full = partial_aggregate(o, ["o_custkey"], SPECS)
-    merged = merge_partial_aggregates(
-        partial_aggregate(history, ["o_custkey"], SPECS),
-        partial_aggregate(delta, ["o_custkey"], SPECS),
-        ["o_custkey"],
-        SPECS,
-    )
-    assert _rows(full) == _rows(merged)
-
-    # three-way: a second delta merges onto the already-merged state
-    d1 = o.filter(F.col("o_orderkey") % 5 == 1)
-    rest = o.filter(~F.col("o_orderkey").isin([]) & (F.col("o_orderkey") % 5 > 1))
-    base = partial_aggregate(o.filter(F.col("o_orderkey") % 5 == 0), ["o_custkey"], SPECS)
-    step1 = merge_partial_aggregates(
-        base, partial_aggregate(d1, ["o_custkey"], SPECS), ["o_custkey"], SPECS
-    )
-    step2 = merge_partial_aggregates(
-        step1, partial_aggregate(rest, ["o_custkey"], SPECS), ["o_custkey"], SPECS
-    )
-    assert _rows(full) == _rows(step2)
 
 
 def test_builder_incremental_replaces_stale_amended_rows(spark, sf_dir):

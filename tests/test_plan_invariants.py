@@ -19,20 +19,12 @@ from __future__ import annotations
 from apl_commissions_etl_spark.registry import all_queries
 
 #: queries allowed to run Python batch stages (Arrow mapInPandas /
-#: applyInPandas): the ordered consolidation fold and the multimodal
-#: codec boundary (decode feeds the resize geometry). Everything else
+#: applyInPandas): only the ordered consolidation fold. Everything else
 #: must stay JVM-side.
 PANDAS_OK = {
     "consolidate_proposals",
     # same sanctioned sorted-fold stage, over the touched groups only
     "consolidate_incremental_parity",
-    "multimodal_decode",
-    "multimodal_codec_roundtrip",
-    "multimodal_png_roundtrip",
-    "multimodal_frame_sample",
-    "multimodal_resize_plan",
-    "multimodal_image_dedup_dhash",
-    "multimodal_image_dedup_hamming",
 }
 
 # a family suite UNIONs the plans of its sub-queries, so it inherits
